@@ -489,11 +489,13 @@ object Bench {
     val failedList = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total2Json = total2.map(t => f""","total_sf2":$t%.3f""").getOrElse("")
     val total3Json = total3.map(t => f""","total_sf3":$t%.3f""").getOrElse("")
-    println(
-      f"""{"metric":"summary","value":$total%.3f,"unit":"sec","total":$total%.3f$total2Json$total3Json,"n":${results.length},"failed":$failedList,"reps":$reps,"sf":"$sfDir","full":"$outPath"}""")
     // release the per-(session, corpus) memos - the bench touched
-    // multiple corpora and nothing should stay pinned
+    // multiple corpora and nothing should stay pinned - and stop the
+    // session BEFORE the summary, so shutdown output cannot bury it:
+    // the summary must be the run's last line
     releaseMemos(spark)
     spark.stop()
+    println(
+      f"""{"metric":"summary","value":$total%.3f,"unit":"sec","total":$total%.3f$total2Json$total3Json,"n":${results.length},"failed":$failedList,"reps":$reps,"sf":"$sfDir","full":"$outPath"}""")
   }
 }

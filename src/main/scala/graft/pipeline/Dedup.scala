@@ -1453,11 +1453,13 @@ object Dedup {
       // node's id), so lbl(lbl(x)) is a lookup join against the same
       // round's relation; lbl(y) <= y makes least() pure safety.
       // The LOOKUP side is FRONTIER-RESTRICTED to this round's
-      // post-propagation changes: a target whose label did not change
-      // this round was already jumped through the last time it did,
-      // so the full-relation self-join (the last O(V)-per-round
-      // shuffle in this fixpoint) buys nothing the changed subset
-      // doesn't. Soundness is unconditional - the jump is a pure
+      // post-propagation changes, which drops the full-relation
+      // self-join (the last O(V)-per-round shuffle in this fixpoint).
+      // The restriction gives up the jump's O(log d) round bound: a
+      // target whose label improved only by jumping never enters a
+      // later round's lookup side, so the nodes pointing at it
+      // converge by propagation alone, one hop per round, within
+      // `maxRounds`. Soundness is unconditional - the jump is a pure
       // accelerator (least() with values already in the relation,
       // monotone decreasing), and the propagation step alone covers
       // every edge, so any improvement a restricted jump misses is
@@ -1482,8 +1484,8 @@ object Dedup {
       // rebase the next round on a LogicalRDD leaf over the persisted
       // rows: the round's plan references `labels` three times (prop +
       // both sides of the jump), so carrying the logical lineage
-      // forward doubles the plan tree per round - at O(log d) rounds
-      // the EXPLAIN string alone OOMs long before execution does.
+      // forward doubles the plan tree per round - within a few dozen
+      // rounds the EXPLAIN string alone OOMs long before execution does.
       // InternalRow end to end; reads come from the cached relation.
       val rebased = org.apache.spark.sql.GraftBridge.ofInternalRows(
         spark, jumped.queryExecution.toRdd, jumped.schema)

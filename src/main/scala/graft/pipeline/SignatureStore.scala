@@ -1,7 +1,8 @@
 package graft.pipeline
 
+import graft.analytics.Sketches
 import graft.core.Graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{col, collect_list, collect_set, count, explode, expr, lag, lit, max, min, pmod, size, struct, substring, sum, when}
 
@@ -50,6 +51,10 @@ object SignatureStore {
       bandExprs(shingles(s, dir)).persist()
     })
 
+  private val tierCache = new java.util.concurrent.ConcurrentHashMap[
+    (SparkSession, String, String),
+    java.util.concurrent.CompletableFuture[DataFrame]]()
+
   /** Generic session-shared materialized pipeline tier, the same
     * discipline as `shingles`/`bands` extended UP the dedup pipeline:
     * the LSH candidate pairs, the Jaccard-verified edges, the exact
@@ -63,15 +68,6 @@ object SignatureStore {
     * Determinism: every tier is a deterministic relation of the
     * corpus, so consumers see bit-identical inputs either way.
     */
-  private val tierCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
-
-  // Builds run OUTSIDE the map's compute lock: tiers build on top of
-  // other tiers (verifiedPairs -> candPairs -> bands), and a nested
-  // computeIfAbsent on one ConcurrentHashMap throws "Recursive update"
-  // whenever the two keys land in the same bin. get-then-putIfAbsent
-  // tolerates the (single-threaded in practice) duplicate-build race
-  // by releasing the loser.
   def tier(spark: SparkSession, sfDir: String, id: String)
           (build: => DataFrame): DataFrame =
     tierGet(spark, sfDir, id)(build.localCheckpoint())
@@ -84,17 +80,36 @@ object SignatureStore {
              (build: => DataFrame): DataFrame =
     tierGet(spark, sfDir, id)(build)
 
+  /** At most one build per key: the first caller claims the key by
+    * inserting its own future with `putIfAbsent`, and every later or
+    * concurrent caller waits on that future. The build itself runs
+    * OUTSIDE any map lock, because tiers build on other tiers
+    * (verifiedPairs -> candPairs -> bands) and a nested
+    * `computeIfAbsent` on one ConcurrentHashMap throws "Recursive
+    * update" whenever the two keys land in the same bin. A failed build
+    * removes its entry, so the next caller retries; callers already
+    * waiting on it see the failure.
+    */
   private def tierGet(spark: SparkSession, sfDir: String, id: String)
                      (build: => DataFrame): DataFrame = {
     val k = (spark, sfDir, id)
-    val existing = tierCache.get(k)
-    if (existing != null) return existing
-    val built = build
-    val prev = tierCache.putIfAbsent(k, built)
+    val mine = new java.util.concurrent.CompletableFuture[DataFrame]()
+    val prev = tierCache.putIfAbsent(k, mine)
     if (prev != null) {
-      org.apache.spark.sql.GraftBridge.unpersistMaterialized(built)
-      prev
-    } else built
+      try prev.join()
+      catch { case e: java.util.concurrent.CompletionException =>
+        throw e.getCause }
+    } else {
+      try {
+        val built = build
+        mine.complete(built)
+        built
+      } catch { case t: Throwable =>
+        tierCache.remove(k, mine)
+        mine.completeExceptionally(t)
+        throw t
+      }
+    }
   }
 
   def release(spark: SparkSession, sfDir: String): Unit = {
@@ -106,8 +121,12 @@ object SignatureStore {
     tierCache.keySet.asScala
       .filter(k => (k._1 eq spark) && k._2 == sfDir).toSeq
       .foreach { k =>
-        Option(tierCache.remove(k)).foreach(
-          org.apache.spark.sql.GraftBridge.unpersistMaterialized)
+        // an in-flight build is dropped from the map but left to its
+        // builder: only a completed tier has a relation to unpersist
+        Option(tierCache.remove(k))
+          .filter(f => f.isDone && !f.isCompletedExceptionally)
+          .foreach(f => org.apache.spark.sql.GraftBridge
+            .unpersistMaterialized(f.join()))
       }
   }
 
@@ -122,21 +141,6 @@ object SignatureStore {
 
   // ---- incremental maintenance (append-only corpus) ------------------
 
-  /** Catch up the persistent signature store with whatever parquet
-    * files appeared in `watchDir` since the last call: a Structured
-    * Streaming file source over the corpus directory, whose
-    * processed-file log (in the store's checkpoint) is the increment
-    * tracker, with foreachBatch appending each NEW file's shingle and
-    * band relations to the store. Signatures are pure per-document
-    * functions, so the per-batch append is exact - documents already
-    * in the store are never re-read, re-tokenized or re-hashed, which
-    * at 100 TB is the difference between touching today's arrivals and
-    * re-scanning the corpus. Restart-safe: each batch lands in its own
-    * `batch=<id>` partition with overwrite, so a replay after a crash
-    * between the checkpoint commit and the writes rewrites the same
-    * partition instead of appending duplicates - the idempotent-sink
-    * half of foreachBatch's exactly-once contract.
-    */
   /** True iff `dir` holds at least one parquet file (recursively) -
     * the guard that keeps an incremental maintenance poll on a
     * not-yet-populated corpus directory a no-op instead of a schema-
@@ -162,37 +166,73 @@ object SignatureStore {
     }
   }
 
-  def catchUp(spark: SparkSession, watchDir: String,
-              storeDir: String): Unit = {
+  /** The writer `maintain` hands each micro-batch: `put(df, rel)` lands
+    * `df` as `$storeDir/$rel/batch=$id`, the one store write.
+    */
+  private final class Put(storeDir: String, val id: Long) {
+    def path(rel: String): String = s"$storeDir/$rel/batch=$id"
+    def apply(df: DataFrame, rel: String): Unit =
+      df.write.mode("overwrite").parquet(path(rel))
+  }
+
+  /** Catch the store at `storeDir` up with whatever `glob` files
+    * appeared in `watchDir` since the last call - the one streaming
+    * skeleton behind every `catchUp*`/`admit*` face. A Structured
+    * Streaming file source over the watch dir is the increment
+    * tracker: its processed-file log lives in `$storeDir/_checkpoint`,
+    * so each call reads only NEW files, as one `AvailableNow` run, and
+    * `perBatch` turns each micro-batch into store relations through
+    * `put`. An empty or missing watch dir is a no-op.
+    *
+    * Exactly-once: `put` overwrites the batch's own `batch=<id>`
+    * partition. A crash after a batch's writes but before its commit
+    * marker makes the restarted stream re-run that batch id over the
+    * same recorded files, and the overwrite replaces the partial or
+    * complete first attempt instead of appending a duplicate - the
+    * idempotent-sink half of foreachBatch's exactly-once contract; the
+    * checkpoint's offset log is the replay half. `perBatch` must
+    * therefore be a deterministic function of the batch and of what
+    * earlier batches stored.
+    */
+  private def maintain(spark: SparkSession, watchDir: String,
+                       storeDir: String, glob: String = "*.parquet")
+                      (perBatch: (DataFrame, Put) => Unit): Unit = {
     Graft.ensureConf(spark)
     if (!hasParquet(spark, watchDir)) return // nothing has arrived yet
-    val schema = spark.read.option("pathGlobFilter", "*.parquet")
+    val schema = spark.read.option("pathGlobFilter", glob)
       .parquet(watchDir).schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "*.parquet").parquet(watchDir)
-    val q = docs.writeStream
+    spark.readStream.schema(schema)
+      .option("pathGlobFilter", glob).parquet(watchDir)
+      .writeStream
       .option("checkpointLocation", s"$storeDir/_checkpoint")
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        // persist: the shingle pipeline (tokenize + 3-gram + md5-48)
-        // feeds BOTH writes; without it bandsFrom re-derives the
-        // un-cached lineage and every batch is hashed twice
-        val sh = Dedup.shinglesFrom(batch).persist()
-        try {
-          sh.write.mode("overwrite")
-            .parquet(s"$storeDir/shingles/batch=$id")
-          Dedup.bandsFrom(sh).write.mode("overwrite")
-            .parquet(s"$storeDir/bands/batch=$id")
-        } finally sh.unpersist()
+        perBatch(batch, new Put(storeDir, id))
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
+      .awaitTermination()
   }
 
-  /** Read a store relation, or an empty relation with the store's
-    * schema when no batch has ever committed - a store that hasn't
-    * seen data yet answers queries with zero rows, not an error.
+  /** The MinHash store: each new file's shingle and band relations.
+    * Signatures are pure per-document functions, so the per-batch
+    * append is exact - documents already in the store are never
+    * re-read, re-tokenized or re-hashed, which at 100 TB is the
+    * difference between touching today's arrivals and re-scanning the
+    * corpus.
     */
+  def catchUp(spark: SparkSession, watchDir: String,
+              storeDir: String): Unit =
+    maintain(spark, watchDir, storeDir) { (batch, put) =>
+      // persist: the shingle pipeline (tokenize + 3-gram + md5-48)
+      // feeds BOTH writes; without it bandsFrom re-derives the
+      // un-cached lineage and every batch is hashed twice
+      val sh = Dedup.shinglesFrom(batch).persist()
+      try {
+        put(sh, "shingles")
+        put(Dedup.bandsFrom(sh), "bands")
+      } finally sh.unpersist()
+    }
+
   /** The LM store's doc-term relation, or its empty frame when
     * `admitLm` produced no batches (empty/missing glob) - the
     * storedOrEmpty discipline for the two streaming faces that read
@@ -205,6 +245,10 @@ object SignatureStore {
       emptyLike(spark, spark.range(0)
         .selectExpr("id AS doc_id", "'' AS term", "id AS k")))
 
+  /** Read a store relation, or an empty relation with the store's
+    * schema when no batch has ever committed - a store that hasn't
+    * seen data yet answers queries with zero rows, not an error.
+    */
   private def storedOrEmpty(spark: SparkSession, dir: String,
                             empty: => DataFrame): DataFrame = {
     Graft.ensureConf(spark)
@@ -249,29 +293,14 @@ object SignatureStore {
     * face of the cells `ss_stream_ann_cand` keys its state on.
     */
   def catchUpEmbeddings(spark: SparkSession, watchDir: String,
-                        storeDir: String): Unit = {
-    Graft.ensureConf(spark)
-    if (!hasParquet(spark, watchDir)) return // nothing has arrived yet
-    val schema = spark.read.option("pathGlobFilter", "*.parquet")
-      .parquet(watchDir).schema
-    val embs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "*.parquet").parquet(watchDir)
-    val q = embs.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // per-batch partition overwrite: idempotent under replay,
-        // same as catchUp
-        batch.select(col("vec_id"),
-            col("label").cast(org.apache.spark.sql.types.LongType)
-              .as("label"),
-            org.apache.spark.sql.functions.expr(
-              Similarity.bucketSpark("embedding")).as("bucket"))
-          .write.mode("overwrite").parquet(s"$storeDir/cells/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                        storeDir: String): Unit =
+    maintain(spark, watchDir, storeDir) { (batch, put) =>
+      put(batch.select(col("vec_id"),
+          col("label").cast(org.apache.spark.sql.types.LongType)
+            .as("label"),
+          org.apache.spark.sql.functions.expr(
+            Similarity.bucketSpark("embedding")).as("bucket")), "cells")
+    }
 
   /** Span-family twin of `catchUp`: append each NEW file's positional
     * gram relation (doc_id, pos, gh) - the span signature, a pure
@@ -281,42 +310,25 @@ object SignatureStore {
     * partials at query time: the increment never re-reads, re-tokenizes
     * or re-counts documents already in the store, and the count
     * aggregation input is per-batch distinct grams, not the corpus.
-    * Per-batch partition overwrite keeps replay idempotent, same as
-    * catchUp.
     */
   def catchUpSpans(spark: SparkSession, watchDir: String,
-                   storeDir: String): Unit = {
-    Graft.ensureConf(spark)
-    if (!hasParquet(spark, watchDir)) return // nothing has arrived yet
-    val schema = spark.read.option("pathGlobFilter", "*.parquet")
-      .parquet(watchDir).schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "*.parquet").parquet(watchDir)
-    val q = docs.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val toks = Dedup.spanToks(batch).persist()
+                   storeDir: String): Unit =
+    maintain(spark, watchDir, storeDir) { (batch, put) =>
+      val toks = Dedup.spanToks(batch).persist()
+      try {
+        put(toks.select(col("doc_id"),
+            org.apache.spark.sql.functions.size(col("toks"))
+              .cast(org.apache.spark.sql.types.LongType).as("n_tokens")),
+          "span_docs")
+        val grams = Dedup.spanGrams(toks).persist()
         try {
-          toks.select(col("doc_id"),
-              org.apache.spark.sql.functions.size(col("toks"))
-                .cast(org.apache.spark.sql.types.LongType).as("n_tokens"))
-            .write.mode("overwrite")
-            .parquet(s"$storeDir/span_docs/batch=$id")
-          val grams = Dedup.spanGrams(toks).persist()
-          try {
-            grams.write.mode("overwrite")
-              .parquet(s"$storeDir/span_grams/batch=$id")
-            grams.groupBy(col("gh"))
-              .agg(org.apache.spark.sql.functions.count(lit(1)).as("n"))
-              .write.mode("overwrite")
-              .parquet(s"$storeDir/span_counts/batch=$id")
-          } finally grams.unpersist()
-        } finally toks.unpersist()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+          put(grams, "span_grams")
+          put(grams.groupBy(col("gh"))
+            .agg(org.apache.spark.sql.functions.count(lit(1)).as("n")),
+            "span_counts")
+        } finally grams.unpersist()
+      } finally toks.unpersist()
+    }
 
   /** Dup-span coverage from the incrementally-maintained store: the
     * repeated-gram set comes from summing the per-batch partial counts,
@@ -353,8 +365,7 @@ object SignatureStore {
     * of the partials, and a batch-1 document's NLL automatically
     * reflects batch-2's vocabulary. Documents are still never re-read
     * or re-tokenized; only the (vocabulary-sized) count relation is
-    * re-aggregated per query. Per-batch partition overwrite keeps
-    * replay idempotent, same as catchUp.
+    * re-aggregated per query.
     */
   def catchUpLm(spark: SparkSession, watchDir: String,
                 storeDir: String): Unit =
@@ -377,57 +388,38 @@ object SignatureStore {
 
   private def maintainLm(spark: SparkSession, watchDir: String,
                          storeDir: String, glob: String,
-                         admissions: Boolean): Unit = {
-    Graft.ensureConf(spark)
-    graft.functions.NativeFunctions.register(spark)
-    if (!hasParquet(spark, watchDir)) return // nothing has arrived yet
-    val schema = spark.read.option("pathGlobFilter", glob)
-      .parquet(watchDir).schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", glob).parquet(watchDir)
-    val q = docs.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        QualityGate.rowSignals(batch).write.mode("overwrite")
-          .parquet(s"$storeDir/lm_signals/batch=$id")
-        // doc -> source, for the per-source cap face; per-doc-pure,
-        // so plain append like the signals. A feed without a source
-        // column (the LM store doesn't require one) just skips the
-        // relation - storedSourceCap then reads an empty store.
-        if (batch.columns.contains("source"))
-          batch.select(col("doc_id"), col("source")).write.mode("overwrite")
-            .parquet(s"$storeDir/lm_sources/batch=$id")
-        val terms = QualityGate.termToks(batch)
-          .groupBy(col("doc_id"), col("term"))
-          .agg(org.apache.spark.sql.functions.count(lit(1)).as("k"))
-          .persist()
-        try {
-          terms.write.mode("overwrite")
-            .parquet(s"$storeDir/lm_doc_terms/batch=$id")
-          terms.groupBy(col("term"))
-            .agg(org.apache.spark.sql.functions.sum(col("k")).as("n"))
-            .write.mode("overwrite")
-            .parquet(s"$storeDir/lm_term_counts/batch=$id")
-          if (admissions) {
-            // score THIS batch against the store's current partials
-            // (the freshly-written ones included) - literally the
-            // query-time scoring core, restricted to the batch's docs
-            val sig = spark.read
-              .parquet(s"$storeDir/lm_signals/batch=$id")
-            val dts = spark.read
-              .parquet(s"$storeDir/lm_doc_terms/batch=$id")
-            QualityGate.withKeep(
-              sig.join(lmNllAgainstStore(spark, storeDir, dts),
-                Seq("doc_id"), "left"))
-              .write.mode("overwrite")
-              .parquet(s"$storeDir/lm_admissions/batch=$id")
-          }
-        } finally terms.unpersist()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                         admissions: Boolean): Unit =
+    maintain(spark, watchDir, storeDir, glob) { (batch, put) =>
+      put(QualityGate.rowSignals(batch), "lm_signals")
+      // doc -> source, for the per-source cap face; per-doc-pure,
+      // so plain append like the signals. A feed without a source
+      // column (the LM store doesn't require one) just skips the
+      // relation - storedSourceCap then reads an empty store.
+      if (batch.columns.contains("source"))
+        put(batch.select(col("doc_id"), col("source")), "lm_sources")
+      val terms = QualityGate.termToks(batch)
+        .groupBy(col("doc_id"), col("term"))
+        .agg(org.apache.spark.sql.functions.count(lit(1)).as("k"))
+        .persist()
+      try {
+        put(terms, "lm_doc_terms")
+        put(terms.groupBy(col("term"))
+          .agg(org.apache.spark.sql.functions.sum(col("k")).as("n")),
+          "lm_term_counts")
+        if (admissions) {
+          // score THIS batch against the store's current partials
+          // (the freshly-written ones included) - literally the
+          // query-time scoring core, restricted to the batch's docs
+          val sig = spark.read
+            .parquet(put.path("lm_signals"))
+          val dts = spark.read
+            .parquet(put.path("lm_doc_terms"))
+          put(QualityGate.withKeep(
+            sig.join(lmNllAgainstStore(spark, storeDir, dts),
+              Seq("doc_id"), "left")), "lm_admissions")
+        }
+      } finally terms.unpersist()
+    }
 
   /** doc_id -> nll for an arbitrary (doc_id, term, k) relation, scored
     * under the LM summed from the store's current `lm_term_counts`
@@ -506,27 +498,15 @@ object SignatureStore {
     * whose answer genuinely spans batch boundaries.
     */
   def catchUpSessions(spark: SparkSession, watchDir: String,
-                      storeDir: String): Unit = {
-    Graft.ensureConf(spark)
-    if (!hasParquet(spark, watchDir)) return
-    val schema = spark.read.parquet(watchDir).schema
-    val ev = spark.readStream.schema(schema).parquet(watchDir)
-    val q = ev.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.analytics.Tpch.sessionFrom(
-            batch.filter(col("ts").isNotNull && col("user_id").isNotNull)
-              .select(col("user_id"), col("event_id"),
-                expr("graft_ts_us(ts)").as("t")))
-          .select(col("user_id"), col("start_t"), col("end_t"),
-            col("n_events"))
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/session_frags/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                      storeDir: String): Unit =
+    maintain(spark, watchDir, storeDir) { (batch, put) =>
+      put(graft.analytics.Tpch.sessionFrom(
+          batch.filter(col("ts").isNotNull && col("user_id").isNotNull)
+            .select(col("user_id"), col("event_id"),
+              expr("graft_ts_us(ts)").as("t")))
+        .select(col("user_id"), col("start_t"), col("end_t"),
+          col("n_events")), "session_frags")
+    }
 
   /** Global sessions from the stored fragments: per user, sort by
     * (start, end) and open a new session when a fragment starts more
@@ -560,15 +540,8 @@ object SignatureStore {
     * fragment merge; shares `q_sessionize`'s oracle.
     */
   def gatedSessions(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_sess_watch")
-    val store = tempDirForExit("graft_gate_sess_store")
-    val ev = Graft.table(spark, sfDir, "events")
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpSessions(spark, watch, store)
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpSessions(spark, watch, store)
+    val store = gateStore(spark, sfDir, "events", parity("event_id"),
+      "sess")(catchUpSessions)
     storedSessions(spark, store)
   }
 
@@ -586,26 +559,14 @@ object SignatureStore {
     * (user, week) relation, never raw events.
     */
   def catchUpCohort(spark: SparkSession, watchDir: String,
-                    storeDir: String): Unit = {
-    Graft.ensureConf(spark)
-    if (!hasParquet(spark, watchDir)) return
-    val schema = spark.read.parquet(watchDir).schema
-    val ev = spark.readStream.schema(schema).parquet(watchDir)
-    val q = ev.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        batch.filter(col("ts").isNotNull && col("user_id").isNotNull)
-          .select(col("user_id"), expr(ParityMath.fdivSql("graft_ts_us(ts)",
-            s"${graft.analytics.Behavior.cohortWeekUs}L"))
-            .as("w"))
-          .distinct()
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/user_weeks/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                    storeDir: String): Unit =
+    maintain(spark, watchDir, storeDir) { (batch, put) =>
+      put(batch.filter(col("ts").isNotNull && col("user_id").isNotNull)
+        .select(col("user_id"), expr(ParityMath.fdivSql("graft_ts_us(ts)",
+          s"${graft.analytics.Behavior.cohortWeekUs}L"))
+          .as("w"))
+        .distinct(), "user_weeks")
+    }
 
   /** The retention matrix from the stored facts: cross-batch distinct
     * (the same (user, week) may arrive in many batches), per-user set,
@@ -629,15 +590,8 @@ object SignatureStore {
     * shares `q_cohort`'s oracle.
     */
   def gatedCohort(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_cohort_watch")
-    val store = tempDirForExit("graft_gate_cohort_store")
-    val ev = Graft.table(spark, sfDir, "events")
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpCohort(spark, watch, store)
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpCohort(spark, watch, store)
+    val store = gateStore(spark, sfDir, "events", parity("event_id"),
+      "cohort")(catchUpCohort)
     storedCohort(spark, store)
   }
 
@@ -652,23 +606,11 @@ object SignatureStore {
     * unioned — only the bucketed counts are storable state.
     */
   def catchUpDecay(spark: SparkSession, watchDir: String,
-                   storeDir: String): Unit = {
-    Graft.ensureConf(spark)
-    if (!hasParquet(spark, watchDir)) return
-    val schema = spark.read.parquet(watchDir).schema
-    val ev = spark.readStream.schema(schema).parquet(watchDir)
-    val q = ev.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.analytics.TimeSeries.decayBuckets(
-            graft.core.Transform.extractFrom(batch))
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/day_counts/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                   storeDir: String): Unit =
+    maintain(spark, watchDir, storeDir) { (batch, put) =>
+      put(graft.analytics.TimeSeries.decayBuckets(
+          graft.core.Transform.extractFrom(batch)), "day_counts")
+    }
 
   def storedDecay(spark: SparkSession, storeDir: String): DataFrame = {
     Graft.ensureConf(spark)
@@ -685,15 +627,8 @@ object SignatureStore {
     * shares `q_decay_count`'s oracle.
     */
   def gatedDecay(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_decay_watch")
-    val store = tempDirForExit("graft_gate_decay_store")
-    val ev = Graft.table(spark, sfDir, "events")
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpDecay(spark, watch, store)
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpDecay(spark, watch, store)
+    val store = gateStore(spark, sfDir, "events", parity("event_id"),
+      "decay")(catchUpDecay)
     storedDecay(spark, store)
   }
 
@@ -708,22 +643,10 @@ object SignatureStore {
     * could ever be unioned).
     */
   def catchUpXcorr(spark: SparkSession, watchDir: String,
-                   storeDir: String): Unit = {
-    Graft.ensureConf(spark)
-    if (!hasParquet(spark, watchDir)) return
-    val schema = spark.read.parquet(watchDir).schema
-    val ev = spark.readStream.schema(schema).parquet(watchDir)
-    val q = ev.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.analytics.TimeSeries.xcorrBuckets(batch)
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/hour_counts/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                   storeDir: String): Unit =
+    maintain(spark, watchDir, storeDir) { (batch, put) =>
+      put(graft.analytics.TimeSeries.xcorrBuckets(batch), "hour_counts")
+    }
 
   def storedXcorr(spark: SparkSession, storeDir: String): DataFrame = {
     Graft.ensureConf(spark)
@@ -739,15 +662,8 @@ object SignatureStore {
     * shares `q_xcorr`'s oracle.
     */
   def gatedXcorr(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_xcorr_watch")
-    val store = tempDirForExit("graft_gate_xcorr_store")
-    val ev = Graft.table(spark, sfDir, "events")
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpXcorr(spark, watch, store)
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpXcorr(spark, watch, store)
+    val store = gateStore(spark, sfDir, "events", parity("event_id"),
+      "xcorr")(catchUpXcorr)
     storedXcorr(spark, store)
   }
 
@@ -762,37 +678,18 @@ object SignatureStore {
     * contract into each landing.
     */
   def catchUpSeasonality(spark: SparkSession, watchDir: String,
-                         storeDir: String): Unit = {
-    Graft.ensureConf(spark)
-    if (!hasParquet(spark, watchDir)) return
-    val schema = spark.read.parquet(watchDir).schema
-    val ev = spark.readStream.schema(schema).parquet(watchDir)
-    val q = ev.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.analytics.TimeSeries.seasonalityCells(batch)
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/cells/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                         storeDir: String): Unit =
+    maintain(spark, watchDir, storeDir) { (batch, put) =>
+      put(graft.analytics.TimeSeries.seasonalityCells(batch), "cells")
+    }
 
   /** Driver-gate face: parity-split appends (most cells land counts
     * in both batches), then the query-time lift view; shares
     * `q_seasonality`'s oracle.
     */
   def gatedSeasonality(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_season_watch")
-    val store = tempDirForExit("graft_gate_season_store")
-    val ev = Graft.table(spark, sfDir, "events")
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpSeasonality(spark, watch, store)
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpSeasonality(spark, watch, store)
+    val store = gateStore(spark, sfDir, "events", parity("event_id"),
+      "season")(catchUpSeasonality)
     graft.analytics.TimeSeries.seasonalityFromCells(
       storedOrEmpty(spark, s"$store/cells",
         emptyLike(spark, spark.range(0).selectExpr(
@@ -811,38 +708,19 @@ object SignatureStore {
     * globally, so no per-batch curve could ever be unioned).
     */
   def catchUpLorenz(spark: SparkSession, watchDir: String,
-                    storeDir: String): Unit = {
-    Graft.ensureConf(spark)
-    if (!hasParquet(spark, watchDir)) return
-    val schema = spark.read.parquet(watchDir).schema
-    val ev = spark.readStream.schema(schema).parquet(watchDir)
-    val q = ev.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        batch.filter(col("user_id").isNotNull)
-          .groupBy(col("user_id")).agg(count(lit(1)).as("x"))
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/user_counts/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                    storeDir: String): Unit =
+    maintain(spark, watchDir, storeDir) { (batch, put) =>
+      put(batch.filter(col("user_id").isNotNull)
+        .groupBy(col("user_id")).agg(count(lit(1)).as("x")), "user_counts")
+    }
 
   /** Driver-gate face: parity-split appends (most users land counts
     * in both batches — the additive sum does real work), then the
     * query-time curve; shares `q_lorenz`'s oracle.
     */
   def gatedLorenz(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_lorenz_watch")
-    val store = tempDirForExit("graft_gate_lorenz_store")
-    val ev = Graft.table(spark, sfDir, "events")
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpLorenz(spark, watch, store)
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpLorenz(spark, watch, store)
+    val store = gateStore(spark, sfDir, "events", parity("event_id"),
+      "lorenz")(catchUpLorenz)
     graft.analytics.Tpch.lorenzFromCounts(
       storedOrEmpty(spark, s"$store/user_counts",
         emptyLike(spark, spark.range(0).selectExpr(
@@ -857,15 +735,8 @@ object SignatureStore {
     * oracle.
     */
   def gatedGini(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_gini_watch")
-    val store = tempDirForExit("graft_gate_gini_store")
-    val ev = Graft.table(spark, sfDir, "events")
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpLorenz(spark, watch, store)
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpLorenz(spark, watch, store)
+    val store = gateStore(spark, sfDir, "events", parity("event_id"),
+      "gini")(catchUpLorenz)
     graft.analytics.Tpch.giniFromCounts(
       storedOrEmpty(spark, s"$store/user_counts",
         emptyLike(spark, spark.range(0).selectExpr(
@@ -884,42 +755,23 @@ object SignatureStore {
     * fold's documented equivalence).
     */
   def catchUpTrimmed(spark: SparkSession, watchDir: String,
-                     storeDir: String): Unit = {
-    Graft.ensureConf(spark)
-    if (!hasParquet(spark, watchDir)) return
-    val schema = spark.read.parquet(watchDir).schema
-    val ev = spark.readStream.schema(schema).parquet(watchDir)
-    val q = ev.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        batch
-          .filter(col("event_type").isNotNull && col("value").isNotNull)
-          .select(col("event_type"),
-            expr("CAST(floor(value * 1000000.0 + 0.5) AS BIGINT)")
-              .as("v_mu"))
-          .groupBy(col("event_type"), col("v_mu"))
-          .agg(count(lit(1)).as("c"))
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/value_counts/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                     storeDir: String): Unit =
+    maintain(spark, watchDir, storeDir) { (batch, put) =>
+      put(batch
+        .filter(col("event_type").isNotNull && col("value").isNotNull)
+        .select(col("event_type"),
+          expr("CAST(floor(value * 1000000.0 + 0.5) AS BIGINT)")
+            .as("v_mu"))
+        .groupBy(col("event_type"), col("v_mu"))
+        .agg(count(lit(1)).as("c")), "value_counts")
+    }
 
   /** Driver-gate face: parity-split appends, query-time trim; shares
     * `q_trimmed_mean`'s oracle.
     */
   def gatedTrimmedMean(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_trim_watch")
-    val store = tempDirForExit("graft_gate_trim_store")
-    val ev = Graft.table(spark, sfDir, "events")
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpTrimmed(spark, watch, store)
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpTrimmed(spark, watch, store)
+    val store = gateStore(spark, sfDir, "events", parity("event_id"),
+      "trim")(catchUpTrimmed)
     graft.analytics.Tpch.trimmedFromValueCounts(
       storedOrEmpty(spark, s"$store/value_counts",
         emptyLike(spark, spark.range(0).selectExpr(
@@ -937,44 +789,25 @@ object SignatureStore {
     * `mmdFromDimSums`.
     */
   def catchUpEmbMmd(spark: SparkSession, watchDir: String,
-                    storeDir: String): Unit = {
-    Graft.ensureConf(spark)
-    if (!hasParquet(spark, watchDir)) return
-    val schema = spark.read.parquet(watchDir).schema
-    val vecs = spark.readStream.schema(schema).parquet(watchDir)
-    val q = vecs.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        batch
-          .select(pmod(col("vec_id"), lit(2)).as("grp"),
-            org.apache.spark.sql.functions.posexplode(col("embedding"))
-              .as(Seq("pos", "v")))
-          .select(col("grp"), col("pos").cast("long").as("pos"),
-            expr("CAST(floor(CAST(v AS DOUBLE) * 1000000.0 + 0.5) " +
-              "AS BIGINT)").as("v_mu"))
-          .groupBy(col("grp"), col("pos"))
-          .agg(sum(col("v_mu")).as("s"), count(lit(1)).as("n"))
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/dim_sums/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                    storeDir: String): Unit =
+    maintain(spark, watchDir, storeDir) { (batch, put) =>
+      put(batch
+        .select(pmod(col("vec_id"), lit(2)).as("grp"),
+          org.apache.spark.sql.functions.posexplode(col("embedding"))
+            .as(Seq("pos", "v")))
+        .select(col("grp"), col("pos").cast("long").as("pos"),
+          expr("CAST(floor(CAST(v AS DOUBLE) * 1000000.0 + 0.5) " +
+            "AS BIGINT)").as("v_mu"))
+        .groupBy(col("grp"), col("pos"))
+        .agg(sum(col("v_mu")).as("s"), count(lit(1)).as("n")), "dim_sums")
+    }
 
   /** Driver-gate face: vec-parity appends, query-time fold; shares
     * `emb_mmd`'s oracle.
     */
   def gatedEmbMmd(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_mmd_watch")
-    val store = tempDirForExit("graft_gate_mmd_store")
-    val vecs = Graft.table(spark, sfDir, "embeddings")
-    land(vecs.filter(pmod(col("vec_id"), lit(4)) < 2), watch,
-      "arrival1.parquet")
-    catchUpEmbMmd(spark, watch, store)
-    land(vecs.filter(pmod(col("vec_id"), lit(4)) >= 2), watch,
-      "arrival2.parquet")
-    catchUpEmbMmd(spark, watch, store)
+    val store = gateStore(spark, sfDir, "embeddings",
+      pmod(col("vec_id"), lit(4)) < 2, "mmd")(catchUpEmbMmd)
     graft.pipeline.Similarity.mmdFromDimSums(
       storedOrEmpty(spark, s"$store/dim_sums",
         emptyLike(spark, spark.range(0).selectExpr(
@@ -990,37 +823,18 @@ object SignatureStore {
     * query-time VIEW through the shared `ddsketchDriftFromBinCounts`.
     */
   def catchUpDdsketch(spark: SparkSession, watchDir: String,
-                      storeDir: String): Unit = {
-    Graft.ensureConf(spark)
-    if (!hasParquet(spark, watchDir)) return
-    val schema = spark.read.parquet(watchDir).schema
-    val ev = spark.readStream.schema(schema).parquet(watchDir)
-    val q = ev.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.analytics.Sketches.ddBinCounts(batch)
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/dd_bins/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                      storeDir: String): Unit =
+    maintain(spark, watchDir, storeDir) { (batch, put) =>
+      put(Sketches.ddBinCounts(batch), "dd_bins")
+    }
 
   /** Driver-gate face: event-parity appends, query-time fold; shares
     * `q_ddsketch_drift`'s oracle.
     */
   def gatedDdsketch(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_dd_watch")
-    val store = tempDirForExit("graft_gate_dd_store")
-    val ev = Graft.table(spark, sfDir, "events")
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpDdsketch(spark, watch, store)
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpDdsketch(spark, watch, store)
-    graft.analytics.Sketches.ddsketchDriftFromBinCounts(
+    val store = gateStore(spark, sfDir, "events", parity("event_id"),
+      "dd")(catchUpDdsketch)
+    Sketches.ddsketchDriftFromBinCounts(
       storedOrEmpty(spark, s"$store/dd_bins",
         emptyLike(spark, spark.range(0).selectExpr(
           "id AS grp", "id AS bin", "id AS c"))))
@@ -1034,36 +848,17 @@ object SignatureStore {
     * query-time VIEW through the shared `rbfMmdFromFeatureSums`.
     */
   def catchUpEmbMmdRbf(spark: SparkSession, watchDir: String,
-                       storeDir: String): Unit = {
-    Graft.ensureConf(spark)
-    if (!hasParquet(spark, watchDir)) return
-    val schema = spark.read.parquet(watchDir).schema
-    val vecs = spark.readStream.schema(schema).parquet(watchDir)
-    val q = vecs.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.pipeline.Similarity.rbfFeatureSums(batch)
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/feature_sums/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                       storeDir: String): Unit =
+    maintain(spark, watchDir, storeDir) { (batch, put) =>
+      put(graft.pipeline.Similarity.rbfFeatureSums(batch), "feature_sums")
+    }
 
   /** Driver-gate face: vec-parity appends, query-time fold; shares
     * `emb_mmd_rbf`'s oracle.
     */
   def gatedEmbMmdRbf(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_mmdrbf_watch")
-    val store = tempDirForExit("graft_gate_mmdrbf_store")
-    val vecs = Graft.table(spark, sfDir, "embeddings")
-    land(vecs.filter(pmod(col("vec_id"), lit(4)) < 2), watch,
-      "arrival1.parquet")
-    catchUpEmbMmdRbf(spark, watch, store)
-    land(vecs.filter(pmod(col("vec_id"), lit(4)) >= 2), watch,
-      "arrival2.parquet")
-    catchUpEmbMmdRbf(spark, watch, store)
+    val store = gateStore(spark, sfDir, "embeddings",
+      pmod(col("vec_id"), lit(4)) < 2, "mmdrbf")(catchUpEmbMmdRbf)
     graft.pipeline.Similarity.rbfMmdFromFeatureSums(
       storedOrEmpty(spark, s"$store/feature_sums",
         emptyLike(spark, spark.range(0).selectExpr(
@@ -1078,36 +873,17 @@ object SignatureStore {
     * a query-time VIEW through the shared `energyFromProjCounts`.
     */
   def catchUpEmbEnergy(spark: SparkSession, watchDir: String,
-                       storeDir: String): Unit = {
-    Graft.ensureConf(spark)
-    if (!hasParquet(spark, watchDir)) return
-    val schema = spark.read.parquet(watchDir).schema
-    val vecs = spark.readStream.schema(schema).parquet(watchDir)
-    val q = vecs.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.pipeline.Similarity.energyProjCounts(batch)
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/proj_counts/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                       storeDir: String): Unit =
+    maintain(spark, watchDir, storeDir) { (batch, put) =>
+      put(graft.pipeline.Similarity.energyProjCounts(batch), "proj_counts")
+    }
 
   /** Driver-gate face: vec-parity appends, query-time fold; shares
     * `emb_energy`'s oracle.
     */
   def gatedEmbEnergy(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_energy_watch")
-    val store = tempDirForExit("graft_gate_energy_store")
-    val vecs = Graft.table(spark, sfDir, "embeddings")
-    land(vecs.filter(pmod(col("vec_id"), lit(4)) < 2), watch,
-      "arrival1.parquet")
-    catchUpEmbEnergy(spark, watch, store)
-    land(vecs.filter(pmod(col("vec_id"), lit(4)) >= 2), watch,
-      "arrival2.parquet")
-    catchUpEmbEnergy(spark, watch, store)
+    val store = gateStore(spark, sfDir, "embeddings",
+      pmod(col("vec_id"), lit(4)) < 2, "energy")(catchUpEmbEnergy)
     graft.pipeline.Similarity.energyFromProjCounts(
       storedOrEmpty(spark, s"$store/proj_counts",
         emptyLike(spark, spark.range(0).selectExpr(
@@ -1123,40 +899,21 @@ object SignatureStore {
     * shifts every rank above its values on BOTH axes).
     */
   def catchUpSpearman(spark: SparkSession, watchDir: String,
-                      storeDir: String): Unit = {
-    Graft.ensureConf(spark)
-    if (!hasParquet(spark, watchDir)) return
-    val schema = spark.read.parquet(watchDir).schema
-    val li = spark.readStream.schema(schema).parquet(watchDir)
-    val q = li.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        batch
-          .select(expr("CAST(l_quantity AS BIGINT)").as("x"),
-            expr("CAST(floor(l_extendedprice * 100.0 + 0.5) AS BIGINT)")
-              .as("y"))
-          .groupBy(col("x"), col("y")).agg(count(lit(1)).as("k"))
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/pair_counts/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                      storeDir: String): Unit =
+    maintain(spark, watchDir, storeDir) { (batch, put) =>
+      put(batch
+        .select(expr("CAST(l_quantity AS BIGINT)").as("x"),
+          expr("CAST(floor(l_extendedprice * 100.0 + 0.5) AS BIGINT)")
+            .as("y"))
+        .groupBy(col("x"), col("y")).agg(count(lit(1)).as("k")), "pair_counts")
+    }
 
   /** Driver-gate face: orderkey-parity appends, query-time ranks;
     * shares `q_spearman`'s oracle.
     */
   def gatedSpearman(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_sp_watch")
-    val store = tempDirForExit("graft_gate_sp_store")
-    val li = Graft.table(spark, sfDir, "lineitem")
-    land(li.filter(pmod(col("l_orderkey"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpSpearman(spark, watch, store)
-    land(li.filter(pmod(col("l_orderkey"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpSpearman(spark, watch, store)
+    val store = gateStore(spark, sfDir, "lineitem", parity("l_orderkey"),
+      "sp")(catchUpSpearman)
     graft.analytics.Tpch.spearmanFromPairCounts(
       storedOrEmpty(spark, s"$store/pair_counts",
         emptyLike(spark, spark.range(0).selectExpr(
@@ -1172,42 +929,23 @@ object SignatureStore {
     * `kruskalFromCounts`.
     */
   def catchUpKruskal(spark: SparkSession, watchDir: String,
-                     storeDir: String): Unit = {
-    Graft.ensureConf(spark)
-    if (!hasParquet(spark, watchDir)) return
-    val schema = spark.read.parquet(watchDir).schema
-    val ev = spark.readStream.schema(schema).parquet(watchDir)
-    val q = ev.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        batch
-          .filter(col("event_type").isNotNull && col("value").isNotNull)
-          .select(col("event_type").as("et"),
-            expr("CAST(floor(value * 1000000.0 + 0.5) AS BIGINT)")
-              .as("v_mu"))
-          .groupBy(col("et"), col("v_mu"))
-          .agg(count(lit(1)).as("c"))
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/type_value_counts/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                     storeDir: String): Unit =
+    maintain(spark, watchDir, storeDir) { (batch, put) =>
+      put(batch
+        .filter(col("event_type").isNotNull && col("value").isNotNull)
+        .select(col("event_type").as("et"),
+          expr("CAST(floor(value * 1000000.0 + 0.5) AS BIGINT)")
+            .as("v_mu"))
+        .groupBy(col("et"), col("v_mu"))
+        .agg(count(lit(1)).as("c")), "type_value_counts")
+    }
 
   /** Driver-gate face: parity-split appends, query-time test; shares
     * `q_kruskal`'s oracle.
     */
   def gatedKruskal(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_kw_watch")
-    val store = tempDirForExit("graft_gate_kw_store")
-    val ev = Graft.table(spark, sfDir, "events")
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpKruskal(spark, watch, store)
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpKruskal(spark, watch, store)
+    val store = gateStore(spark, sfDir, "events", parity("event_id"),
+      "kw")(catchUpKruskal)
     graft.analytics.Behavior.kruskalFromCounts(
       storedOrEmpty(spark, s"$store/type_value_counts",
         emptyLike(spark, spark.range(0).selectExpr(
@@ -1221,15 +959,8 @@ object SignatureStore {
     * store, two query-time views; shares `q_dunn`'s oracle.
     */
   def gatedDunn(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_dunn_watch")
-    val store = tempDirForExit("graft_gate_dunn_store")
-    val ev = Graft.table(spark, sfDir, "events")
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpKruskal(spark, watch, store)
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpKruskal(spark, watch, store)
+    val store = gateStore(spark, sfDir, "events", parity("event_id"),
+      "dunn")(catchUpKruskal)
     graft.analytics.Behavior.dunnFromCounts(
       storedOrEmpty(spark, s"$store/type_value_counts",
         emptyLike(spark, spark.range(0).selectExpr(
@@ -1247,28 +978,16 @@ object SignatureStore {
     * `mannWhitneyFromCounts`.
     */
   def catchUpMannWhitney(spark: SparkSession, watchDir: String,
-                         storeDir: String): Unit = {
-    Graft.ensureConf(spark)
-    if (!hasParquet(spark, watchDir)) return
-    val schema = spark.read.parquet(watchDir).schema
-    val ev = spark.readStream.schema(schema).parquet(watchDir)
-    val q = ev.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        batch
-          .filter(col("user_id").isNotNull && col("value").isNotNull)
-          .select(pmod(col("user_id"), lit(2)).as("grp"),
-            expr("CAST(floor(value * 1000000.0 + 0.5) AS BIGINT)")
-              .as("v_mu"))
-          .groupBy(col("grp"), col("v_mu"))
-          .agg(count(lit(1)).as("c"))
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/grp_value_counts/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                         storeDir: String): Unit =
+    maintain(spark, watchDir, storeDir) { (batch, put) =>
+      put(batch
+        .filter(col("user_id").isNotNull && col("value").isNotNull)
+        .select(pmod(col("user_id"), lit(2)).as("grp"),
+          expr("CAST(floor(value * 1000000.0 + 0.5) AS BIGINT)")
+            .as("v_mu"))
+        .groupBy(col("grp"), col("v_mu"))
+        .agg(count(lit(1)).as("c")), "grp_value_counts")
+    }
 
   /** Kolmogorov–Smirnov view over the SAME (cohort, value) count
     * landing as the Mann–Whitney store — one store discipline, two
@@ -1276,15 +995,8 @@ object SignatureStore {
     * `q_ks_test`'s oracle.
     */
   def gatedKsTest(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_ks_watch")
-    val store = tempDirForExit("graft_gate_ks_store")
-    val ev = Graft.table(spark, sfDir, "events")
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpMannWhitney(spark, watch, store)
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpMannWhitney(spark, watch, store)
+    val store = gateStore(spark, sfDir, "events", parity("event_id"),
+      "ks")(catchUpMannWhitney)
     graft.analytics.Behavior.ksFromCounts(
       storedOrEmpty(spark, s"$store/grp_value_counts",
         emptyLike(spark, spark.range(0).selectExpr(
@@ -1297,15 +1009,8 @@ object SignatureStore {
     * `q_mannwhitney`'s oracle.
     */
   def gatedMannWhitney(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_mw_watch")
-    val store = tempDirForExit("graft_gate_mw_store")
-    val ev = Graft.table(spark, sfDir, "events")
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpMannWhitney(spark, watch, store)
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpMannWhitney(spark, watch, store)
+    val store = gateStore(spark, sfDir, "events", parity("event_id"),
+      "mw")(catchUpMannWhitney)
     graft.analytics.Behavior.mannWhitneyFromCounts(
       storedOrEmpty(spark, s"$store/grp_value_counts",
         emptyLike(spark, spark.range(0).selectExpr(
@@ -1329,31 +1034,19 @@ object SignatureStore {
     * storable per batch.
     */
   def catchUpAcfFrags(spark: SparkSession, watchDir: String,
-                      storeDir: String): Unit = {
-    Graft.ensureConf(spark)
-    if (!hasParquet(spark, watchDir)) return
-    val schema = spark.read.parquet(watchDir).schema
-    val ev = spark.readStream.schema(schema).parquet(watchDir)
-    val q = ev.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        batch
-          .filter(col("ts").isNotNull && col("user_id").isNotNull &&
-            col("value").isNotNull)
-          .select(col("user_id"), expr("graft_ts_us(ts)").as("tus"),
-            col("event_id"),
-            expr("CAST(floor(value * 1000000.0 + 0.5) AS BIGINT)")
-              .as("v_mu"))
-          .groupBy(col("user_id"))
-          .agg(collect_list(struct(col("tus"), col("event_id"),
-            col("v_mu"))).as("buf"))
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/frags/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                      storeDir: String): Unit =
+    maintain(spark, watchDir, storeDir) { (batch, put) =>
+      put(batch
+        .filter(col("ts").isNotNull && col("user_id").isNotNull &&
+          col("value").isNotNull)
+        .select(col("user_id"), expr("graft_ts_us(ts)").as("tus"),
+          col("event_id"),
+          expr("CAST(floor(value * 1000000.0 + 0.5) AS BIGINT)")
+            .as("v_mu"))
+        .groupBy(col("user_id"))
+        .agg(collect_list(struct(col("tus"), col("event_id"),
+          col("v_mu"))).as("buf")), "frags")
+    }
 
   private def storedAcf(spark: SparkSession, storeDir: String): DataFrame = {
     Graft.ensureConf(spark)
@@ -1375,15 +1068,8 @@ object SignatureStore {
     * the Durbin–Levinson view; shares `q_pacf`'s oracle.
     */
   def gatedPacf(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_pacf_watch")
-    val store = tempDirForExit("graft_gate_pacf_store")
-    val ev = Graft.table(spark, sfDir, "events")
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpAcfFrags(spark, watch, store)
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpAcfFrags(spark, watch, store)
+    val store = gateStore(spark, sfDir, "events", parity("event_id"),
+      "pacf")(catchUpAcfFrags)
     graft.analytics.TimeSeries.pacfFromAcf(spark, storedAcf(spark, store))
   }
 
@@ -1392,15 +1078,8 @@ object SignatureStore {
     * two diagnostic views); shares `q_autocorr`'s oracle.
     */
   def gatedAutocorr(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_acf_watch")
-    val store = tempDirForExit("graft_gate_acf_store")
-    val ev = Graft.table(spark, sfDir, "events")
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpAcfFrags(spark, watch, store)
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpAcfFrags(spark, watch, store)
+    val store = gateStore(spark, sfDir, "events", parity("event_id"),
+      "acf")(catchUpAcfFrags)
     storedAcf(spark, store)
   }
 
@@ -1416,22 +1095,10 @@ object SignatureStore {
     * axis).
     */
   def catchUpKeyphrase(spark: SparkSession, watchDir: String,
-                       storeDir: String): Unit = {
-    Graft.ensureConf(spark)
-    if (!hasParquet(spark, watchDir)) return
-    val schema = spark.read.parquet(watchDir).schema
-    val docs = spark.readStream.schema(schema).parquet(watchDir)
-    val q = docs.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        TextAnalysis.rakePhraseTokens(batch)
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/phtok/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                       storeDir: String): Unit =
+    maintain(spark, watchDir, storeDir) { (batch, put) =>
+      put(TextAnalysis.rakePhraseTokens(batch), "phtok")
+    }
 
   def storedKeyphrase(spark: SparkSession, storeDir: String): DataFrame = {
     Graft.ensureConf(spark)
@@ -1445,15 +1112,8 @@ object SignatureStore {
     * shares `txt_keyphrase`'s oracle.
     */
   def gatedKeyphrase(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_rake_watch")
-    val store = tempDirForExit("graft_gate_rake_store")
-    val docs = Graft.table(spark, sfDir, "documents")
-    land(docs.filter(pmod(col("doc_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpKeyphrase(spark, watch, store)
-    land(docs.filter(pmod(col("doc_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpKeyphrase(spark, watch, store)
+    val store = gateStore(spark, sfDir, "documents", parity("doc_id"),
+      "rake")(catchUpKeyphrase)
     storedKeyphrase(spark, store)
   }
 
@@ -1467,15 +1127,8 @@ object SignatureStore {
     * Doc-parity appends; shares `txt_novelty`'s oracle.
     */
   def gatedNovelty(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_nov_watch")
-    val store = tempDirForExit("graft_gate_nov_store")
-    val docs = Graft.table(spark, sfDir, "documents")
-    land(docs.filter(pmod(col("doc_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUp(spark, watch, store)
-    land(docs.filter(pmod(col("doc_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUp(spark, watch, store)
+    val store = gateStore(spark, sfDir, "documents", parity("doc_id"),
+      "nov")(catchUp)
     graft.pipeline.TextAnalysis.noveltyFrom(storedShingles(spark, store))
   }
 
@@ -1490,22 +1143,10 @@ object SignatureStore {
     * state).
     */
   def catchUpHw(spark: SparkSession, watchDir: String,
-                storeDir: String): Unit = {
-    Graft.ensureConf(spark)
-    if (!hasParquet(spark, watchDir)) return
-    val schema = spark.read.parquet(watchDir).schema
-    val ev = spark.readStream.schema(schema).parquet(watchDir)
-    val q = ev.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.analytics.TimeSeries.hwBuckets(batch)
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/etday_counts/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                storeDir: String): Unit =
+    maintain(spark, watchDir, storeDir) { (batch, put) =>
+      put(graft.analytics.TimeSeries.hwBuckets(batch), "etday_counts")
+    }
 
   def storedHw(spark: SparkSession, storeDir: String): DataFrame = {
     Graft.ensureConf(spark)
@@ -1520,15 +1161,8 @@ object SignatureStore {
     * view; shares `q_holt_winters`'s oracle.
     */
   def gatedHw(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_hw_watch")
-    val store = tempDirForExit("graft_gate_hw_store")
-    val ev = Graft.table(spark, sfDir, "events")
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpHw(spark, watch, store)
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpHw(spark, watch, store)
+    val store = gateStore(spark, sfDir, "events", parity("event_id"),
+      "hw")(catchUpHw)
     storedHw(spark, store)
   }
 
@@ -1539,15 +1173,8 @@ object SignatureStore {
     * the min-plus DP runs at query time through `dtwFromBuckets`.
     */
   def gatedDtw(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_dtw_watch")
-    val store = tempDirForExit("graft_gate_dtw_store")
-    val ev = Graft.table(spark, sfDir, "events")
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpHw(spark, watch, store)
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpHw(spark, watch, store)
+    val store = gateStore(spark, sfDir, "events", parity("event_id"),
+      "dtw")(catchUpHw)
     graft.analytics.TimeSeries.dtwFromBuckets(
       storedOrEmpty(spark, s"$store/etday_counts",
         emptyLike(spark, spark.range(0).selectExpr(
@@ -1562,34 +1189,15 @@ object SignatureStore {
     * every digit's expected mass, so only the counts are storable).
     */
   def catchUpBenford(spark: SparkSession, watchDir: String,
-                     storeDir: String): Unit = {
-    Graft.ensureConf(spark)
-    if (!hasParquet(spark, watchDir)) return
-    val schema = spark.read.parquet(watchDir).schema
-    val ev = spark.readStream.schema(schema).parquet(watchDir)
-    val q = ev.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.analytics.Tpch.benfordDigits(batch)
-          .groupBy(col("digit")).agg(count(lit(1)).as("n"))
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/digit_counts/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                     storeDir: String): Unit =
+    maintain(spark, watchDir, storeDir) { (batch, put) =>
+      put(graft.analytics.Tpch.benfordDigits(batch)
+        .groupBy(col("digit")).agg(count(lit(1)).as("n")), "digit_counts")
+    }
 
   def gatedBenford(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_benford_watch")
-    val store = tempDirForExit("graft_gate_benford_store")
-    val ev = Graft.table(spark, sfDir, "events")
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpBenford(spark, watch, store)
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpBenford(spark, watch, store)
+    val store = gateStore(spark, sfDir, "events", parity("event_id"),
+      "benford")(catchUpBenford)
     graft.analytics.Tpch.benfordFromCounts(
       storedOrEmpty(spark, s"$store/digit_counts",
         emptyLike(spark, spark.range(0).selectExpr(
@@ -1603,33 +1211,14 @@ object SignatureStore {
     * query-time recompute through the batch `chisqFromCells`.
     */
   def catchUpChisq(spark: SparkSession, watchDir: String,
-                   storeDir: String): Unit = {
-    Graft.ensureConf(spark)
-    if (!hasParquet(spark, watchDir)) return
-    val schema = spark.read.parquet(watchDir).schema
-    val ev = spark.readStream.schema(schema).parquet(watchDir)
-    val q = ev.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.analytics.Behavior.chisqCells(batch)
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/cells/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                   storeDir: String): Unit =
+    maintain(spark, watchDir, storeDir) { (batch, put) =>
+      put(graft.analytics.Behavior.chisqCells(batch), "cells")
+    }
 
   def gatedChisq(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_chisq_watch")
-    val store = tempDirForExit("graft_gate_chisq_store")
-    val ev = Graft.table(spark, sfDir, "events")
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpChisq(spark, watch, store)
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpChisq(spark, watch, store)
+    val store = gateStore(spark, sfDir, "events", parity("event_id"),
+      "chisq")(catchUpChisq)
     graft.analytics.Behavior.chisqFromCells(
       storedOrEmpty(spark, s"$store/cells",
         emptyLike(spark, spark.range(0).selectExpr(
@@ -1643,37 +1232,18 @@ object SignatureStore {
     * through the batch `stickinessFromDayUsers`.
     */
   def catchUpStickiness(spark: SparkSession, watchDir: String,
-                        storeDir: String): Unit = {
-    Graft.ensureConf(spark)
-    if (!hasParquet(spark, watchDir)) return
-    val schema = spark.read.parquet(watchDir).schema
-    val ev = spark.readStream.schema(schema).parquet(watchDir)
-    val q = ev.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        batch
-          .filter(col("ts").isNotNull && col("user_id").isNotNull)
-          .select(expr(ParityMath.fdivSql("graft_ts_us(ts)", "86400000000")).as("d"),
-            col("user_id"))
-          .distinct()
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/day_users/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                        storeDir: String): Unit =
+    maintain(spark, watchDir, storeDir) { (batch, put) =>
+      put(batch
+        .filter(col("ts").isNotNull && col("user_id").isNotNull)
+        .select(expr(ParityMath.fdivSql("graft_ts_us(ts)", "86400000000")).as("d"),
+          col("user_id"))
+        .distinct(), "day_users")
+    }
 
   def gatedStickiness(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_stick_watch")
-    val store = tempDirForExit("graft_gate_stick_store")
-    val ev = Graft.table(spark, sfDir, "events")
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpStickiness(spark, watch, store)
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpStickiness(spark, watch, store)
+    val store = gateStore(spark, sfDir, "events", parity("event_id"),
+      "stick")(catchUpStickiness)
     graft.analytics.Behavior.stickinessFromDayUsers(
       storedOrEmpty(spark, s"$store/day_users",
         emptyLike(spark, spark.range(0).selectExpr(
@@ -1687,36 +1257,18 @@ object SignatureStore {
     * recompute through `fertilityFromSums`.
     */
   def catchUpFertility(spark: SparkSession, watchDir: String,
-                       storeDir: String): Unit = {
-    Graft.ensureConf(spark)
-    if (!hasParquet(spark, watchDir)) return
-    val schema = spark.read.parquet(watchDir).schema
-    val docs = spark.readStream.schema(schema).parquet(watchDir)
-    val q = docs.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.pipeline.TextAnalysis.fertilityDocStats(batch)
-          .groupBy(col("pred_lang"))
-          .agg(count(lit(1)).as("n_docs"), sum(col("n_ws")).as("ws"),
-            sum(col("n_bpe")).as("bpe"), sum(col("n_chars")).as("chars"))
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/lang_sums/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                       storeDir: String): Unit =
+    maintain(spark, watchDir, storeDir) { (batch, put) =>
+      put(graft.pipeline.TextAnalysis.fertilityDocStats(batch)
+        .groupBy(col("pred_lang"))
+        .agg(count(lit(1)).as("n_docs"), sum(col("n_ws")).as("ws"),
+          sum(col("n_bpe")).as("bpe"), sum(col("n_chars")).as("chars")),
+        "lang_sums")
+    }
 
   def gatedFertility(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_fert_watch")
-    val store = tempDirForExit("graft_gate_fert_store")
-    val docs = Graft.table(spark, sfDir, "documents")
-    land(docs.filter(pmod(col("doc_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpFertility(spark, watch, store)
-    land(docs.filter(pmod(col("doc_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpFertility(spark, watch, store)
+    val store = gateStore(spark, sfDir, "documents", parity("doc_id"),
+      "fert")(catchUpFertility)
     graft.pipeline.TextAnalysis.fertilityFromSums(
       storedOrEmpty(spark, s"$store/lang_sums",
         emptyLike(spark, spark.range(0).selectExpr(
@@ -1733,33 +1285,14 @@ object SignatureStore {
     * through the batch `abtestFromFlags`.
     */
   def catchUpAbtest(spark: SparkSession, watchDir: String,
-                    storeDir: String): Unit = {
-    Graft.ensureConf(spark)
-    if (!hasParquet(spark, watchDir)) return
-    val schema = spark.read.parquet(watchDir).schema
-    val ev = spark.readStream.schema(schema).parquet(watchDir)
-    val q = ev.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.analytics.Behavior.abtestFlags(batch)
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/flags/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                    storeDir: String): Unit =
+    maintain(spark, watchDir, storeDir) { (batch, put) =>
+      put(graft.analytics.Behavior.abtestFlags(batch), "flags")
+    }
 
   def gatedAbtest(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_abtest_watch")
-    val store = tempDirForExit("graft_gate_abtest_store")
-    val ev = Graft.table(spark, sfDir, "events")
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpAbtest(spark, watch, store)
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpAbtest(spark, watch, store)
+    val store = gateStore(spark, sfDir, "events", parity("event_id"),
+      "abtest")(catchUpAbtest)
     graft.analytics.Behavior.abtestFromFlags(
       storedOrEmpty(spark, s"$store/flags",
         emptyLike(spark, spark.range(0).selectExpr(
@@ -1773,15 +1306,8 @@ object SignatureStore {
     * storable state - the gatedDtw argument).
     */
   def gatedBurst(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_burst_watch")
-    val store = tempDirForExit("graft_gate_burst_store")
-    val ev = Graft.table(spark, sfDir, "events")
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpHw(spark, watch, store)
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpHw(spark, watch, store)
+    val store = gateStore(spark, sfDir, "events", parity("event_id"),
+      "burst")(catchUpHw)
     graft.analytics.TimeSeries.burstFromBuckets(
       storedOrEmpty(spark, s"$store/etday_counts",
         emptyLike(spark, spark.range(0).selectExpr(
@@ -1801,25 +1327,13 @@ object SignatureStore {
     * absorbs and any stored per-batch curve could not.
     */
   def catchUpHeaps(spark: SparkSession, watchDir: String,
-                   storeDir: String): Unit = {
-    Graft.ensureConf(spark)
-    if (!hasParquet(spark, watchDir)) return
-    val schema = spark.read.parquet(watchDir).schema
-    val docs = spark.readStream.schema(schema).parquet(watchDir)
-    val q = docs.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val toks = batch.select(col("doc_id"), explode(expr(
-          "regexp_extract_all(lower(text), '[a-z0-9]+', 0)")).as("term"))
-        toks.groupBy(col("term")).agg(min(col("doc_id")).as("fd"))
-          .write.mode("overwrite").parquet(s"$storeDir/fd/batch=$id")
-        toks.groupBy(col("doc_id")).agg(count(lit(1)).as("nt"))
-          .write.mode("overwrite").parquet(s"$storeDir/nt/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                   storeDir: String): Unit =
+    maintain(spark, watchDir, storeDir) { (batch, put) =>
+      val toks = batch.select(col("doc_id"), explode(expr(
+        "regexp_extract_all(lower(text), '[a-z0-9]+', 0)")).as("term"))
+      put(toks.groupBy(col("term")).agg(min(col("doc_id")).as("fd")), "fd")
+      put(toks.groupBy(col("doc_id")).agg(count(lit(1)).as("nt")), "nt")
+    }
 
   def storedHeaps(spark: SparkSession, storeDir: String): DataFrame = {
     Graft.ensureConf(spark)
@@ -1840,15 +1354,8 @@ object SignatureStore {
     * shares `txt_heaps`'s oracle.
     */
   def gatedHeaps(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_heaps_watch")
-    val store = tempDirForExit("graft_gate_heaps_store")
-    val docs = Graft.table(spark, sfDir, "documents")
-    land(docs.filter(pmod(col("doc_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpHeaps(spark, watch, store)
-    land(docs.filter(pmod(col("doc_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpHeaps(spark, watch, store)
+    val store = gateStore(spark, sfDir, "documents", parity("doc_id"),
+      "heaps")(catchUpHeaps)
     storedHeaps(spark, store)
   }
 
@@ -1860,22 +1367,10 @@ object SignatureStore {
     * the xcorr store's structure on the decomposition axis.
     */
   def catchUpStl(spark: SparkSession, watchDir: String,
-                 storeDir: String): Unit = {
-    Graft.ensureConf(spark)
-    if (!hasParquet(spark, watchDir)) return
-    val schema = spark.read.parquet(watchDir).schema
-    val ev = spark.readStream.schema(schema).parquet(watchDir)
-    val q = ev.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.analytics.TimeSeries.stlBuckets(batch)
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/hour_counts/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                 storeDir: String): Unit =
+    maintain(spark, watchDir, storeDir) { (batch, put) =>
+      put(graft.analytics.TimeSeries.stlBuckets(batch), "hour_counts")
+    }
 
   def storedStl(spark: SparkSession, storeDir: String): DataFrame = {
     Graft.ensureConf(spark)
@@ -1889,15 +1384,8 @@ object SignatureStore {
     * view; shares `q_stl`'s oracle.
     */
   def gatedStl(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_stl_watch")
-    val store = tempDirForExit("graft_gate_stl_store")
-    val ev = Graft.table(spark, sfDir, "events")
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpStl(spark, watch, store)
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpStl(spark, watch, store)
+    val store = gateStore(spark, sfDir, "events", parity("event_id"),
+      "stl")(catchUpStl)
     storedStl(spark, store)
   }
 
@@ -1914,22 +1402,10 @@ object SignatureStore {
     * summed counts — one store, the test and the estimator.
     */
   def catchUpTrend(spark: SparkSession, watchDir: String,
-                   storeDir: String): Unit = {
-    Graft.ensureConf(spark)
-    if (!hasParquet(spark, watchDir)) return
-    val schema = spark.read.parquet(watchDir).schema
-    val ev = spark.readStream.schema(schema).parquet(watchDir)
-    val q = ev.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.analytics.TimeSeries.mkBuckets(batch)
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/day_counts/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                   storeDir: String): Unit =
+    maintain(spark, watchDir, storeDir) { (batch, put) =>
+      put(graft.analytics.TimeSeries.mkBuckets(batch), "day_counts")
+    }
 
   private def storedDayCounts(spark: SparkSession,
                               storeDir: String): DataFrame = {
@@ -1940,18 +1416,8 @@ object SignatureStore {
   }
 
   private def trendStore(spark: SparkSession, sfDir: String,
-                         name: String): String = {
-    val watch = tempDirForExit(s"graft_gate_${name}_watch")
-    val store = tempDirForExit(s"graft_gate_${name}_store")
-    val ev = Graft.table(spark, sfDir, "events")
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpTrend(spark, watch, store)
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpTrend(spark, watch, store)
-    store
-  }
+                         name: String): String =
+    gateStore(spark, sfDir, "events", parity("event_id"), name)(catchUpTrend)
 
   /** Driver-gate faces: event-parity appends (most days land counts in
     * both batches — the additive sum does real work), then the
@@ -2019,26 +1485,14 @@ object SignatureStore {
     * the source axis).
     */
   def catchUpJsd(spark: SparkSession, watchDir: String,
-                 storeDir: String): Unit = {
-    Graft.ensureConf(spark)
-    if (!hasParquet(spark, watchDir)) return
-    val schema = spark.read.parquet(watchDir).schema
-    val docs = spark.readStream.schema(schema).parquet(watchDir)
-    val q = docs.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        batch.select(col("source"), explode(expr(
-            "regexp_extract_all(lower(text), '[a-z0-9]+', 0)"))
-            .as("term"))
-          .groupBy(col("source"), col("term"))
-          .agg(count(lit(1)).as("cst"))
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/st_counts/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                 storeDir: String): Unit =
+    maintain(spark, watchDir, storeDir) { (batch, put) =>
+      put(batch.select(col("source"), explode(expr(
+          "regexp_extract_all(lower(text), '[a-z0-9]+', 0)"))
+          .as("term"))
+        .groupBy(col("source"), col("term"))
+        .agg(count(lit(1)).as("cst")), "st_counts")
+    }
 
   def storedJsd(spark: SparkSession, storeDir: String): DataFrame = {
     Graft.ensureConf(spark)
@@ -2051,15 +1505,8 @@ object SignatureStore {
   }
 
   def gatedJsd(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_jsd_watch")
-    val store = tempDirForExit("graft_gate_jsd_store")
-    val docs = Graft.table(spark, sfDir, "documents")
-    land(docs.filter(pmod(col("doc_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpJsd(spark, watch, store)
-    land(docs.filter(pmod(col("doc_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpJsd(spark, watch, store)
+    val store = gateStore(spark, sfDir, "documents", parity("doc_id"),
+      "jsd")(catchUpJsd)
     storedJsd(spark, store)
   }
 
@@ -2076,22 +1523,10 @@ object SignatureStore {
     * axis instead of the time axis.
     */
   def catchUpRfm(spark: SparkSession, watchDir: String,
-                 storeDir: String): Unit = {
-    Graft.ensureConf(spark)
-    if (!hasParquet(spark, watchDir)) return
-    val schema = spark.read.parquet(watchDir).schema
-    val orders = spark.readStream.schema(schema).parquet(watchDir)
-    val q = orders.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.analytics.Segmentation.rfmRollup(batch)
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/rollups/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                 storeDir: String): Unit =
+    maintain(spark, watchDir, storeDir) { (batch, put) =>
+      put(graft.analytics.Segmentation.rfmRollup(batch), "rollups")
+    }
 
   def storedRfm(spark: SparkSession, storeDir: String): DataFrame = {
     Graft.ensureConf(spark)
@@ -2111,15 +1546,8 @@ object SignatureStore {
     * ranking; shares `q_rfm`'s oracle.
     */
   def gatedRfm(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_rfm_watch")
-    val store = tempDirForExit("graft_gate_rfm_store")
-    val ord = Graft.table(spark, sfDir, "orders")
-    land(ord.filter(pmod(col("o_orderkey"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpRfm(spark, watch, store)
-    land(ord.filter(pmod(col("o_orderkey"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpRfm(spark, watch, store)
+    val store = gateStore(spark, sfDir, "orders", parity("o_orderkey"),
+      "rfm")(catchUpRfm)
     storedRfm(spark, store)
   }
 
@@ -2135,22 +1563,10 @@ object SignatureStore {
     * the evolving-model contract on the WEIGHTS axis.
     */
   def catchUpQclf(spark: SparkSession, watchDir: String,
-                  storeDir: String): Unit = {
-    Graft.ensureConf(spark)
-    if (!hasParquet(spark, watchDir)) return
-    val schema = spark.read.parquet(watchDir).schema
-    val docs = spark.readStream.schema(schema).parquet(watchDir)
-    val q = docs.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.pipeline.QualityClassifier.featureRows(batch)
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/feats/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                  storeDir: String): Unit =
+    maintain(spark, watchDir, storeDir) { (batch, put) =>
+      put(graft.pipeline.QualityClassifier.featureRows(batch), "feats")
+    }
 
   def storedQclf(spark: SparkSession, storeDir: String): DataFrame = {
     Graft.ensureConf(spark)
@@ -2169,15 +1585,8 @@ object SignatureStore {
     * scoring view; shares `pipe_qclf_score`'s oracle.
     */
   def gatedQclf(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_qclf_watch")
-    val store = tempDirForExit("graft_gate_qclf_store")
-    val docs = Graft.table(spark, sfDir, "documents")
-    land(docs.filter(pmod(col("doc_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpQclf(spark, watch, store)
-    land(docs.filter(pmod(col("doc_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpQclf(spark, watch, store)
+    val store = gateStore(spark, sfDir, "documents", parity("doc_id"),
+      "qclf")(catchUpQclf)
     storedQclf(spark, store)
   }
 
@@ -2212,69 +1621,56 @@ object SignatureStore {
     * filter.
     */
   def catchUpMarkov(spark: SparkSession, watchDir: String,
-                    storeDir: String): Unit = {
-    Graft.ensureConf(spark)
-    if (!hasParquet(spark, watchDir)) return
-    val schema = spark.read.parquet(watchDir).schema
-    val ev = spark.readStream.schema(schema).parquet(watchDir)
-    val q = ev.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        val e = batch
-          .filter(col("ts").isNotNull && col("user_id").isNotNull)
-          .select(col("user_id"), expr("graft_ts_us(ts)").as("tus"),
-            col("event_id"), col("event_type"))
-        val bounds = e.groupBy(col("user_id"))
-          .agg(min(struct(col("tus"), col("event_id"),
-            col("event_type"))).as("f"),
-            max(struct(col("tus"), col("event_id"),
-              col("event_type"))).as("l"))
-          .select(col("user_id"),
-            col("f.tus").as("first_tus"),
-            col("f.event_id").as("first_eid"),
-            col("f.event_type").as("first_type"),
-            col("l.tus").as("last_tus"),
-            col("l.event_id").as("last_eid"),
-            col("l.event_type").as("last_type"))
-        // arrival-contract check: fail loudly on an out-of-order batch
-        // instead of silently corrupting the junction transitions
-        if (hasParquet(spark, s"$storeDir/boundaries")) {
-          val prevLast = spark.read
-            .parquet(s"$storeDir/boundaries")
-            .filter(col("batch") < id)
-            .groupBy(col("user_id"))
-            .agg(max(struct(col("last_tus"), col("last_eid"))).as("pl"))
-          val bad = bounds.join(prevLast, "user_id")
-            .filter(struct(col("first_tus"), col("first_eid")) <=
-              col("pl"))
-            .select(col("user_id"), col("first_tus"),
-              col("pl.last_tus"))
-            .limit(3).collect()
-          if (bad.nonEmpty) throw new IllegalStateException(
-            "markov store arrival contract violated: batch events " +
-              "precede already-stored events for users " +
-              bad.map(_.getLong(0)).mkString("[", ", ", "]") +
-              " - a first-order chain is not recoverable from " +
-              "interleaved batches; deliver each user's timeline in " +
-              "time-contiguous chunks")
-        }
-        val w = Window.partitionBy(col("user_id"))
-          .orderBy(col("tus"), col("event_id"))
-        graft.analytics.Behavior.markovCount(
-            e.withColumn("from_type", lag(col("event_type"), 1).over(w))
-              .filter(col("from_type").isNotNull)
-              .select(col("from_type"),
-                col("event_type").as("to_type")))
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/trans_counts/batch=$id")
-        bounds.write.mode("overwrite")
-          .parquet(s"$storeDir/boundaries/batch=$id")
+                    storeDir: String): Unit =
+    maintain(spark, watchDir, storeDir) { (batch, put) =>
+      val spark = batch.sparkSession
+      val e = batch
+        .filter(col("ts").isNotNull && col("user_id").isNotNull)
+        .select(col("user_id"), expr("graft_ts_us(ts)").as("tus"),
+          col("event_id"), col("event_type"))
+      val bounds = e.groupBy(col("user_id"))
+        .agg(min(struct(col("tus"), col("event_id"),
+          col("event_type"))).as("f"),
+          max(struct(col("tus"), col("event_id"),
+            col("event_type"))).as("l"))
+        .select(col("user_id"),
+          col("f.tus").as("first_tus"),
+          col("f.event_id").as("first_eid"),
+          col("f.event_type").as("first_type"),
+          col("l.tus").as("last_tus"),
+          col("l.event_id").as("last_eid"),
+          col("l.event_type").as("last_type"))
+      // arrival-contract check: fail loudly on an out-of-order batch
+      // instead of silently corrupting the junction transitions
+      if (hasParquet(spark, s"$storeDir/boundaries")) {
+        val prevLast = spark.read
+          .parquet(s"$storeDir/boundaries")
+          .filter(col("batch") < put.id)
+          .groupBy(col("user_id"))
+          .agg(max(struct(col("last_tus"), col("last_eid"))).as("pl"))
+        val bad = bounds.join(prevLast, "user_id")
+          .filter(struct(col("first_tus"), col("first_eid")) <=
+            col("pl"))
+          .select(col("user_id"), col("first_tus"),
+            col("pl.last_tus"))
+          .limit(3).collect()
+        if (bad.nonEmpty) throw new IllegalStateException(
+          "markov store arrival contract violated: batch events " +
+            "precede already-stored events for users " +
+            bad.map(_.getLong(0)).mkString("[", ", ", "]") +
+            " - a first-order chain is not recoverable from " +
+            "interleaved batches; deliver each user's timeline in " +
+            "time-contiguous chunks")
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      val w = Window.partitionBy(col("user_id"))
+        .orderBy(col("tus"), col("event_id"))
+      put(graft.analytics.Behavior.markovCount(
+          e.withColumn("from_type", lag(col("event_type"), 1).over(w))
+            .filter(col("from_type").isNotNull)
+            .select(col("from_type"),
+              col("event_type").as("to_type"))), "trans_counts")
+      put(bounds, "boundaries")
+    }
 
   /** The matrix from the stored fragments: summed within-batch counts
     * plus the lag-derived junction transitions over the boundary
@@ -2347,21 +1743,14 @@ object SignatureStore {
     */
   private def markovGateStore(spark: SparkSession, sfDir: String,
                               tag: String): String = {
-    val watch = tempDirForExit(s"graft_gate_${tag}_watch")
-    val store = tempDirForExit(s"graft_gate_${tag}_store")
-    val ev = Graft.table(spark, sfDir, "events")
     val dayUs = graft.analytics.TimeSeries.decayHalflifeUs
-    val cut = ev.filter(col("ts").isNotNull)
+    val day = expr(s"graft_ts_us(ts) DIV ${dayUs}L")
+    val cut = Graft.table(spark, sfDir, "events")
+      .filter(col("ts").isNotNull)
       .agg(expr(s"(min(graft_ts_us(ts) DIV ${dayUs}L) + " +
         s"max(graft_ts_us(ts) DIV ${dayUs}L)) DIV 2").as("c"))
       .first().getLong(0)
-    land(ev.filter(expr(s"graft_ts_us(ts) DIV ${dayUs}L") <= cut),
-      watch, "arrival1.parquet")
-    catchUpMarkov(spark, watch, store)
-    land(ev.filter(expr(s"graft_ts_us(ts) DIV ${dayUs}L") > cut),
-      watch, "arrival2.parquet")
-    catchUpMarkov(spark, watch, store)
-    store
+    gateStore(spark, sfDir, "events", day <= cut, tag)(catchUpMarkov)
   }
 
   // ---- seq-pattern store -----------------------------------------------
@@ -2379,28 +1768,16 @@ object SignatureStore {
     * a view via the shared seqPatternFrom.
     */
   def catchUpSeq(spark: SparkSession, watchDir: String,
-                 storeDir: String): Unit = {
-    Graft.ensureConf(spark)
-    if (!hasParquet(spark, watchDir)) return
-    val schema = spark.read.parquet(watchDir).schema
-    val events = spark.readStream.schema(schema).parquet(watchDir)
-    val q = events.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        batch
-          .filter(col("ts").isNotNull && col("user_id").isNotNull)
-          .select(col("user_id"), expr("graft_ts_us(ts)").as("tus"),
-            col("event_id"), substring(col("event_type"), 1, 1).as("c"))
-          .groupBy(col("user_id"))
-          .agg(collect_list(struct(col("tus"), col("event_id"), col("c")))
-            .as("buf"))
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/frags/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                 storeDir: String): Unit =
+    maintain(spark, watchDir, storeDir) { (batch, put) =>
+      put(batch
+        .filter(col("ts").isNotNull && col("user_id").isNotNull)
+        .select(col("user_id"), expr("graft_ts_us(ts)").as("tus"),
+          col("event_id"), substring(col("event_type"), 1, 1).as("c"))
+        .groupBy(col("user_id"))
+        .agg(collect_list(struct(col("tus"), col("event_id"), col("c")))
+          .as("buf")), "frags")
+    }
 
   def storedSeq(spark: SparkSession, storeDir: String): DataFrame = {
     Graft.ensureConf(spark)
@@ -2420,15 +1797,8 @@ object SignatureStore {
     * pieces), then the regex report; shares `q_seq_pattern`'s oracle.
     */
   def gatedSeq(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_seq_watch")
-    val store = tempDirForExit("graft_gate_seq_store")
-    val ev = Graft.table(spark, sfDir, "events")
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpSeq(spark, watch, store)
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpSeq(spark, watch, store)
+    val store = gateStore(spark, sfDir, "events", parity("event_id"),
+      "seq")(catchUpSeq)
     storedSeq(spark, store)
   }
 
@@ -2465,15 +1835,8 @@ object SignatureStore {
     * shuffled fragments); shares `q_survival`'s oracle.
     */
   def gatedSurvival(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_survival_watch")
-    val store = tempDirForExit("graft_gate_survival_store")
-    val ev = Graft.table(spark, sfDir, "events")
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpSeq(spark, watch, store)
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpSeq(spark, watch, store)
+    val store = gateStore(spark, sfDir, "events", parity("event_id"),
+      "survival")(catchUpSeq)
     storedSurvival(spark, store)
   }
 
@@ -2484,15 +1847,8 @@ object SignatureStore {
     */
   def gatedSurvivalLogrank(spark: SparkSession,
                            sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_logrank_watch")
-    val store = tempDirForExit("graft_gate_logrank_store")
-    val ev = Graft.table(spark, sfDir, "events")
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpSeq(spark, watch, store)
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpSeq(spark, watch, store)
+    val store = gateStore(spark, sfDir, "events", parity("event_id"),
+      "logrank")(catchUpSeq)
     val frags = storedOrEmpty(spark, s"$store/frags",
       emptyLike(spark, spark.range(0).selectExpr("id AS user_id",
         "array(struct(id AS tus, id AS event_id, " +
@@ -2516,23 +1872,11 @@ object SignatureStore {
     * never re-read.
     */
   def catchUpGraph(spark: SparkSession, watchDir: String,
-                   storeDir: String): Unit = {
-    Graft.ensureConf(spark)
-    if (!hasParquet(spark, watchDir)) return
-    val schema = spark.read.parquet(watchDir).schema
-    val ev = spark.readStream.schema(schema).parquet(watchDir)
-    val q = ev.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.analytics.Graph.fwdPairs(
-            graft.core.Transform.extractFrom(batch))
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/edges/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                   storeDir: String): Unit =
+    maintain(spark, watchDir, storeDir) { (batch, put) =>
+      put(graft.analytics.Graph.fwdPairs(
+          graft.core.Transform.extractFrom(batch)), "edges")
+    }
 
   /** Incremental COHESION store: per-batch DISTINCT (s, o)
     * interaction pairs (union-distinct-additive, the 48m discipline on
@@ -2543,23 +1887,11 @@ object SignatureStore {
     * time through the batch faces' shared cores over the stored union.
     */
   def catchUpCohesion(spark: SparkSession, watchDir: String,
-                      storeDir: String): Unit = {
-    Graft.ensureConf(spark)
-    if (!hasParquet(spark, watchDir)) return
-    val schema = spark.read.parquet(watchDir).schema
-    val ev = spark.readStream.schema(schema).parquet(watchDir)
-    val q = ev.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.core.Transform.extractFrom(batch)
-          .select(col("s"), col("o")).distinct()
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/so/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                      storeDir: String): Unit =
+    maintain(spark, watchDir, storeDir) { (batch, put) =>
+      put(graft.core.Transform.extractFrom(batch)
+        .select(col("s"), col("o")).distinct(), "so")
+    }
 
   private def storedSo(spark: SparkSession, storeDir: String): DataFrame =
     storedOrEmpty(spark, s"$storeDir/so",
@@ -2567,18 +1899,8 @@ object SignatureStore {
       .select(col("s"), col("o"))
 
   private def cohesionStore(spark: SparkSession, sfDir: String,
-                            name: String): String = {
-    val watch = tempDirForExit(s"graft_gate_${name}_watch")
-    val store = tempDirForExit(s"graft_gate_${name}_store")
-    val ev = Graft.table(spark, sfDir, "events")
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpCohesion(spark, watch, store)
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpCohesion(spark, watch, store)
-    store
-  }
+                            name: String): String =
+    gateStore(spark, sfDir, "events", parity("event_id"), name)(catchUpCohesion)
 
   /** Driver-gate faces: event-parity appends (most pairs land in both
     * batches — the union-distinct does real work), then the query-time
@@ -2761,41 +2083,20 @@ object SignatureStore {
   }
 
   def gatedKatz(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_katz_watch")
-    val store = tempDirForExit("graft_gate_katz_store")
-    val ev = Graft.table(spark, sfDir, "events")
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpGraph(spark, watch, store)
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpGraph(spark, watch, store)
+    val store = gateStore(spark, sfDir, "events", parity("event_id"),
+      "katz")(catchUpGraph)
     storedKatz(spark, store)
   }
 
   def gatedHits(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_hits_watch")
-    val store = tempDirForExit("graft_gate_hits_store")
-    val ev = Graft.table(spark, sfDir, "events")
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpGraph(spark, watch, store)
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpGraph(spark, watch, store)
+    val store = gateStore(spark, sfDir, "events", parity("event_id"),
+      "hits")(catchUpGraph)
     storedHits(spark, store)
   }
 
   def gatedPpr(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_ppr_watch")
-    val store = tempDirForExit("graft_gate_ppr_store")
-    val ev = Graft.table(spark, sfDir, "events")
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpGraph(spark, watch, store)
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpGraph(spark, watch, store)
+    val store = gateStore(spark, sfDir, "events", parity("event_id"),
+      "ppr")(catchUpGraph)
     storedPpr(spark, store)
   }
 
@@ -2805,15 +2106,8 @@ object SignatureStore {
     * oracle.
     */
   def gatedGraph(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_graph_watch")
-    val store = tempDirForExit("graft_gate_graph_store")
-    val ev = Graft.table(spark, sfDir, "events")
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpGraph(spark, watch, store)
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpGraph(spark, watch, store)
+    val store = gateStore(spark, sfDir, "events", parity("event_id"),
+      "graph")(catchUpGraph)
     storedPagerank(spark, store)
   }
 
@@ -2824,62 +2118,32 @@ object SignatureStore {
     * (distinct-union-take-k). This is how a production pipeline
     * actually keeps corpus-wide sketches current: each arriving
     * partition contributes a partition-sized sketch, and no stored
-    * event is ever re-read or re-hashed. Per-batch partition
-    * overwrite keeps replay idempotent, same as catchUp.
+    * event is ever re-read or re-hashed.
     */
   def catchUpEventSketches(spark: SparkSession, watchDir: String,
-                           storeDir: String): Unit = {
-    Graft.ensureConf(spark)
-    graft.functions.NativeFunctions.register(spark)
-    import graft.analytics.Sketches
-    if (!hasParquet(spark, watchDir)) return // nothing has arrived yet
-    val schema = spark.read.option("pathGlobFilter", "*.parquet")
-      .parquet(watchDir).schema
-    val ev = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "*.parquet").parquet(watchDir)
-    val q = ev.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        Sketches.cmsCounters(batch.select(col("user_id")))
-          .write.mode("overwrite").parquet(s"$storeDir/cms_part/batch=$id")
-        Sketches.kmvSets(Sketches.kmvHashes(batch))
-          .write.mode("overwrite").parquet(s"$storeDir/kmv_part/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                           storeDir: String): Unit =
+    maintain(spark, watchDir, storeDir) { (batch, put) =>
+      put(Sketches.cmsCounters(batch.select(col("user_id"))), "cms_part")
+      put(Sketches.kmvSets(Sketches.kmvHashes(batch)), "kmv_part")
+    }
 
   /** Lineitem twin: HLL register maxima merge by max, histogram bin
     * counts merge by sum.
     */
   def catchUpLineitemSketches(spark: SparkSession, watchDir: String,
-                              storeDir: String): Unit = {
-    Graft.ensureConf(spark)
-    graft.functions.NativeFunctions.register(spark)
-    import graft.analytics.Sketches
-    if (!hasParquet(spark, watchDir)) return // nothing has arrived yet
-    val schema = spark.read.option("pathGlobFilter", "*.parquet")
-      .parquet(watchDir).schema
-    val li = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "*.parquet").parquet(watchDir)
-    val q = li.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        Sketches.hashRho(batch.select(col("l_returnflag"), col("l_orderkey")))
-          .groupBy(col("l_returnflag"), col("reg"))
-          .agg(org.apache.spark.sql.functions.max(col("rho")).as("mj"))
-          .write.mode("overwrite").parquet(s"$storeDir/hll_part/batch=$id")
-        Sketches.qtileBins(
-            batch.select(col("l_returnflag"), col("l_extendedprice")))
-          .groupBy(col("l_returnflag"), col("bin"))
-          .agg(org.apache.spark.sql.functions.count(lit(1)).as("c"))
-          .write.mode("overwrite").parquet(s"$storeDir/qtile_part/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                              storeDir: String): Unit =
+    maintain(spark, watchDir, storeDir) { (batch, put) =>
+      put(Sketches.hashRho(
+          batch.select(col("l_returnflag"), col("l_orderkey")))
+        .groupBy(col("l_returnflag"), col("reg"))
+        .agg(org.apache.spark.sql.functions.max(col("rho")).as("mj")),
+        "hll_part")
+      put(Sketches.qtileBins(
+          batch.select(col("l_returnflag"), col("l_extendedprice")))
+        .groupBy(col("l_returnflag"), col("bin"))
+        .agg(org.apache.spark.sql.functions.count(lit(1)).as("c")),
+        "qtile_part")
+    }
 
   def storedCells(spark: SparkSession, storeDir: String): DataFrame =
     storedOrEmpty(spark, s"$storeDir/cells",
@@ -2903,6 +2167,31 @@ object SignatureStore {
   }
 
   // ---- driver-gate faces ---------------------------------------------
+
+  /** The two-arrival harness shared by every driver-gate store face:
+    * fresh watch and store dirs, then `table` lands as
+    * `filter(split)`, `catchUpFn` catches up, `filter(!split)` lands and
+    * `catchUpFn` catches up again. Returns the store dir for whichever
+    * view the face reads. A row whose split is null lands in neither
+    * arrival: the splits key on non-null ids, except the markov time
+    * cut, whose catch-up drops null-ts events anyway.
+    */
+  private def gateStore(spark: SparkSession, sfDir: String, table: String,
+                        split: Column, tag: String)
+                       (catchUpFn: (SparkSession, String, String) => Unit)
+      : String = {
+    val watch = tempDirForExit(s"graft_gate_${tag}_watch")
+    val store = tempDirForExit(s"graft_gate_${tag}_store")
+    val t = Graft.table(spark, sfDir, table)
+    land(t.filter(split), watch, "arrival1.parquet")
+    catchUpFn(spark, watch, store)
+    land(t.filter(!split), watch, "arrival2.parquet")
+    catchUpFn(spark, watch, store)
+    store
+  }
+
+  /** Even ids arrive first, odd ids second (`pmod` is never negative). */
+  private def parity(idCol: String): Column = pmod(col(idCol), lit(2)) === 0
 
   /** Land `df` as one flat parquet file `$dir/$name` - the shape a
     * corpus append drops into a watched directory. Gate harness only
@@ -3000,20 +2289,14 @@ object SignatureStore {
         storedCandidates(spark, store), storedShingles(spark, store))
       .select(col("doc_a"), col("doc_b"))
     val (clusters, _) = Dedup.resolveComponents(spark, edges)
-    val watch = tempDirForExit("graft_gate_kbl_watch")
-    val lmStore = tempDirForExit("graft_gate_kbl_store")
-    val docs = Graft.table(spark, sfDir, "documents")
-    land(docs.filter(pmod(col("doc_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpLm(spark, watch, lmStore)
-    land(docs.filter(pmod(col("doc_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpLm(spark, watch, lmStore)
+    val lmStore = gateStore(spark, sfDir, "documents", parity("doc_id"),
+      "kbl")(catchUpLm)
     val docTerms = storedOrEmpty(spark, s"$lmStore/lm_doc_terms",
       emptyLike(spark, spark.range(0)
         .selectExpr("id AS doc_id", "'' AS term", "id AS k")))
     Dedup.dedupKeepBestFrom(clusters,
-      lmNllAgainstStore(spark, lmStore, docTerms), docs)
+      lmNllAgainstStore(spark, lmStore, docTerms),
+      Graft.table(spark, sfDir, "documents"))
   }
 
   /** Edit-verify view over the same incrementally-banded document
@@ -3053,18 +2336,8 @@ object SignatureStore {
     * derivation must absorb.
     */
   private def freshDocStore(spark: SparkSession, sfDir: String,
-                            tag: String): String = {
-    val watch = tempDirForExit(s"graft_gate_${tag}_watch")
-    val store = tempDirForExit(s"graft_gate_${tag}_store")
-    val docs = Graft.table(spark, sfDir, "documents")
-    land(docs.filter(pmod(col("doc_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUp(spark, watch, store)
-    land(docs.filter(pmod(col("doc_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUp(spark, watch, store)
-    store
-  }
+                            tag: String): String =
+    gateStore(spark, sfDir, "documents", parity("doc_id"), tag)(catchUp)
 
   /** Span twin: fresh incremental span store over two appends,
     * answering with the same coverage relation `dd_dup_spans` computes
@@ -3074,15 +2347,8 @@ object SignatureStore {
     * counts must catch.
     */
   def gatedDupSpans(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_span_watch")
-    val store = tempDirForExit("graft_gate_span_store")
-    val docs = Graft.table(spark, sfDir, "documents")
-    land(docs.filter(pmod(col("doc_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpSpans(spark, watch, store)
-    land(docs.filter(pmod(col("doc_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpSpans(spark, watch, store)
+    val store = gateStore(spark, sfDir, "documents", parity("doc_id"),
+      "span")(catchUpSpans)
     storedDupSpans(spark, store)
   }
 
@@ -3094,15 +2360,8 @@ object SignatureStore {
     * which is exactly what deferring scoring to query time buys.
     */
   def gatedQualityGate(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_lm_watch")
-    val store = tempDirForExit("graft_gate_lm_store")
-    val docs = Graft.table(spark, sfDir, "documents")
-    land(docs.filter(pmod(col("doc_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpLm(spark, watch, store)
-    land(docs.filter(pmod(col("doc_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpLm(spark, watch, store)
+    val store = gateStore(spark, sfDir, "documents", parity("doc_id"),
+      "lm")(catchUpLm)
     storedQualityGate(spark, store)
   }
 
@@ -3134,15 +2393,8 @@ object SignatureStore {
     * appends, then the cap - matching the one-shot `pipe_source_cap`.
     */
   def gatedSourceCap(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_scap_watch")
-    val store = tempDirForExit("graft_gate_scap_store")
-    val docs = Graft.table(spark, sfDir, "documents")
-    land(docs.filter(pmod(col("doc_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpLm(spark, watch, store)
-    land(docs.filter(pmod(col("doc_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpLm(spark, watch, store)
+    val store = gateStore(spark, sfDir, "documents", parity("doc_id"),
+      "scap")(catchUpLm)
     storedSourceCap(spark, store)
   }
 
@@ -3174,50 +2426,33 @@ object SignatureStore {
 
   private def maintainLm2(spark: SparkSession, watchDir: String,
                           storeDir: String, glob: String,
-                          admissions: Boolean): Unit = {
-    Graft.ensureConf(spark)
-    if (!hasParquet(spark, watchDir)) return
-    val schema = spark.read.option("pathGlobFilter", glob)
-      .parquet(watchDir).schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", glob).parquet(watchDir)
-    val q = docs.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val toks = TextAnalysis.bigramDocToks(batch).persist()
-        val pairs = TextAnalysis.bigramPairs(toks)
-          .groupBy(col("doc_id"), col("w1"), col("w2"))
-          .agg(org.apache.spark.sql.functions.count(lit(1)).as("k"))
-          .persist()
-        try {
-          pairs.write.mode("overwrite")
-            .parquet(s"$storeDir/lm2_doc_bigrams/batch=$id")
-          pairs.groupBy(col("w1"), col("w2"))
-            .agg(org.apache.spark.sql.functions.sum(col("k")).as("n"))
-            .write.mode("overwrite")
-            .parquet(s"$storeDir/lm2_bigram_counts/batch=$id")
-          toks.select(org.apache.spark.sql.functions.explode(col("ts"))
-              .as("term"))
-            .groupBy(col("term"))
-            .agg(org.apache.spark.sql.functions.count(lit(1)).as("n"))
-            .write.mode("overwrite")
-            .parquet(s"$storeDir/lm2_term_counts/batch=$id")
-          if (admissions) {
-            // score THIS batch against the store's current partials
-            // (the freshly-written ones included) - the query-time
-            // scoring core restricted to the batch's docs
-            val dbg = spark.read
-              .parquet(s"$storeDir/lm2_doc_bigrams/batch=$id")
-            bigramNllAgainstStore(spark, storeDir, dbg)
-              .write.mode("overwrite")
-              .parquet(s"$storeDir/lm2_admissions/batch=$id")
-          }
-        } finally { pairs.unpersist(); toks.unpersist() }
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                          admissions: Boolean): Unit =
+    maintain(spark, watchDir, storeDir, glob) { (batch, put) =>
+      val toks = TextAnalysis.bigramDocToks(batch).persist()
+      val pairs = TextAnalysis.bigramPairs(toks)
+        .groupBy(col("doc_id"), col("w1"), col("w2"))
+        .agg(org.apache.spark.sql.functions.count(lit(1)).as("k"))
+        .persist()
+      try {
+        put(pairs, "lm2_doc_bigrams")
+        put(pairs.groupBy(col("w1"), col("w2"))
+          .agg(org.apache.spark.sql.functions.sum(col("k")).as("n")),
+          "lm2_bigram_counts")
+        put(toks.select(org.apache.spark.sql.functions.explode(col("ts"))
+            .as("term"))
+          .groupBy(col("term"))
+          .agg(org.apache.spark.sql.functions.count(lit(1)).as("n")),
+          "lm2_term_counts")
+        if (admissions) {
+          // score THIS batch against the store's current partials
+          // (the freshly-written ones included) - the query-time
+          // scoring core restricted to the batch's docs
+          val dbg = spark.read
+            .parquet(put.path("lm2_doc_bigrams"))
+          put(bigramNllAgainstStore(spark, storeDir, dbg), "lm2_admissions")
+        }
+      } finally { pairs.unpersist(); toks.unpersist() }
+    }
 
   /** Per-doc bigram NLL from the store's current partials: bigram and
     * unigram counts summed across batches, per-bigram scores computed
@@ -3268,15 +2503,8 @@ object SignatureStore {
       .orderBy(col("doc_id"))
 
   def gatedBigramNll(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_lm2_watch")
-    val store = tempDirForExit("graft_gate_lm2_store")
-    val docs = Graft.table(spark, sfDir, "documents")
-    land(docs.filter(pmod(col("doc_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpLm2(spark, watch, store)
-    land(docs.filter(pmod(col("doc_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpLm2(spark, watch, store)
+    val store = gateStore(spark, sfDir, "documents", parity("doc_id"),
+      "lm2")(catchUpLm2(_, _, _))
     storedBigramNll(spark, store)
   }
 
@@ -3311,15 +2539,8 @@ object SignatureStore {
   }
 
   def gatedKnNll(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_kn_watch")
-    val store = tempDirForExit("graft_gate_kn_store")
-    val docs = Graft.table(spark, sfDir, "documents")
-    land(docs.filter(pmod(col("doc_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpLm2(spark, watch, store)
-    land(docs.filter(pmod(col("doc_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpLm2(spark, watch, store)
+    val store = gateStore(spark, sfDir, "documents", parity("doc_id"),
+      "kn")(catchUpLm2(_, _, _))
     storedKnNll(spark, store)
   }
 
@@ -3341,15 +2562,8 @@ object SignatureStore {
   }
 
   def gatedPmi(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_pmi_watch")
-    val store = tempDirForExit("graft_gate_pmi_store")
-    val docs = Graft.table(spark, sfDir, "documents")
-    land(docs.filter(pmod(col("doc_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpLm2(spark, watch, store)
-    land(docs.filter(pmod(col("doc_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpLm2(spark, watch, store)
+    val store = gateStore(spark, sfDir, "documents", parity("doc_id"),
+      "pmi")(catchUpLm2(_, _, _))
     storedPmi(spark, store)
   }
 
@@ -3364,26 +2578,14 @@ object SignatureStore {
     * store's ranking axis).
     */
   def catchUpTfidf(spark: SparkSession, watchDir: String,
-                   storeDir: String): Unit = {
-    Graft.ensureConf(spark)
-    if (!hasParquet(spark, watchDir)) return
-    val schema = spark.read.parquet(watchDir).schema
-    val docs = spark.readStream.schema(schema).parquet(watchDir)
-    val q = docs.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        batch
-          .select(col("doc_id"), explode(expr(
-            "regexp_extract_all(lower(text), '[a-z0-9]+', 0)")).as("term"))
-          .groupBy(col("doc_id"), col("term"))
-          .agg(count(lit(1)).as("c"))
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/tf/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                   storeDir: String): Unit =
+    maintain(spark, watchDir, storeDir) { (batch, put) =>
+      put(batch
+        .select(col("doc_id"), explode(expr(
+          "regexp_extract_all(lower(text), '[a-z0-9]+', 0)")).as("term"))
+        .groupBy(col("doc_id"), col("term"))
+        .agg(count(lit(1)).as("c")), "tf")
+    }
 
   def storedTfidf(spark: SparkSession, storeDir: String): DataFrame = {
     Graft.ensureConf(spark)
@@ -3402,15 +2604,8 @@ object SignatureStore {
     * `txt_tfidf`'s oracle.
     */
   def gatedTfidf(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_tfidf_watch")
-    val store = tempDirForExit("graft_gate_tfidf_store")
-    val docs = Graft.table(spark, sfDir, "documents")
-    land(docs.filter(pmod(col("doc_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpTfidf(spark, watch, store)
-    land(docs.filter(pmod(col("doc_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpTfidf(spark, watch, store)
+    val store = gateStore(spark, sfDir, "documents", parity("doc_id"),
+      "tfidf")(catchUpTfidf)
     storedTfidf(spark, store)
   }
 
@@ -3422,32 +2617,17 @@ object SignatureStore {
     * doc_id can land anywhere in the global doc order, shifting every
     * later document's token offset — so segment rows are never
     * storable per batch, but the derivation input is the SIZE
-    * relation, not the corpus. Per-batch partition overwrite keeps
-    * replay idempotent, same as catchUp.
+    * relation, not the corpus.
     */
   def catchUpPack(spark: SparkSession, watchDir: String,
-                  storeDir: String): Unit = {
-    Graft.ensureConf(spark)
-    if (!hasParquet(spark, watchDir)) return
-    val schema = spark.read.option("pathGlobFilter", "*.parquet")
-      .parquet(watchDir).schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "*.parquet").parquet(watchDir)
-    val q = docs.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        batch
-          .select(col("doc_id"), expr(
-            "CAST(size(regexp_extract_all(text, '\\\\S+', 0)) AS BIGINT)")
-            .as("n_ws"))
-          .filter(col("n_ws") >= 1L)
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/pack_sized/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                  storeDir: String): Unit =
+    maintain(spark, watchDir, storeDir) { (batch, put) =>
+      put(batch
+        .select(col("doc_id"), expr(
+          "CAST(size(regexp_extract_all(text, '\\\\S+', 0)) AS BIGINT)")
+          .as("n_ws"))
+        .filter(col("n_ws") >= 1L), "pack_sized")
+    }
 
   /** The packing manifest from the stored size facts — literally the
     * batch `packSegmentsFrom`, so the store's answer matches
@@ -3468,15 +2648,8 @@ object SignatureStore {
     * the query-time packing; shares `pipe_pack_tokens`' oracle.
     */
   def gatedPackTokens(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_pack_watch")
-    val store = tempDirForExit("graft_gate_pack_store")
-    val docs = Graft.table(spark, sfDir, "documents")
-    land(docs.filter(pmod(col("doc_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpPack(spark, watch, store)
-    land(docs.filter(pmod(col("doc_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpPack(spark, watch, store)
+    val store = gateStore(spark, sfDir, "documents", parity("doc_id"),
+      "pack")(catchUpPack)
     storedPackTokens(spark, store)
   }
 
@@ -3491,23 +2664,11 @@ object SignatureStore {
     * per batch.
     */
   def catchUpSimhash(spark: SparkSession, watchDir: String,
-                     storeDir: String): Unit = {
-    Graft.ensureConf(spark)
-    if (!hasParquet(spark, watchDir)) return
-    val schema = spark.read.parquet(watchDir).schema
-    val docs = spark.readStream.schema(schema).parquet(watchDir)
-    val q = docs.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        Dedup.shinglesFrom(batch)
-          .select(col("doc_id"), expr("graft_simhash48(hst)").as("sim"))
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/sig/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                     storeDir: String): Unit =
+    maintain(spark, watchDir, storeDir) { (batch, put) =>
+      put(Dedup.shinglesFrom(batch)
+        .select(col("doc_id"), expr("graft_simhash48(hst)").as("sim")), "sig")
+    }
 
   def storedSimhashPairs(spark: SparkSession,
                          storeDir: String): DataFrame = {
@@ -3521,15 +2682,8 @@ object SignatureStore {
     * join; shares `dd_simhash`'s oracle.
     */
   def gatedSimhash(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_simhash_watch")
-    val store = tempDirForExit("graft_gate_simhash_store")
-    val docs = Graft.table(spark, sfDir, "documents")
-    land(docs.filter(pmod(col("doc_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpSimhash(spark, watch, store)
-    land(docs.filter(pmod(col("doc_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpSimhash(spark, watch, store)
+    val store = gateStore(spark, sfDir, "documents", parity("doc_id"),
+      "simhash")(catchUpSimhash)
     storedSimhashPairs(spark, store)
   }
 
@@ -3543,48 +2697,29 @@ object SignatureStore {
     * discipline across signatures.
     */
   def catchUpAhash(spark: SparkSession, watchDir: String,
-                   storeDir: String): Unit = {
-    Graft.ensureConf(spark)
-    if (!hasParquet(spark, watchDir)) return
-    val schema = spark.read.parquet(watchDir).schema
-    val docs = spark.readStream.schema(schema).parquet(watchDir)
-    val q = docs.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val s2 = batch.sparkSession
-        import s2.implicits._
-        batch.select(col("doc_id")).as[Long]
-          .mapPartitions { ids =>
-            ids.map { did =>
-              val w = 16 + (did % 17).toInt
-              val h = 8 + (did % 11).toInt
-              (did, Multimodal.bmpAhash48(did,
-                Multimodal.bmpEncodeScene(did, w, h)))
-            }
+                   storeDir: String): Unit =
+    maintain(spark, watchDir, storeDir) { (batch, put) =>
+      val s2 = batch.sparkSession
+      import s2.implicits._
+      put(batch.select(col("doc_id")).as[Long]
+        .mapPartitions { ids =>
+          ids.map { did =>
+            val w = 16 + (did % 17).toInt
+            val h = 8 + (did % 11).toInt
+            (did, Multimodal.bmpAhash48(did,
+              Multimodal.bmpEncodeScene(did, w, h)))
           }
-          .toDF("doc_id", "sim")
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/sig/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+        }
+        .toDF("doc_id", "sim"), "sig")
+    }
 
   /** Driver-gate face: doc-parity appends, query-time pair join;
     * shares `mm_ahash_pairs`' oracle (and `storedSimhashPairs`' view —
     * the stored relation is the same (doc_id, sim) shape).
     */
   def gatedAhash(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_ahash_watch")
-    val store = tempDirForExit("graft_gate_ahash_store")
-    val docs = Graft.table(spark, sfDir, "documents")
-    land(docs.filter(pmod(col("doc_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpAhash(spark, watch, store)
-    land(docs.filter(pmod(col("doc_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpAhash(spark, watch, store)
+    val store = gateStore(spark, sfDir, "documents", parity("doc_id"),
+      "ahash")(catchUpAhash)
     storedSimhashPairs(spark, store)
   }
 
@@ -3594,47 +2729,28 @@ object SignatureStore {
     * the per-doc report is a plain projection of the stored facts.
     */
   def catchUpPhash(spark: SparkSession, watchDir: String,
-                   storeDir: String): Unit = {
-    Graft.ensureConf(spark)
-    if (!hasParquet(spark, watchDir)) return
-    val schema = spark.read.parquet(watchDir).schema
-    val docs = spark.readStream.schema(schema).parquet(watchDir)
-    val q = docs.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val s2 = batch.sparkSession
-        import s2.implicits._
-        batch.select(col("doc_id")).as[Long]
-          .mapPartitions { ids =>
-            ids.map { did =>
-              val w = 16 + (did % 17).toInt
-              val h = 8 + (did % 11).toInt
-              (did, Multimodal.bmpPhash(did,
-                Multimodal.bmpEncodeScene(did, w, h)))
-            }
+                   storeDir: String): Unit =
+    maintain(spark, watchDir, storeDir) { (batch, put) =>
+      val s2 = batch.sparkSession
+      import s2.implicits._
+      put(batch.select(col("doc_id")).as[Long]
+        .mapPartitions { ids =>
+          ids.map { did =>
+            val w = 16 + (did % 17).toInt
+            val h = 8 + (did % 11).toInt
+            (did, Multimodal.bmpPhash(did,
+              Multimodal.bmpEncodeScene(did, w, h)))
           }
-          .toDF("doc_id", "phash")
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/sig/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+        }
+        .toDF("doc_id", "phash"), "sig")
+    }
 
   /** Driver-gate face: doc-parity appends, per-doc projection; shares
     * `mm_phash`'s oracle.
     */
   def gatedPhash(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_phash_watch")
-    val store = tempDirForExit("graft_gate_phash_store")
-    val docs = Graft.table(spark, sfDir, "documents")
-    land(docs.filter(pmod(col("doc_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpPhash(spark, watch, store)
-    land(docs.filter(pmod(col("doc_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpPhash(spark, watch, store)
+    val store = gateStore(spark, sfDir, "documents", parity("doc_id"),
+      "phash")(catchUpPhash)
     storedOrEmpty(spark, s"$store/sig",
       emptyLike(spark, spark.range(0).selectExpr(
         "id AS doc_id", "id AS phash")))
@@ -3654,22 +2770,10 @@ object SignatureStore {
     * every serve.
     */
   def catchUpSemantic(spark: SparkSession, watchDir: String,
-                      storeDir: String): Unit = {
-    Graft.ensureConf(spark)
-    if (!hasParquet(spark, watchDir)) return
-    val schema = spark.read.parquet(watchDir).schema
-    val vecs = spark.readStream.schema(schema).parquet(watchDir)
-    val q = vecs.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        batch.select(col("vec_id"), col("embedding"))
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/vec/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                      storeDir: String): Unit =
+    maintain(spark, watchDir, storeDir) { (batch, put) =>
+      put(batch.select(col("vec_id"), col("embedding")), "vec")
+    }
 
   def storedSemantic(spark: SparkSession, storeDir: String,
                      sfDir: String): DataFrame = {
@@ -3687,15 +2791,8 @@ object SignatureStore {
     * then the query-time verdict; shares `dd_semantic`'s oracle.
     */
   def gatedSemantic(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_sem_watch")
-    val store = tempDirForExit("graft_gate_sem_store")
-    val vecs = Graft.table(spark, sfDir, "embeddings")
-    land(vecs.filter(pmod(col("vec_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpSemantic(spark, watch, store)
-    land(vecs.filter(pmod(col("vec_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpSemantic(spark, watch, store)
+    val store = gateStore(spark, sfDir, "embeddings", parity("vec_id"),
+      "sem")(catchUpSemantic)
     storedSemantic(spark, store, sfDir)
   }
 
@@ -3713,34 +2810,21 @@ object SignatureStore {
     */
   def catchUpBm25(spark: SparkSession, watchDir: String,
                   storeDir: String): Unit = {
-    Graft.ensureConf(spark)
-    if (!hasParquet(spark, watchDir)) return
     val ql = graft.pipeline.TextAnalysis.bm25QueryTerms
       .map(t => s"'$t'").mkString(", ")
-    val schema = spark.read.parquet(watchDir).schema
-    val docs = spark.readStream.schema(schema).parquet(watchDir)
-    val q = docs.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // tokenize once per batch; both landed relations read the
-        // materialized token arrays, not two re-tokenizations
-        val toks = batch.select(col("doc_id"), expr(
-            "regexp_extract_all(lower(text), '[a-z0-9]+', 0)").as("ts"))
-          .localCheckpoint()
-        toks.select(col("doc_id"),
-            size(col("ts")).cast("long").as("dl"))
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/len/batch=$id")
-        toks.select(col("doc_id"),
-            explode(expr(s"filter(ts, t -> t IN ($ql))")).as("term"))
-          .groupBy(col("doc_id"), col("term"))
-          .agg(count(lit(1)).as("c"))
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/tf/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    maintain(spark, watchDir, storeDir) { (batch, put) =>
+      // tokenize once per batch; both landed relations read the
+      // materialized token arrays, not two re-tokenizations
+      val toks = batch.select(col("doc_id"), expr(
+          "regexp_extract_all(lower(text), '[a-z0-9]+', 0)").as("ts"))
+        .localCheckpoint()
+      put(toks.select(col("doc_id"),
+          size(col("ts")).cast("long").as("dl")), "len")
+      put(toks.select(col("doc_id"),
+          explode(expr(s"filter(ts, t -> t IN ($ql))")).as("term"))
+        .groupBy(col("doc_id"), col("term"))
+        .agg(count(lit(1)).as("c")), "tf")
+    }
   }
 
   def storedBm25(spark: SparkSession, storeDir: String): DataFrame = {
@@ -3768,15 +2852,8 @@ object SignatureStore {
     * `txt_bm25`'s oracle.
     */
   def gatedBm25(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_bm25_watch")
-    val store = tempDirForExit("graft_gate_bm25_store")
-    val docs = Graft.table(spark, sfDir, "documents")
-    land(docs.filter(pmod(col("doc_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpBm25(spark, watch, store)
-    land(docs.filter(pmod(col("doc_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpBm25(spark, watch, store)
+    val store = gateStore(spark, sfDir, "documents", parity("doc_id"),
+      "bm25")(catchUpBm25)
     storedBm25(spark, store)
   }
 
@@ -3794,31 +2871,17 @@ object SignatureStore {
     * store, an n-gram relation cannot merge a doc split mid-text.
     */
   def catchUpBackoff(spark: SparkSession, watchDir: String,
-                     storeDir: String): Unit = {
-    Graft.ensureConf(spark)
-    if (!hasParquet(spark, watchDir)) return
-    val schema = spark.read.parquet(watchDir).schema
-    val docs = spark.readStream.schema(schema).parquet(watchDir)
-    val q = docs.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val toks = graft.pipeline.TextAnalysis.backoffDocToks(batch)
-          .localCheckpoint()
-        val train = toks.filter(pmod(col("doc_id"), lit(2)) === 0)
-        graft.pipeline.TextAnalysis.backoffUni(train)
-          .write.mode("overwrite").parquet(s"$storeDir/uni/batch=$id")
-        graft.pipeline.TextAnalysis.backoffBg(train)
-          .write.mode("overwrite").parquet(s"$storeDir/bg/batch=$id")
-        graft.pipeline.TextAnalysis.backoffTg(train)
-          .write.mode("overwrite").parquet(s"$storeDir/tg/batch=$id")
-        graft.pipeline.TextAnalysis.backoffPos(
-            toks.filter(pmod(col("doc_id"), lit(2)) === 1))
-          .write.mode("overwrite").parquet(s"$storeDir/pos/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                     storeDir: String): Unit =
+    maintain(spark, watchDir, storeDir) { (batch, put) =>
+      val toks = graft.pipeline.TextAnalysis.backoffDocToks(batch)
+        .localCheckpoint()
+      val train = toks.filter(pmod(col("doc_id"), lit(2)) === 0)
+      put(graft.pipeline.TextAnalysis.backoffUni(train), "uni")
+      put(graft.pipeline.TextAnalysis.backoffBg(train), "bg")
+      put(graft.pipeline.TextAnalysis.backoffTg(train), "tg")
+      put(graft.pipeline.TextAnalysis.backoffPos(
+          toks.filter(pmod(col("doc_id"), lit(2)) === 1)), "pos")
+    }
 
   def storedBackoff(spark: SparkSession, storeDir: String): DataFrame = {
     Graft.ensureConf(spark)
@@ -3847,22 +2910,14 @@ object SignatureStore {
     * `txt_backoff_nll`'s oracle.
     */
   def gatedBackoff(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_sbo_watch")
-    val store = tempDirForExit("graft_gate_sbo_store")
-    val docs = Graft.table(spark, sfDir, "documents")
-    land(docs.filter(pmod(expr("doc_id DIV 2"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpBackoff(spark, watch, store)
-    land(docs.filter(pmod(expr("doc_id DIV 2"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpBackoff(spark, watch, store)
+    val store = gateStore(spark, sfDir, "documents",
+      pmod(expr("doc_id DIV 2"), lit(2)) === 0, "sbo")(catchUpBackoff)
     storedBackoff(spark, store)
   }
 
   /** Z-order layout incremental store: each arriving batch is
-    * z-order-WRITTEN into its own `zorder/batch=<id>` subtree
-    * (partition overwrite - a replayed batch rewrites its orphan
-    * idempotently), so the layout is maintained without ever rewriting
+    * z-order-WRITTEN into its own `zorder/batch=<id>` subtree, so the
+    * layout is maintained without ever rewriting
     * ingested data - the per-batch z-order is the incremental form of
     * a global OPTIMIZE, trading a bounded per-batch shard-file count
     * for zero-compaction appends. `shard` stays a partition column
@@ -3870,22 +2925,10 @@ object SignatureStore {
     * prunes at FileIndex level across all batches at once.
     */
   def catchUpLayout(spark: SparkSession, watchDir: String,
-                    storeDir: String, glob: String = "*.parquet"): Unit = {
-    Graft.ensureConf(spark)
-    if (!hasParquet(spark, watchDir)) return
-    val schema = spark.read.option("pathGlobFilter", glob)
-      .parquet(watchDir).schema
-    val ev = spark.readStream.schema(schema)
-      .option("pathGlobFilter", glob).parquet(watchDir)
-    val q = ev.writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        Layout.writeZOrdered(batch, s"$storeDir/zorder/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                    storeDir: String, glob: String = "*.parquet"): Unit =
+    maintain(spark, watchDir, storeDir, glob) { (batch, put) =>
+      Layout.writeZOrdered(batch, put.path("zorder"))
+    }
 
   /** Pruned box read across every ingested batch: one driver-side
     * candidate enumeration, one FileIndex-level `shard IN cands` cut
@@ -3903,15 +2946,8 @@ object SignatureStore {
 
   def gatedLayout(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.functions.expr
-    val watch = tempDirForExit("graft_gate_layout_watch")
-    val store = tempDirForExit("graft_gate_layout_store")
-    val ev = Graft.table(spark, sfDir, "events")
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpLayout(spark, watch, store)
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpLayout(spark, watch, store)
+    val store = gateStore(spark, sfDir, "events", parity("event_id"),
+      "layout")(catchUpLayout(_, _, _))
     spark.read.parquet(s"$store/zorder")
       .filter(col("ts").isNotNull && col("value").isNotNull)
       .select(col("event_id"), col("tb"), col("vb"), col("zkey"),
@@ -3927,16 +2963,9 @@ object SignatureStore {
     * adjunct comes from the static table, as in the streaming faces.
     */
   def gatedCmsTopk(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.analytics.Sketches
-    val watch = tempDirForExit("graft_gate_cms_watch")
-    val store = tempDirForExit("graft_gate_cms_store")
     val ev = Graft.table(spark, sfDir, "events")
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpEventSketches(spark, watch, store)
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpEventSketches(spark, watch, store)
+    val store = gateStore(spark, sfDir, "events", parity("event_id"),
+      "cms")(catchUpEventSketches)
     val counters = spark.read.parquet(s"$store/cms_part").drop("batch")
       .groupBy(col("r"), col("bkt"))
       .agg(org.apache.spark.sql.functions.sum(col("c")).as("c"))
@@ -3944,16 +2973,9 @@ object SignatureStore {
   }
 
   def gatedKmvJaccard(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.analytics.Sketches
-    val watch = tempDirForExit("graft_gate_kmv_watch")
-    val store = tempDirForExit("graft_gate_kmv_store")
     val ev = Graft.table(spark, sfDir, "events")
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpEventSketches(spark, watch, store)
-    land(ev.filter(pmod(col("event_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpEventSketches(spark, watch, store)
+    val store = gateStore(spark, sfDir, "events", parity("event_id"),
+      "kmv")(catchUpEventSketches)
     // KMV merge: the k smallest of the united buffers - batches x k
     // rows per group in, k out
     val merged = Sketches.kmvSets(
@@ -3967,16 +2989,9 @@ object SignatureStore {
   }
 
   def gatedHllDistinct(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.analytics.Sketches
-    val watch = tempDirForExit("graft_gate_hll_watch")
-    val store = tempDirForExit("graft_gate_hll_store")
     val li = Graft.table(spark, sfDir, "lineitem")
-    land(li.filter(pmod(col("l_orderkey"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpLineitemSketches(spark, watch, store)
-    land(li.filter(pmod(col("l_orderkey"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpLineitemSketches(spark, watch, store)
+    val store = gateStore(spark, sfDir, "lineitem", parity("l_orderkey"),
+      "hll")(catchUpLineitemSketches)
     val regs = spark.read.parquet(s"$store/hll_part").drop("batch")
       .groupBy(col("l_returnflag"), col("reg"))
       .agg(org.apache.spark.sql.functions.max(col("mj")).as("mj"))
@@ -3989,16 +3004,8 @@ object SignatureStore {
   }
 
   def gatedQtileSketch(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.analytics.Sketches
-    val watch = tempDirForExit("graft_gate_qt_watch")
-    val store = tempDirForExit("graft_gate_qt_store")
-    val li = Graft.table(spark, sfDir, "lineitem")
-    land(li.filter(pmod(col("l_orderkey"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpLineitemSketches(spark, watch, store)
-    land(li.filter(pmod(col("l_orderkey"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpLineitemSketches(spark, watch, store)
+    val store = gateStore(spark, sfDir, "lineitem", parity("l_orderkey"),
+      "qt")(catchUpLineitemSketches)
     Sketches.qtileEstimate(
       spark.read.parquet(s"$store/qtile_part").drop("batch")
         .groupBy(col("l_returnflag"), col("bin"))
@@ -4011,15 +3018,8 @@ object SignatureStore {
     * incremental store) share one oracle.
     */
   def gatedAnnCandidates(spark: SparkSession, sfDir: String): DataFrame = {
-    val watch = tempDirForExit("graft_gate_ann_watch")
-    val store = tempDirForExit("graft_gate_ann_store")
-    val embs = Graft.table(spark, sfDir, "embeddings")
-    land(embs.filter(pmod(col("vec_id"), lit(2)) === 0), watch,
-      "arrival1.parquet")
-    catchUpEmbeddings(spark, watch, store)
-    land(embs.filter(pmod(col("vec_id"), lit(2)) === 1), watch,
-      "arrival2.parquet")
-    catchUpEmbeddings(spark, watch, store)
+    val store = gateStore(spark, sfDir, "embeddings", parity("vec_id"),
+      "ann")(catchUpEmbeddings)
     storedAnnCandidates(spark, store).orderBy(col("vec_a"), col("vec_b"))
   }
 }
