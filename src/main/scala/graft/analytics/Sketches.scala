@@ -97,7 +97,6 @@ object Sketches {
 
   def qHllDistinct(spark: SparkSession, sfDir: String): DataFrame = {
     Graft.ensureConf(spark)
-    graft.functions.NativeFunctions.register(spark)
     val li = Graft.tableParallel(spark, sfDir, "lineitem")
       .select(col("l_returnflag"), col("l_orderkey"))
     // one (flag, key) distinct pass serves the register build (max is
@@ -249,7 +248,6 @@ object Sketches {
     */
   def qCmsJoinCard(spark: SparkSession, sfDir: String): DataFrame = {
     Graft.ensureConf(spark)
-    graft.functions.NativeFunctions.register(spark)
     val ev = Graft.tableParallel(spark, sfDir, "events")
       .filter(col("user_id").isNotNull)
     val purchases = ev.filter(col("event_type") === "purchase")
@@ -314,7 +312,6 @@ object Sketches {
     */
   def qCmsF2(spark: SparkSession, sfDir: String): DataFrame = {
     Graft.ensureConf(spark)
-    graft.functions.NativeFunctions.register(spark)
     val ev = Graft.tableParallel(spark, sfDir, "events")
       .filter(col("user_id").isNotNull)
       .select(col("user_id"))
@@ -658,7 +655,7 @@ object Sketches {
     // per-key serving plan stays live on this face; the full key list
     // is served by the batched MULTIGET (`getKeys` - the
     // ss_sink_point_read precedent): identical pruned single-bucket
-    // semantics, ONE job instead of |keys| footer+scan round trips.
+    // semantics, one read for the whole list instead of |keys|.
     val ets = sink.get(spark, "qt").select(col("et")).distinct()
       .orderBy(col("et")).collect().map(_.getString(0))
     require(ets.nonEmpty, "quantile sink published no keys")
@@ -1004,7 +1001,6 @@ object Sketches {
     */
   def qHllSliding(spark: SparkSession, sfDir: String): DataFrame = {
     Graft.ensureConf(spark)
-    graft.functions.NativeFunctions.register(spark)
     val ev = Graft.tableParallel(spark, sfDir, "events")
       .filter(col("ts").isNotNull && col("user_id").isNotNull)
       .select(expr(ParityMath.fdivSql("graft_ts_us(ts)", s"${slideBucketUs}L")).as("b"),
@@ -1175,7 +1171,6 @@ object Sketches {
 
   def qKmvJaccard(spark: SparkSession, sfDir: String): DataFrame = {
     Graft.ensureConf(spark)
-    graft.functions.NativeFunctions.register(spark)
     val hs = kmvHashes(Graft.tableParallel(spark, sfDir, "events"))
     // the per-group buffers are groups x k longs - small by
     // construction, the same legitimate collect as the IVF centroid
@@ -1206,7 +1201,6 @@ object Sketches {
 
   def qCmsSliding(spark: SparkSession, sfDir: String): DataFrame = {
     Graft.ensureConf(spark)
-    graft.functions.NativeFunctions.register(spark)
     val ev = Graft.tableParallel(spark, sfDir, "events")
       .filter(col("ts").isNotNull && col("user_id").isNotNull)
       .select(expr(ParityMath.fdivSql("graft_ts_us(ts)", s"${slideBucketUs}L")).as("b"),
@@ -1364,7 +1358,6 @@ object Sketches {
     */
   def qKmvRetention(spark: SparkSession, sfDir: String): DataFrame = {
     Graft.ensureConf(spark)
-    graft.functions.NativeFunctions.register(spark)
     // materialized once: three consumers walk this relation (the KMV
     // buffer fold, the per-bucket sizes and BOTH sides of the exact
     // h-keyed self-join) - unchecked, each re-ran the scan + hash +
@@ -1524,7 +1517,6 @@ object Sketches {
     */
   def qHllDistinctProd(spark: SparkSession, sfDir: String): DataFrame = {
     Graft.ensureConf(spark)
-    graft.functions.NativeFunctions.register(spark)
     val li = Graft.tableParallel(spark, sfDir, "lineitem")
       .select(col("l_returnflag"), col("l_orderkey"))
     val regs = hashRho(li)
@@ -1568,7 +1560,6 @@ object Sketches {
     */
   def qHllSlidingProd(spark: SparkSession, sfDir: String): DataFrame = {
     Graft.ensureConf(spark)
-    graft.functions.NativeFunctions.register(spark)
     val ev = Graft.tableParallel(spark, sfDir, "events")
       .filter(col("ts").isNotNull && col("user_id").isNotNull)
       .select(expr(ParityMath.fdivSql("graft_ts_us(ts)", s"${slideBucketUs}L")).as("b"),
@@ -1634,7 +1625,6 @@ object Sketches {
     */
   def qCmsTopkProd(spark: SparkSession, sfDir: String): DataFrame = {
     Graft.ensureConf(spark)
-    graft.functions.NativeFunctions.register(spark)
     val ev = Graft.table(spark, sfDir, "events").select(col("user_id"))
     val counters = cmsCounters(ev)
     val probes = ev.distinct()
@@ -1677,7 +1667,6 @@ object Sketches {
     */
   def qCmsSlidingProd(spark: SparkSession, sfDir: String): DataFrame = {
     Graft.ensureConf(spark)
-    graft.functions.NativeFunctions.register(spark)
     val ev = Graft.tableParallel(spark, sfDir, "events")
       .filter(col("ts").isNotNull && col("user_id").isNotNull)
       .select(expr(ParityMath.fdivSql("graft_ts_us(ts)", s"${slideBucketUs}L")).as("b"),
@@ -1768,7 +1757,6 @@ object Sketches {
     */
   def qCmsJoinCardProd(spark: SparkSession, sfDir: String): DataFrame = {
     Graft.ensureConf(spark)
-    graft.functions.NativeFunctions.register(spark)
     val ev = Graft.tableParallel(spark, sfDir, "events")
       .filter(col("user_id").isNotNull)
     val purchases = ev.filter(col("event_type") === "purchase")
@@ -1813,7 +1801,6 @@ object Sketches {
     */
   def qCmsF2Prod(spark: SparkSession, sfDir: String): DataFrame = {
     Graft.ensureConf(spark)
-    graft.functions.NativeFunctions.register(spark)
     val ev = Graft.tableParallel(spark, sfDir, "events")
       .filter(col("user_id").isNotNull)
       .select(col("user_id"))
@@ -1844,7 +1831,6 @@ object Sketches {
     */
   def qKmvJaccardProd(spark: SparkSession, sfDir: String): DataFrame = {
     Graft.ensureConf(spark)
-    graft.functions.NativeFunctions.register(spark)
     val hs = kmvHashes(Graft.tableParallel(spark, sfDir, "events"))
     val s2 = spark; import s2.implicits._
     val kmvLocal = kmvSets(hs).collect()
@@ -1892,7 +1878,6 @@ object Sketches {
     */
   def qKmvRetentionProd(spark: SparkSession, sfDir: String): DataFrame = {
     Graft.ensureConf(spark)
-    graft.functions.NativeFunctions.register(spark)
     val hs = Graft.tableParallel(spark, sfDir, "events")
       .filter(col("ts").isNotNull && col("user_id").isNotNull)
       .select(expr(ParityMath.fdivSql("graft_ts_us(ts)", s"${slideBucketUs}L")).as("b"),

@@ -101,7 +101,10 @@ class CountSummaryView(state: DataFrame) {
   * (src-java/streamsum/TupleCache.java:20) - goes through the sink's
   * bucket-pruned `getKey`, so a point lookup reads ONE base bucket
   * file (+ key-filtered pending deltas) instead of scanning the whole
-  * snapshot. The per-subject slice queries (actionsForSubj,
+  * snapshot: one Spark job with no pending delta, two with any number
+  * of them (the merge's single-partition exchange). Building the view
+  * runs no job - the sink's reads take the schema from its layout
+  * file. The per-subject slice queries (actionsForSubj,
   * countsForSubjAction, sumCounts, tuplesForSubjAction) key on `s`
   * alone - a strict prefix the (cache, s, a, o) hash cannot prune -
   * so they fall back to the full-relation view they always used;

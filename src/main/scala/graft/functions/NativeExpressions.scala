@@ -1449,40 +1449,33 @@ object NativeFunctions {
     DupNgrams(exprs.head, n)
   }
 
-  /** Idempotently register the expressions as SQL temp functions so any
-    * query (or `expr(...)` fragment) can call graft_cosine /
-    * graft_hamming in this session.
+  /** Register the expressions as SQL temp functions so any query (or
+    * `expr(...)` fragment) can call graft_cosine / graft_hamming in this
+    * session. A name the session's registry already holds is skipped:
+    * `Graft.ensureConf` runs before every operator, and replacing a
+    * function logs one Spark WARN per name per call.
     */
   def register(spark: SparkSession): Unit = {
     val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_cosine",
-      exprs => CosineSim(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_hamming",
-      exprs => HammingDist(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_md5_48",
-      exprs => Md5Prefix48(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_ts_us",
-      exprs => TsMicros(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_simhash48",
-      exprs => SimHash48(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_lsh_bucket",
-      lshBucketBuilder, "built-in")
-    reg.createOrReplaceTempFunction("graft_bloom_contains",
-      exprs => BloomMightContainLong(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_bloom_any",
-      exprs => BloomAnyContain(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_top_bigram",
-      exprs => TopBigram(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_dup_ngrams",
-      dupNgramsBuilder, "built-in")
-    reg.createOrReplaceTempFunction("graft_gram_hashes",
-      gramHashesBuilder, "built-in")
-    reg.createOrReplaceTempFunction("graft_gram_hashes_all",
-      gramHashesAllBuilder, "built-in")
-    reg.createOrReplaceTempFunction("graft_token_hashes",
-      exprs => TokenHashes(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_qdot",
-      exprs => QDotInt(exprs(0), exprs(1)), "built-in")
+    def add(name: String, build: Seq[Expression] => Expression): Unit =
+      if (!reg.functionExists(
+            org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name, build, "built-in")
+    add("graft_cosine", exprs => CosineSim(exprs(0), exprs(1)))
+    add("graft_hamming", exprs => HammingDist(exprs(0), exprs(1)))
+    add("graft_md5_48", exprs => Md5Prefix48(exprs.head))
+    add("graft_ts_us", exprs => TsMicros(exprs.head))
+    add("graft_simhash48", exprs => SimHash48(exprs.head))
+    add("graft_lsh_bucket", lshBucketBuilder)
+    add("graft_bloom_contains",
+      exprs => BloomMightContainLong(exprs(0), exprs(1)))
+    add("graft_bloom_any", exprs => BloomAnyContain(exprs(0), exprs(1)))
+    add("graft_top_bigram", exprs => TopBigram(exprs.head))
+    add("graft_dup_ngrams", dupNgramsBuilder)
+    add("graft_gram_hashes", gramHashesBuilder)
+    add("graft_gram_hashes_all", gramHashesAllBuilder)
+    add("graft_token_hashes", exprs => TokenHashes(exprs.head))
+    add("graft_qdot", exprs => QDotInt(exprs(0), exprs(1)))
   }
 }

@@ -111,7 +111,6 @@ object CorpusOps {
     */
   def curriculum(spark: SparkSession, sfDir: String): DataFrame = {
     Graft.ensureConf(spark)
-    graft.functions.NativeFunctions.register(spark)
     curriculumFromNll(QualityGate.nllPerDoc(spark, sfDir))
   }
 
@@ -678,7 +677,6 @@ object CorpusOps {
     */
   def split(spark: SparkSession, sfDir: String): DataFrame = {
     Graft.ensureConf(spark)
-    graft.functions.NativeFunctions.register(spark)
     Graft.table(spark, sfDir, "documents")
       .select(col("doc_id"),
         expr(s"graft_md5_48(concat('$splitSalt', CAST(doc_id AS STRING)))")
@@ -721,7 +719,6 @@ object CorpusOps {
     */
   def sourceCap(spark: SparkSession, sfDir: String): DataFrame = {
     Graft.ensureConf(spark)
-    graft.functions.NativeFunctions.register(spark)
     val docs = Graft.tableParallel(spark, sfDir, "documents")
       .select(col("doc_id"), col("source"))
     val nll = TextAnalysis.unigramNll(spark, sfDir)

@@ -132,7 +132,6 @@ object QualityGate {
 
   def apply(spark: SparkSession, sfDir: String): DataFrame = {
     Graft.ensureConf(spark)
-    graft.functions.NativeFunctions.register(spark)
     val signals = rowSignals(Graft.tableParallel(spark, sfDir, "documents"))
     withKeep(signals
       .join(nllPerDoc(spark, sfDir), Seq("doc_id"), "left"))
@@ -197,7 +196,6 @@ object QualityGate {
 
   def prune(spark: SparkSession, sfDir: String): DataFrame = {
     Graft.ensureConf(spark)
-    graft.functions.NativeFunctions.register(spark)
     val docs = Graft.tableParallel(spark, sfDir, "documents")
     val (freq, nTotal, vSize) = lmRelations(spark, sfDir)
     val nb = nllBinned(docs,

@@ -463,7 +463,6 @@ object SignatureStore {
     */
   def storedQualityGate(spark: SparkSession, storeDir: String): DataFrame = {
     Graft.ensureConf(spark)
-    graft.functions.NativeFunctions.register(spark)
     val signals = storedOrEmpty(spark, s"$storeDir/lm_signals",
       emptyLike(spark, QualityGate.rowSignals(
         spark.range(0).selectExpr("id AS doc_id", "'' AS text"))))
@@ -2374,7 +2373,6 @@ object SignatureStore {
     */
   def storedSourceCap(spark: SparkSession, storeDir: String): DataFrame = {
     Graft.ensureConf(spark)
-    graft.functions.NativeFunctions.register(spark)
     val docTerms = storedOrEmpty(spark, s"$storeDir/lm_doc_terms",
       emptyLike(spark, spark.range(0)
         .selectExpr("id AS doc_id", "'' AS term", "id AS k")))

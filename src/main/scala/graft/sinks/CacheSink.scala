@@ -2,6 +2,8 @@ package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
 
 /** Pluggable cache-state store ≙ the reference's `CacheServer` protocol
   * (/root/reference/src-clj/streamsum/protocols.clj: `getMap(name)`
@@ -259,19 +261,27 @@ final class BucketedSnapshotCacheSink(root: String, keys: Seq[String],
 
   private def bucketOf = pmod(hash(keys.map(col): _*), lit(numBuckets))
 
-  /** Per-version layout: which version dir holds each bucket's current
-    * base file (+ row count), and the pending delta versions in apply
-    * order (+ row counts). Written to `v=<n>/_STATE` BEFORE the flip,
-    * immutable afterwards.
+  /** Per-version layout: the relation's schema, which version dir holds
+    * each bucket's current base file (+ row count), and the pending
+    * delta versions in apply order (+ row counts). Written to
+    * `v=<n>/_STATE` BEFORE the flip, immutable afterwards, one line
+    * each:
+    *
+    *   - `S <StructType json>`: every read passes it to
+    *     `spark.read.schema`, so no read runs a schema-inference job;
+    *   - `B <bucket> <home version> <rows>`;
+    *   - `D <delta version> <rows>`.
     */
-  private case class State(base: Map[Int, (Long, Long)],
+  private case class State(schema: StructType,
+                           base: Map[Int, (Long, Long)],
                            deltas: Seq[(Long, Long)])
 
   private def writeState(spark: SparkSession, name: String, v: Long,
                          st: State): Unit = {
-    val lines = st.base.toSeq.sorted.map { case (b, (bv, rows)) =>
-      s"B $b $bv $rows"
-    } ++ st.deltas.map { case (dv, rows) => s"D $dv $rows" }
+    val lines = Seq(s"S ${st.schema.json}") ++
+      st.base.toSeq.sorted.map { case (b, (bv, rows)) =>
+        s"B $b $bv $rows"
+      } ++ st.deltas.map { case (dv, rows) => s"D $dv $rows" }
     val p = new Path(s"${vdir(name, v)}/_STATE")
     val fs = Manifest.rawFs(Manifest.fsFor(spark, p))
     val out = fs.create(p, true)
@@ -288,6 +298,9 @@ final class BucketedSnapshotCacheSink(root: String, keys: Seq[String],
     try org.apache.hadoop.io.IOUtils.copyBytes(in, out, 4096, false)
     finally in.close()
     val lines = out.toString("UTF-8").split("\n").filter(_.nonEmpty)
+    val schema = lines.collectFirst { case l if l.startsWith("S ") =>
+      DataType.fromJson(l.drop(2)).asInstanceOf[StructType]
+    }.get
     val base = lines.collect { case l if l.startsWith("B ") =>
       val Array(_, b, bv, rows) = l.split(" ")
       b.toInt -> (bv.toLong, rows.toLong)
@@ -296,48 +309,59 @@ final class BucketedSnapshotCacheSink(root: String, keys: Seq[String],
       val Array(_, dv, rows) = l.split(" ")
       dv.toLong -> rows.toLong
     }.toSeq
-    State(base, deltas)
+    State(schema, base, deltas)
   }
+
+  /** The layout of the latest committed version. */
+  private def published(spark: SparkSession, name: String): State =
+    readState(spark, name, currentVersion(spark, name).getOrElse(
+      throw new IllegalStateException(
+        s"BucketedSnapshotCacheSink: '$name' has never been published " +
+          s"under $root")))
 
   /** Write `df` hash-bucketed under `dir`; returns bucket -> row count.
     * The repartition puts each bucket in one task so a bucket is one
-    * file, and the count-back reads only parquet footers plus the
-    * discovered `_b=` partition column (no data pages).
+    * file, and the count-back, given the schema, reads only parquet
+    * footers plus the `_b=` directory values (no data pages).
     */
   private def writeBase(df: DataFrame, dir: String): Map[Int, Long] = {
-    val spark = df.sparkSession
     df.withColumn(B, bucketOf).repartition(col(B))
       .write.partitionBy(B).mode(SaveMode.Overwrite).parquet(dir)
-    try spark.read.parquet(dir).groupBy(col(B)).count().collect()
+    df.sparkSession.read.schema(df.schema.add(B, IntegerType))
+      .parquet(dir).groupBy(col(B)).count().collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    catch { // zero rows leave no part files to infer a schema from
-      case _: org.apache.spark.sql.AnalysisException => Map.empty
-    }
   }
 
-  private def readBase(spark: SparkSession, name: String,
-                       base: Map[Int, (Long, Long)]): DataFrame = {
-    val paths = base.toSeq.map { case (b, (bv, _)) =>
-      s"${vdir(name, bv)}/base/$B=$b"
-    }
-    spark.read.parquet(paths: _*)
-  }
+  private def read(spark: SparkSession, st: State,
+                   paths: Seq[String]): DataFrame =
+    spark.read.schema(st.schema).parquet(paths: _*)
 
-  /** Key-replacement merge: rows of the LATEST delta version holding a
-    * key win over earlier deltas and over the base.
+  private def baseDir(name: String, b: Int, bv: Long) =
+    s"${vdir(name, bv)}/base/$B=$b"
+
+  private def deltaDir(name: String, dv: Long) = s"${vdir(name, dv)}/delta"
+
+  /** Key-replacement merge of whole relations: rows of the LATEST delta
+    * version holding a key win over earlier deltas and over the base.
+    * The base meets only the distinct delta keys, in an anti-join that
+    * broadcasts them while they fit the broadcast threshold, so the
+    * base itself is not shuffled.
     */
   private def applyDeltas(base: DataFrame,
                           deltas: Seq[(Long, DataFrame)]): DataFrame = {
     val tagged = deltas.map { case (v, df) => df.withColumn(DV, lit(v)) }
       .reduce(_ unionByName _)
-    val latest = tagged
+    base.join(tagged.select(keys.map(col): _*).distinct(), keys, "left_anti")
+      .unionByName(latestPerKey(tagged))
+  }
+
+  /** The rows of each key's highest `__dv` version, tag dropped. */
+  private def latestPerKey(tagged: DataFrame): DataFrame =
+    tagged
       .withColumn("__mx", max(col(DV))
         .over(org.apache.spark.sql.expressions.Window
           .partitionBy(keys.map(col): _*)))
       .where(col(DV) === col("__mx")).drop(DV, "__mx")
-    base.join(tagged.select(keys.map(col): _*).distinct(), keys, "left_anti")
-      .unionByName(latest)
-  }
 
   override def put(name: String, state: DataFrame): Unit = {
     val spark = state.sparkSession
@@ -349,12 +373,19 @@ final class BucketedSnapshotCacheSink(root: String, keys: Seq[String],
       if (fs.exists(p)) fs.delete(p, true)
       return
     }
-    writeState(spark, name, next, State(rows.map { case (b, n) =>
-      b -> (next, n)
-    }, Nil))
+    writeState(spark, name, next, State(state.schema,
+      rows.map { case (b, n) => b -> (next, n) }, Nil))
     Manifest.flip(spark, manifest(name), next)
     retention(spark, name, next)
   }
+
+  /** Same column names and types, in any order and nullability: what a
+    * read by the recorded schema depends on (parquet columns resolve by
+    * name, and every column reads back nullable).
+    */
+  private def sameColumns(a: StructType, b: StructType): Boolean =
+    a.length == b.length && a.forall(f => b.exists(g => g.name == f.name &&
+      DataTypeUtils.equalsIgnoreNullability(f.dataType, g.dataType)))
 
   override def mergeDelta(name: String, delta: DataFrame,
                           mergeKeys: Seq[String]): Unit = {
@@ -365,11 +396,20 @@ final class BucketedSnapshotCacheSink(root: String, keys: Seq[String],
       case None => put(name, delta) // first publish IS the base
       case Some(cur) =>
         val st = readState(spark, name, cur)
+        // reads trust the recorded schema, so a drifted delta must
+        // fail here rather than read back silently wrong
+        if (!sameColumns(delta.schema, st.schema))
+          throw new IllegalArgumentException(
+            s"BucketedSnapshotCacheSink: delta schema " +
+              s"${delta.schema.simpleString} of '$name' differs from the " +
+              s"published schema ${st.schema.simpleString}")
         val next = cur + 1
-        val dDir = s"${vdir(name, next)}/delta"
-        // the O(delta) path: ONE delta-sized write per trigger
-        delta.write.mode(SaveMode.Overwrite).parquet(dDir)
-        val dRows = spark.read.parquet(dDir).count()
+        // the O(delta) path: ONE delta-sized write per trigger, its row
+        // count observed on the write itself
+        val obs = org.apache.spark.sql.Observation()
+        delta.observe(obs, count(lit(1)).as("rows"))
+          .write.mode(SaveMode.Overwrite).parquet(deltaDir(name, next))
+        val dRows = obs.get("rows").asInstanceOf[Long]
         if (dRows == 0) { // empty batch: no version bump
           val p = new Path(vdir(name, next))
           val fs = Manifest.fsFor(spark, p)
@@ -381,12 +421,12 @@ final class BucketedSnapshotCacheSink(root: String, keys: Seq[String],
         if (pendingRows < math.max(1L, (compactFrac * baseRows).toLong)) {
           // append-only publish: base map unchanged, delta list grows
           writeState(spark, name, next,
-            State(st.base, st.deltas :+ (next -> dRows)))
+            st.copy(deltas = st.deltas :+ (next -> dRows)))
         } else {
           // compaction: fold ALL pending deltas into the buckets they
           // touch; untouched buckets carry forward by reference
           val deltaDfs = (st.deltas.map(_._1) :+ next).map { v =>
-            v -> spark.read.parquet(s"${vdir(name, v)}/delta")
+            v -> read(spark, st, Seq(deltaDir(name, v)))
           }
           val touched = deltaDfs.map(_._2).reduce(_ unionByName _)
             .select(bucketOf.as(B)).distinct()
@@ -395,11 +435,14 @@ final class BucketedSnapshotCacheSink(root: String, keys: Seq[String],
           val merged =
             if (prevTouched.isEmpty) applyDeltas(
               deltaDfs.head._2.limit(0), deltaDfs)
-            else applyDeltas(readBase(spark, name, prevTouched), deltaDfs)
+            else applyDeltas(read(spark, st, prevTouched.toSeq.map {
+              case (b, (bv, _)) => baseDir(name, b, bv)
+            }), deltaDfs)
           val rows = writeBase(merged, s"${vdir(name, next)}/base")
-          writeState(spark, name, next, State(
-            st.base.filterNot { case (b, _) => touched(b) } ++
-              rows.map { case (b, n) => b -> (next, n) }, Nil))
+          writeState(spark, name, next, st.copy(
+            base = st.base.filterNot { case (b, _) => touched(b) } ++
+              rows.map { case (b, n) => b -> (next, n) },
+            deltas = Nil))
         }
         Manifest.flip(spark, manifest(name), next)
         retention(spark, name, next)
@@ -407,15 +450,13 @@ final class BucketedSnapshotCacheSink(root: String, keys: Seq[String],
   }
 
   override def get(spark: SparkSession, name: String): DataFrame = {
-    val v = currentVersion(spark, name).getOrElse(
-      throw new IllegalStateException(
-        s"BucketedSnapshotCacheSink: '$name' has never been published " +
-          s"under $root"))
-    val st = readState(spark, name, v)
-    val base = readBase(spark, name, st.base)
+    val st = published(spark, name)
+    val base = read(spark, st, st.base.toSeq.map { case (b, (bv, _)) =>
+      baseDir(name, b, bv)
+    })
     if (st.deltas.isEmpty) base
     else applyDeltas(base, st.deltas.map { case (dv, _) =>
-      dv -> spark.read.parquet(s"${vdir(name, dv)}/delta")
+      dv -> read(spark, st, Seq(deltaDir(name, dv)))
     })
   }
 
@@ -427,8 +468,7 @@ final class BucketedSnapshotCacheSink(root: String, keys: Seq[String],
     * value is converted against the stored schema, not its runtime
     * class.
     */
-  private def bucketForKey(schema: org.apache.spark.sql.types.StructType,
-                           keyVals: Seq[Any]): Int = {
+  private def bucketForKey(schema: StructType, keyVals: Seq[Any]): Int = {
     import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3Hash}
     val lits = keys.zip(keyVals).map { case (k, value) =>
       Literal.create(value, schema(k).dataType)
@@ -446,78 +486,53 @@ final class BucketedSnapshotCacheSink(root: String, keys: Seq[String],
     * where the parquet key predicate skips row groups by stats);
     * `get` + filter would list and scan every bucket. The executed
     * plan's base scan touches exactly one `_b=` directory -
-    * spec-pinned (BucketedSinkSpec).
+    * spec-pinned (BucketedSinkSpec). The single-key case of `getKeys`.
     */
   def getKey(spark: SparkSession, name: String,
-             keyVals: Seq[Any]): DataFrame = {
-    require(keyVals.length == keys.length,
-      s"sink keys are $keys, got ${keyVals.length} value(s)")
-    val v = currentVersion(spark, name).getOrElse(
-      throw new IllegalStateException(
-        s"BucketedSnapshotCacheSink: '$name' has never been published " +
-          s"under $root"))
-    val st = readState(spark, name, v)
-    // schema from one base bucket's footer (base is never empty after
-    // a publish: empty states don't flip the manifest)
-    val (b0, (bv0, _)) = st.base.head
-    val schema =
-      spark.read.parquet(s"${vdir(name, bv0)}/base/$B=$b0").schema
-    val bucket = bucketForKey(schema, keyVals)
-    val keyFilter = keys.zip(keyVals).map { case (k, value) =>
-      col(k) === lit(value)
-    }.reduce(_ && _)
-    val base = st.base.get(bucket) match {
-      case Some((bv, _)) =>
-        spark.read.schema(schema)
-          .parquet(s"${vdir(name, bv)}/base/$B=$bucket")
-          .where(keyFilter)
-      case None => // bucket empty in base: key can only live in deltas
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    }
-    if (st.deltas.isEmpty) base
-    else applyDeltas(base, st.deltas.map { case (dv, _) =>
-      dv -> spark.read.parquet(s"${vdir(name, dv)}/delta").where(keyFilter)
-    })
-  }
+             keyVals: Seq[Any]): DataFrame =
+    getKeys(spark, name, Seq(keyVals))
 
   /** Batched point lookup - the serving-path MULTIGET: one pruned
-    * read for a SET of keys. Buckets are computed driver-side exactly
-    * as in `getKey`; the plan lists only the distinct home buckets of
+    * read for a SET of keys. Buckets are computed driver-side from the
+    * recorded schema; the plan lists only the distinct home buckets of
     * the requested keys (≤ |keys| of numBuckets) plus the key-filtered
-    * pending deltas, and runs as ONE job instead of |keys| round
-    * trips - the difference between 20 × (footer + scan + collect)
-    * and one scan when a dashboard asks for a key list.
+    * pending deltas. Building the DataFrame runs no job. Collecting it
+    * runs ONE job when no delta is pending; otherwise the key-filtered
+    * rows of every input (base tagged version 0, each delta its own
+    * version) meet in one single-partition exchange, and the rows of
+    * each key's latest version win - with adaptive execution that is
+    * two jobs (the exchange's map stage, then the result), however
+    * many deltas are pending.
     */
   def getKeys(spark: SparkSession, name: String,
               keyRows: Seq[Seq[Any]]): DataFrame = {
     require(keyRows.nonEmpty && keyRows.forall(_.length == keys.length),
       s"sink keys are $keys; every key row must match")
-    val v = currentVersion(spark, name).getOrElse(
-      throw new IllegalStateException(
-        s"BucketedSnapshotCacheSink: '$name' has never been published " +
-          s"under $root"))
-    val st = readState(spark, name, v)
-    val (b0, (bv0, _)) = st.base.head
-    val schema =
-      spark.read.parquet(s"${vdir(name, bv0)}/base/$B=$b0").schema
-    val buckets = keyRows.map(bucketForKey(schema, _)).distinct
+    val st = published(spark, name)
     val keyFilter = keyRows.map { r =>
       keys.zip(r).map { case (k, value) => col(k) === lit(value) }
         .reduce(_ && _)
     }.reduce(_ || _)
-    val paths = buckets.flatMap(b => st.base.get(b).map {
-      case (bv, _) => s"${vdir(name, bv)}/base/$B=$b"
-    })
-    val base =
-      if (paths.isEmpty)
+    val baseDirs = keyRows.map(bucketForKey(st.schema, _)).distinct
+      .flatMap(b => st.base.get(b).map { case (bv, _) =>
+        baseDir(name, b, bv)
+      })
+    val inputs = (if (baseDirs.isEmpty) Nil else Seq(0L -> baseDirs)) ++
+      st.deltas.map { case (dv, _) => dv -> Seq(deltaDir(name, dv)) }
+    inputs match {
+      case Seq() => // no home bucket and no delta: no requested key exists
         spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else spark.read.schema(schema).parquet(paths: _*).where(keyFilter)
-    if (st.deltas.isEmpty) base
-    else applyDeltas(base, st.deltas.map { case (dv, _) =>
-      dv -> spark.read.parquet(s"${vdir(name, dv)}/delta").where(keyFilter)
-    })
+          java.util.Collections.emptyList[org.apache.spark.sql.Row],
+          st.schema)
+      case Seq((_, paths)) => // one input: nothing to merge
+        read(spark, st, paths).where(keyFilter)
+      case _ =>
+        // SinglePartition satisfies the window's key distribution: the
+        // repartition is the plan's only exchange
+        latestPerKey(inputs.map { case (v, paths) =>
+          read(spark, st, paths).where(keyFilter).withColumn(DV, lit(v))
+        }.reduce(_ unionByName _).repartition(1))
+    }
   }
 
   /** Delete version dirs neither inside the retention window nor

@@ -253,7 +253,6 @@ object StreamSum {
     */
   def streamQuality(spark: SparkSession, sfDir: String): DataFrame = {
     Graft.ensureConf(spark)
-    graft.functions.NativeFunctions.register(spark)
     import graft.pipeline.SignatureStore
     val store = SignatureStore.tempDirForExit("graft_stream_lm")
     SignatureStore.admitLm(spark, sfDir, store, glob = "documents.parquet")
@@ -271,7 +270,6 @@ object StreamSum {
     */
   def streamCurriculum(spark: SparkSession, sfDir: String): DataFrame = {
     Graft.ensureConf(spark)
-    graft.functions.NativeFunctions.register(spark)
     import graft.pipeline.SignatureStore
     val store = SignatureStore.tempDirForExit("graft_stream_curr")
     SignatureStore.admitLm(spark, sfDir, store, glob = "documents.parquet")
@@ -490,7 +488,6 @@ object StreamSum {
     */
   def streamWeightedSample(spark: SparkSession, sfDir: String): DataFrame = {
     Graft.ensureConf(spark)
-    graft.functions.NativeFunctions.register(spark)
     import graft.pipeline.CorpusOps
     import spark.implicits._
     val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
@@ -525,7 +522,6 @@ object StreamSum {
     */
   def streamQualityPrune(spark: SparkSession, sfDir: String): DataFrame = {
     Graft.ensureConf(spark)
-    graft.functions.NativeFunctions.register(spark)
     import graft.pipeline.{QualityGate, SignatureStore}
     val store = SignatureStore.tempDirForExit("graft_stream_qprune")
     SignatureStore.admitLm(spark, sfDir, store, glob = "documents.parquet")
@@ -548,7 +544,6 @@ object StreamSum {
     */
   def streamKmv(spark: SparkSession, sfDir: String): DataFrame = {
     Graft.ensureConf(spark)
-    graft.functions.NativeFunctions.register(spark)
     import graft.analytics.Sketches
     import spark.implicits._
     val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
@@ -577,7 +572,6 @@ object StreamSum {
     */
   def streamKmvRetention(spark: SparkSession, sfDir: String): DataFrame = {
     Graft.ensureConf(spark)
-    graft.functions.NativeFunctions.register(spark)
     import graft.analytics.Sketches
     import spark.implicits._
     val bucketed = streamingEvents(spark, sfDir)
@@ -722,7 +716,6 @@ object StreamSum {
     */
   def streamHll(spark: SparkSession, sfDir: String): DataFrame = {
     Graft.ensureConf(spark)
-    graft.functions.NativeFunctions.register(spark)
     import graft.analytics.Sketches
     val schema = spark.read.parquet(s"$sfDir/lineitem.parquet").schema
     val li = spark.readStream.schema(schema)
@@ -934,7 +927,7 @@ object StreamSum {
     * slice through [[graft.api.SinkCountSummaryView]].getCount, i.e.
     * through the sink's `getKey`: each lookup's executed plan reads
     * ONE base bucket file plus the key-filtered pending delta - never
-    * a full snapshot scan (the reference's `getMap(name).get(key)`
+    * a full snapshot scan, and no read infers a schema (the reference's `getMap(name).get(key)`
     * serving shape, src-java/streamsum/TupleCache.java:20). Oracle:
     * the batch count-cache state limited to the same 20 smallest
     * keys, so a lookup that missed the pending delta - or merged the
@@ -989,8 +982,9 @@ object StreamSum {
       view.getCount(t0.getLong(1), t0.getString(2), t0.getLong(3))
     require(lastT0.isDefined && cnt0 > 0,
       "facade point read missed a published key")
-    // ...and the batched MULTIGET serves the whole key list in ONE
-    // pruned job (distinct home buckets + key-filtered deltas)
+    // ...and the batched MULTIGET serves the whole key list in one
+    // pruned read (distinct home buckets + key-filtered deltas, merged
+    // in one single-partition exchange)
     val keyRows = targets.toSeq.map(r => Seq[Any](
       r.getString(0), r.getLong(1), r.getString(2), r.getLong(3)))
     sink.getKeys(spark, "pt", keyRows)
@@ -1584,7 +1578,6 @@ object StreamSum {
     */
   def streamMix(spark: SparkSession, sfDir: String): DataFrame = {
     Graft.ensureConf(spark)
-    graft.functions.NativeFunctions.register(spark)
     import graft.pipeline.CorpusOps
     val cutoffs = CorpusOps.mixCutoffs(spark, sfDir)
     val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
@@ -1604,7 +1597,6 @@ object StreamSum {
     */
   def streamUpsample(spark: SparkSession, sfDir: String): DataFrame = {
     Graft.ensureConf(spark)
-    graft.functions.NativeFunctions.register(spark)
     import graft.pipeline.CorpusOps
     val plan = CorpusOps.upsamplePlan(spark, sfDir)
     val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema

@@ -295,4 +295,122 @@ class BucketedSinkSpec extends SparkSpec {
       spark, watch, sink, "counts", Some(cp), glob = "*.parquet")
     assert(key(sink.get(spark, "counts")) == key(full))
   }
+
+  /** Jobs `f` starts, counted by a listener after a bus drain. */
+  private def jobs[T](f: => T): (T, Int) = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerDrain(sc)
+    sc.addSparkListener(l)
+    try {
+      val r = f
+      org.apache.spark.ListenerDrain(sc)
+      (r, n.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("point reads and appends run only the jobs their answer needs: " +
+       "no schema inference, one merge exchange, no delta read-back") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_bsink_jobs").toString
+    val sink = new BucketedSnapshotCacheSink(root, Seq("k"),
+      numBuckets = 8, compactFrac = 1e9)
+    sink.put("c", df((1L to 200L).map(i => i -> s"v$i"): _*))
+    // no pending delta: building runs nothing, collecting one scan job
+    val (d0, built0) = jobs(sink.getKey(spark, "c", Seq(42L)))
+    assert(built0 == 0, s"building getKey ran $built0 job(s)")
+    val (r0, read0) = jobs(rowSet(d0))
+    assert(r0 == Set(42L -> "v42") && read0 == 1,
+      s"collecting getKey without deltas ran $read0 job(s)")
+    // an append runs exactly the jobs the same delta's write runs
+    val d1 = df(7L -> "NEW", 300L -> "add")
+    val (_, plainWrite) = jobs(d1.write.parquet(s"$root/plain"))
+    val (_, append1) = jobs(sink.mergeDelta("c", d1, Seq("k")))
+    val (_, append2) = jobs(
+      sink.mergeDelta("c", df(7L -> "NEWER", 8L -> "x"), Seq("k")))
+    assert(append1 == plainWrite && append2 == plainWrite,
+      s"appends ran $append1/$append2 jobs, the write alone $plainWrite")
+    assert(sink.currentVersion(spark, "c").contains(3L))
+    // two pending deltas: still nothing at build, at most two at collect
+    for (ks <- Seq(Seq(7L), Seq(7L, 8L, 42L, 300L, 9999L))) {
+      val (d, built) = jobs(sink.getKeys(spark, "c", ks.map(Seq[Any](_))))
+      assert(built == 0, s"building getKeys($ks) ran $built job(s)")
+      val (got, read) = jobs(rowSet(d))
+      assert(read <= 2, s"collecting getKeys($ks) ran $read job(s)")
+      assert(got == rowSet(sink.get(spark, "c")).filter(r => ks.contains(r._1)))
+    }
+    val (_, builtGet) = jobs(sink.get(spark, "c"))
+    assert(builtGet == 0, s"building get ran $builtGet job(s)")
+  }
+
+  test("the layout describes itself: a fresh sink instance over the same " +
+       "root serves get, getKey and getKeys identically") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_bsink_fresh").toString
+    val mk = () => new BucketedSnapshotCacheSink(root, Seq("k"),
+      numBuckets = 8, compactFrac = 1e9)
+    val writer = mk()
+    writer.put("c", df((1L to 100L).map(i => i -> s"v$i"): _*))
+    writer.mergeDelta("c", df(7L -> "NEW", 300L -> "add"), Seq("k"))
+    writer.mergeDelta("c", df(7L -> "NEWER", 8L -> "x"), Seq("k"))
+    // the schema is recorded in the version's _STATE as its S line
+    val stateLines = scala.io.Source.fromFile(s"$root/c/v=3/_STATE")
+    val sLine = try stateLines.getLines().toList.filter(_.startsWith("S "))
+      finally stateLines.close()
+    assert(sLine.map(l => org.apache.spark.sql.types.DataType
+      .fromJson(l.drop(2))) == List(df(1L -> "a").schema),
+      s"_STATE must carry the relation's schema, got $sLine")
+    val reader = mk()
+    val ks = Seq(7L, 8L, 42L, 300L, 9999L)
+    assert(rowSet(reader.get(spark, "c")) == rowSet(writer.get(spark, "c")))
+    assert(rowSet(reader.get(spark, "c")).size == 101)
+    for (k <- ks) assert(rowSet(reader.getKey(spark, "c", Seq(k))) ==
+      rowSet(writer.getKey(spark, "c", Seq(k))))
+    assert(rowSet(reader.getKeys(spark, "c", ks.map(Seq[Any](_)))) ==
+      Set(7L -> "NEWER", 8L -> "x", 42L -> "v42", 300L -> "add"))
+  }
+
+  test("bucketed sink: a delta whose columns drift from the published " +
+       "schema fails loud and publishes nothing") {
+    val s = spark; import s.implicits._
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_bsink_drift").toString
+    val sink = new BucketedSnapshotCacheSink(root, Seq("k"), numBuckets = 4,
+      compactFrac = 1e9)
+    sink.put("c", df(1L -> "a", 2L -> "b"))
+    val drifted = Seq(
+      Seq(1L -> 5L).toDF("k", "v"),               // v: string -> bigint
+      Seq((1L, "a", 1)).toDF("k", "v", "extra"),  // added column
+      Seq(1L).toDF("k"),                          // dropped column
+      Seq(1L -> "a").toDF("k", "w"))              // renamed column
+    for (d <- drifted) {
+      val e = intercept[IllegalArgumentException] {
+        sink.mergeDelta("c", d, Seq("k"))
+      }
+      assert(e.getMessage.contains(d.schema.simpleString) &&
+        e.getMessage.contains(df(1L -> "a").schema.simpleString),
+        s"the error must name both schemas: ${e.getMessage}")
+    }
+    assert(sink.currentVersion(spark, "c").contains(1L))
+    // column order and nullability are not drift: reads go by name
+    sink.mergeDelta("c", Seq("B" -> 2L).toDF("v", "k"), Seq("k"))
+    assert(rowSet(sink.get(spark, "c")) == Set(1L -> "a", 2L -> "B"))
+    assert(rowSet(sink.getKey(spark, "c", Seq(2L))) == Set(2L -> "B"))
+  }
+
+  test("bucketed sink: an empty first publish flips nothing") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_bsink_empty0").toString
+    val sink = new BucketedSnapshotCacheSink(root, Seq("k"), numBuckets = 4)
+    sink.put("c", df(1L -> "a").limit(0))
+    sink.mergeDelta("c", df(1L -> "a").limit(0), Seq("k"))
+    assert(sink.currentVersion(spark, "c").isEmpty)
+    sink.mergeDelta("c", df(1L -> "a"), Seq("k"))
+    assert(rowSet(sink.getKey(spark, "c", Seq(1L))) == Set(1L -> "a"))
+  }
 }
