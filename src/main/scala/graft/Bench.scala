@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.Memo
 import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark: runs the headline queries (one representative
@@ -209,21 +210,6 @@ object Bench {
     // narrow segment explode - the slope must track the corpus
     "pipe_pack_tokens")
 
-  private def releaseMemos(spark: SparkSession): Unit = {
-    graft.core.Transform.releaseAll(spark)
-    graft.core.CountQueries.releaseAll(spark)
-    graft.pipeline.SignatureStore.releaseAll(spark)
-    graft.pipeline.Similarity.releaseAll(spark)
-    graft.pipeline.QualityClassifier.releaseAll(spark)
-    graft.pipeline.TextAnalysis.releaseAll(spark)
-    graft.analytics.Graph.releaseAll(spark)
-    // memory-sink harness tables pin complete-mode state snapshots in
-    // driver heap; a multi-pass sweep accumulates 100+ of them and the
-    // GC pressure lands on whichever stateful query runs late (r9's
-    // 96s ss_stream_count_sink sf3 outlier vs 7.8s isolated)
-    graft.streaming.StreamSum.releaseHarnessTables(spark)
-  }
-
   /** One timed pass over the suite: per-query (seconds, succeeded).
     * A failed query keeps its elapsed time for the log line but is
     * marked failed so it never masquerades as a speedup in the
@@ -305,7 +291,7 @@ object Bench {
     val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS")
       .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(3)
     val passes = (1 to reps).map { i =>
-      releaseMemos(spark) // every pass pays the same cold-memo cost
+      Memo.releaseAll(spark) // every pass pays the same cold-memo cost
       val r = runPass(spark, sfDir, selected)
       // per-pass evidence line: lets a reader distinguish a real plan
       // regression (slow in every pass) from box contention during the
@@ -335,7 +321,7 @@ object Bench {
       else failed.map("\"" + _ + "\"").mkString(""","failed":[""", ",", "]")
     val pass2 =
       if (sfDir2.nonEmpty && new java.io.File(sfDir2).isDirectory) {
-        releaseMemos(spark)
+        Memo.releaseAll(spark)
         Some(runPass(spark, sfDir2, selected))
       } else None
     val total2 = pass2.map(_.collect { case (_, t, true) => t }.sum)
@@ -398,7 +384,7 @@ object Bench {
         val r =
           try {
             val passes3 = (1 to reps3).map { i =>
-              releaseMemos(spark)
+              Memo.releaseAll(spark)
               val p = runPass(spark, dir3, sel3)
               System.err.println(s"[bench] sf3 pass $i: ${fmtPass(p)}")
               p
@@ -493,7 +479,7 @@ object Bench {
     // multiple corpora and nothing should stay pinned - and stop the
     // session BEFORE the summary, so shutdown output cannot bury it:
     // the summary must be the run's last line
-    releaseMemos(spark)
+    Memo.releaseAll(spark)
     spark.stop()
     println(
       f"""{"metric":"summary","value":$total%.3f,"unit":"sec","total":$total%.3f$total2Json$total3Json,"n":${results.length},"failed":$failedList,"reps":$reps,"sf":"$sfDir","full":"$outPath"}""")

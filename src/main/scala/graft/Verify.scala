@@ -55,12 +55,7 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    graft.core.Transform.releaseAll(spark)
-    graft.core.CountQueries.releaseAll(spark)
-    graft.pipeline.SignatureStore.releaseAll(spark)
-    graft.pipeline.Similarity.releaseAll(spark)
-    graft.pipeline.QualityClassifier.releaseAll(spark)
-    graft.analytics.Graph.releaseAll(spark)
+    graft.core.Memo.releaseAll(spark)
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft.analytics
 
-import graft.core.{Graft, Transform}
+import graft.core.{Graft, Memo, Transform}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -72,35 +72,26 @@ object Graph {
     tuples.select((col("s") * 2).as("src"), (col("o") * 2 + 1).as("dst"))
       .distinct()
 
-  /** The distinct interaction pair relation memoized per (session,
-    * corpus) with the SignatureStore discipline: all seven batch graph
-    * faces that walk the SAME encoded pair relation (pagerank, PPR,
-    * HITS, concomp, BFS, degree distribution, assortativity) used to
-    * pay the extract + distinct scan independently — the shared floor
-    * of the r12 100× probes (concomp 15.3 s / assortativity 18.2 s at
-    * 10M events, each mostly re-deriving this relation). At 100 TB
+  /** The distinct interaction pair relation, a `Memo` entry per
+    * (session, corpus): all seven batch graph faces that walk the
+    * SAME encoded pair relation (pagerank, PPR, HITS, concomp, BFS,
+    * degree distribution, assortativity) used to pay the extract +
+    * distinct scan independently — the shared floor of the r12 100×
+    * probes (concomp 15.3 s / assortativity 18.2 s at 10M events, each
+    * mostly re-deriving this relation). At 100 TB
     * this is the edge table a deployment materializes once between
     * the log and every graph consumer. Stream/store faces keep their
     * own snapshot-derived relations (their state IS the edge store).
     */
-  private val pairCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-
   private[graft] def fwdPairsFor(spark: SparkSession,
-                                 sfDir: String): DataFrame = {
-    // sweep entries pinned to stopped sessions (the centCache pattern)
-    val it = pairCache.keySet().iterator()
-    while (it.hasNext) {
-      if (it.next()._1.sparkContext.isStopped) it.remove()
-    }
-    pairCache.computeIfAbsent((spark, sfDir), { case (s, dir) =>
+                                 sfDir: String): DataFrame =
+    Memo(spark, sfDir, "fwd-pairs") {
       // localCheckpoint, not persist: every consumer face re-ran its
       // own defensive localCheckpoint() on the memoized relation (one
       // materialization job per graph query); storing the flat
       // LogicalRDD leaf makes `materialized` a no-op for all of them
-      fwdPairs(Transform.extract(s, dir)).localCheckpoint()
-    })
-  }
+      fwdPairs(Transform.extract(spark, sfDir)).localCheckpoint()
+    }
 
   /** Materialize an iteration input once — but not twice: relations
     * already landed as a LogicalRDD leaf (the memoized pair/projection
@@ -120,34 +111,19 @@ object Graph {
     * one level up the cohesion stack). Stream/store faces keep their
     * snapshot-derived relations.
     */
-  private val projCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-
   private[graft] def projEdgesFor(spark: SparkSession,
-                                  sfDir: String): DataFrame = {
-    val it = projCache.keySet().iterator()
-    while (it.hasNext) {
-      if (it.next()._1.sparkContext.isStopped) it.remove()
-    }
-    projCache.computeIfAbsent((spark, sfDir), { case (s, dir) =>
-      val act = capActive(Transform.extract(s, dir)).localCheckpoint()
+                                  sfDir: String): DataFrame =
+    Memo(spark, sfDir, "proj-edges") {
+      val act = capActive(Transform.extract(spark, sfDir)).localCheckpoint()
       val nu = act.agg(count(lit(1)).as("n"))
       val od = act.select(explode(col("os")).as("o"))
         .groupBy(col("o")).agg(count(lit(1)).as("c"))
-      liftEdges(pairCounts(act).filter(col("cnt") >= cooccurMinCnt),
-        od, nu).localCheckpoint()
-    })
-  }
-
-  def releaseAll(spark: SparkSession): Unit = {
-    import scala.jdk.CollectionConverters._
-    pairCache.keySet.asScala.filter(_._1 eq spark).toSeq
-      .foreach(k => Option(pairCache.remove(k)).foreach(
-        org.apache.spark.sql.GraftBridge.unpersistMaterialized))
-    projCache.keySet.asScala.filter(_._1 eq spark).toSeq
-      .foreach(k => Option(projCache.remove(k)).foreach(
-        org.apache.spark.sql.GraftBridge.unpersistMaterialized))
-  }
+      val edges = liftEdges(
+        pairCounts(act).filter(col("cnt") >= cooccurMinCnt), od, nu)
+        .localCheckpoint()
+      org.apache.spark.sql.GraftBridge.unpersistMaterialized(act)
+      edges
+    }
 
   /** The memo build PRICED ON ITS OWN BENCH LINE (VERDICT r13 #5):
     * r13's q_pagerank regression (1.49× min) was pure attribution —

@@ -255,34 +255,11 @@ object CountQueries {
             Array[Any](descTags(a), ns(a) - idx(a) + 1L) ++ vals))
       }
     }
-    sweepStopped()
     org.apache.spark.sql.GraftBridge.ofInternalRows(spark, out, outSchema)
   }
 
-  private val pendingRelease =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, Int), DataFrame]()
-
-  private def sweepStopped(): Unit = {
-    val it = pendingRelease.entrySet().iterator()
-    while (it.hasNext) {
-      if (it.next().getKey._1.sparkContext.isStopped) it.remove()
-    }
-  }
-
-  /** Unpersist the count-state relations pinned by `sortedVariantsFrom`
-    * for `spark` - call once the returned variants have been consumed
-    * (Bench between passes, Verify at exit, specs in afterAll).
-    */
-  def releaseAll(spark: SparkSession): Unit = {
-    val it = pendingRelease.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq spark) {
-        e.getValue.unpersist(blocking = false)
-        it.remove()
-      }
-    }
-  }
+  /** `Memo.releaseAll`, kept for the benchmark harness, which calls it. */
+  def releaseAll(spark: SparkSession): Unit = Memo.releaseAll(spark)
 
   def sortedVariants(spark: SparkSession, sfDir: String): DataFrame =
     sortedVariantsFrom(counts(spark, sfDir))

@@ -43,13 +43,10 @@ object Graft {
   /** The split-starvation probe (`df.rdd.getNumPartitions`) runs a
     * full physical-planning pass per call; the answer is a property of
     * the table's file layout, fixed for the life of a session — so it
-    * is memoized per (session, dir, table). ~100 headline queries call
-    * this (some more than once); unmemoized, each paid the extra
+    * is a `Memo` entry per (session, dir, table). ~100 headline queries
+    * call this (some more than once); unmemoized, each paid the extra
     * planning pass just to re-learn the same layout fact.
     */
-  private val spreadCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Boolean]()
-
   def tableParallel(spark: SparkSession, sfDir: String,
                     name: String): DataFrame = {
     val df = table(spark, sfDir, name)
@@ -58,13 +55,9 @@ object Graft {
     // groups already feeds every core, and an unconditional
     // repartition would re-shuffle the whole corpus for nothing.
     val cores = spark.sparkContext.defaultParallelism
-    val it = spreadCache.keySet().iterator()
-    while (it.hasNext) {
-      if (it.next()._1.sparkContext.isStopped) it.remove()
+    val starved: Boolean = Memo(spark, sfDir, ("spread", name)) {
+      df.rdd.getNumPartitions < cores
     }
-    val starved = spreadCache.computeIfAbsent(
-      (spark, s"$sfDir/$name"),
-      _ => Boolean.box(df.rdd.getNumPartitions < cores))
     if (starved) df.repartition(cores) else df
   }
 }

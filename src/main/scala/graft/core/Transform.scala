@@ -185,37 +185,20 @@ object Transform {
       .select("u.*")
   }
 
-  private val xfCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Seq[Rule]), DataFrame]()
-
   /** The transformed tuple relation, computed once per (session,
     * corpus, rules) and persisted - every cache state and count query
     * derives from it, and without sharing each one would re-run the
-    * scan + regex extract. The cache stands in for the materialized
-    * intermediate a 100 TB deployment writes between the transform and
-    * record stages (same pattern as pipeline.SignatureStore).
+    * scan + regex extract. The `Memo` entry stands in for the
+    * materialized intermediate a 100 TB deployment writes between the
+    * transform and record stages.
     */
   def transformed(spark: SparkSession, sfDir: String,
                   rules: Seq[Rule] = Config.rules): DataFrame =
-    xfCache.computeIfAbsent((spark, sfDir, rules), { case (s, dir, rs) =>
-      apply(extract(s, dir), rs).persist()
-    })
+    Memo(spark, sfDir, ("transformed", rules)) {
+      apply(extract(spark, sfDir), rules).persist()
+    }
 
-  /** Drop the memoized relation(s) for a corpus - call when done with a
-    * scale factor (Verify/Bench teardown do) or after rewriting the
-    * files at `sfDir` in-session; without it the persisted relations
-    * and their session references pin memory for the JVM lifetime.
-    */
-  def release(spark: SparkSession, sfDir: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    xfCache.keySet.asScala
-      .filter(k => (k._1 eq spark) && k._2 == sfDir).toSeq
-      .foreach(k => Option(xfCache.remove(k)).foreach(_.unpersist()))
-  }
-
-  def releaseAll(spark: SparkSession): Unit = {
-    import scala.jdk.CollectionConverters._
-    xfCache.keySet.asScala.filter(_._1 eq spark).toSeq
-      .foreach(k => Option(xfCache.remove(k)).foreach(_.unpersist()))
-  }
+  /** `Memo.release`, kept for the benchmark harness, which calls it. */
+  def release(spark: SparkSession, sfDir: String): Unit =
+    Memo.release(spark, sfDir)
 }

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.core.Graft
+import graft.core.{Graft, Memo}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -227,28 +227,14 @@ object CorpusOps {
     * (small by construction) bench set - the same size assumption the
     * broadcast join variant already makes.
     */
-  /** Per-(session, corpus) memo of the benchmark's hashed n-gram set
-    * and its serialized Bloom filter. Building it costs one (tiny,
-    * pushed-down) scan of the bench docs, but a fresh plan's compile +
-    * first-job overhead dominates that scan, so a caller that
-    * decontaminates repeatedly (the bench; a pipeline gating multiple
-    * corpus drops against one benchmark) should pay it once. Entries
-    * are driver-side bytes only (no pinned Spark resources); stopped
-    * sessions are swept on each build.
-    */
-  private val benchBloomCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), (Array[Long], Array[Byte])]()
-
   /** The word-5-gram hash array expression shared by every
     * decontamination face (batch join, batch bloom, streaming bloom) -
     * one definition so the faces cannot drift.
     */
   val gramHashesExpr: String = s"graft_gram_hashes(toks, $decontamN)"
 
-  /** Bench n-gram hashes + serialized Bloom filter for `sfDir`,
-    * memoized per session (see `benchBloomCache`). Public face for the
-    * streaming decontamination query.
+  /** Bench n-gram hashes + serialized Bloom filter for `sfDir`.
+    * Public face for the streaming decontamination query.
     */
   def benchBloomFor(spark: SparkSession,
                     sfDir: String): (Array[Long], Array[Byte]) = {
@@ -259,13 +245,17 @@ object CorpusOps {
     benchBloom(spark, sfDir, grams)
   }
 
+  /** The benchmark's hashed n-gram set and its serialized Bloom
+    * filter, a `Memo` entry per (session, corpus). Building it costs
+    * one (tiny, pushed-down) scan of the bench docs, but a fresh plan's
+    * compile + first-job overhead dominates that scan, so a caller that
+    * decontaminates repeatedly (a pipeline gating multiple corpus drops
+    * against one benchmark) should pay it once. The entry is
+    * driver-side bytes only (no pinned Spark resources).
+    */
   private def benchBloom(spark: SparkSession, sfDir: String,
-                         grams: DataFrame): (Array[Long], Array[Byte]) = {
-    val it = benchBloomCache.keySet().iterator()
-    while (it.hasNext) {
-      if (it.next()._1.sparkContext.isStopped) it.remove()
-    }
-    benchBloomCache.computeIfAbsent((spark, sfDir), { _ =>
+                         grams: DataFrame): (Array[Long], Array[Byte]) =
+    Memo(spark, sfDir, "bench-bloom") {
       val bench = grams.filter(col("doc_id") < benchmarkDocs).persist()
       try {
         val hashes = bench
@@ -290,8 +280,7 @@ object CorpusOps {
         bloom.writeTo(bos)
         (hashes, bos.toByteArray)
       } finally bench.unpersist()
-    })
-  }
+    }
 
   /** Per-probe fpp that holds a p95-length document's false-flag
     * chance at `bloomDocFpTarget`: fpp = target / grams_per_doc,

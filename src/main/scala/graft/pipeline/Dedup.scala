@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.core.Graft
+import graft.core.{Graft, Memo}
 import HashParity._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -1750,7 +1750,7 @@ object Dedup {
     simhashPairsTier(spark, sfDir)
 
   /** The (doc_id, sim) SimHash signature PLAN (un-materialized) — the
-    * stable logical plan that keys the route memo across passes.
+    * stable logical plan that keys the route memo across tier rebuilds.
     */
   private def simhashSimsPlan(spark: SparkSession,
                               sfDir: String): DataFrame =
@@ -1909,38 +1909,30 @@ object Dedup {
     if (vChunk - vFlip > BigInt(simhashFlipBudgetPerDoc) * n) "flip1"
     else "chunk7"
 
-  /** Route memo, keyed by (session identity, canonicalized signature
-    * plan) — the SignatureStore memo discipline: the decision is a
-    * pure function of the signature RELATION, so re-pricing it per
-    * call (dd_simhash + dd_simhash_eval + bench reps all walk the
+  /** The route decision for a signature relation, a session-scoped
+    * `Memo` entry keyed on the canonicalized signature plan: the
+    * decision is a pure function of the signature RELATION, so
+    * re-pricing it per call (dd_simhash + dd_simhash_eval walk the
     * same relation) would bill the route fee many times for one
-    * answer. A store face's per-batch union is a DIFFERENT plan, so
-    * it re-prices (correct: its corpus grew). The key holds no
-    * session reference (identityHashCode, so sessions can be GC'd)
-    * and the map is size-bounded; a hash collision silently reusing
-    * another relation's route is PERF-only — both physical schemes
-    * emit identical pairs, so results can never change.
-    */
-  private val routeMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Int), Boolean]()
-
-  /** The route decision for a signature relation, memo-keyed on
-    * `keyed`'s ORIGINAL logical plan (a localCheckpoint is a fresh
-    * RDD every call, so keying on the checkpoint would never hit)
-    * while the pricing job reads `priced` (the checkpoint) — on a
+    * answer. A store face's per-batch union is a DIFFERENT plan, so it
+    * re-prices (correct: its corpus grew). A semantic-hash collision
+    * silently reusing another relation's route is PERF-only — both
+    * physical schemes emit identical pairs, so results can never
+    * change.
+    *
+    * The key is `keyed`'s ORIGINAL logical plan (a localCheckpoint is
+    * a fresh RDD every call, so keying on the checkpoint would never
+    * hit) while the pricing job reads `priced` (the checkpoint) — on a
     * memo miss the signature computation runs exactly once.
     */
   private[graft] def simhashFlipRouteFor(keyed: DataFrame,
-                                         priced: DataFrame): Boolean = {
-    if (routeMemo.size > 1024) routeMemo.clear()
-    routeMemo.computeIfAbsent(
-      (System.identityHashCode(keyed.sparkSession),
-        keyed.queryExecution.logical.canonicalized.semanticHash()),
-      _ => {
-        val (n, vChunk, vFlip) = simhashRouteStatsFor(priced)
-        simhashRouteOf(n, vChunk, vFlip) == "flip1"
-      })
-  }
+                                         priced: DataFrame): Boolean =
+    Memo(keyed.sparkSession, Memo.session,
+        ("simhash-route",
+          keyed.queryExecution.logical.canonicalized.semanticHash())) {
+      val (n, vChunk, vFlip) = simhashRouteStatsFor(priced)
+      simhashRouteOf(n, vChunk, vFlip) == "flip1"
+    }
 
   /** The blocked Hamming pair join over any (doc_id, sim) signature
     * relation — shared by the batch face and the incremental store
@@ -1965,7 +1957,7 @@ object Dedup {
   /** The routed pair join over an ALREADY-MATERIALIZED signature
     * relation (`priced`, e.g. a session tier) — no internal
     * checkpoint; the route memo keys on `keyed`, the stable original
-    * plan, so re-materialized tiers still hit the memo across passes.
+    * plan, so re-materialized tiers still hit the memo.
     */
   private[graft] def simhashPairsFromMat(keyed: DataFrame,
                                          priced: DataFrame): DataFrame =

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.core.Graft
+import graft.core.{Graft, Memo}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -558,21 +558,17 @@ object Multimodal {
 
   /** The (doc_id, sim) aHash signature relation the pair join and the
     * scheme router price — narrow encode+hash per row, no shuffle.
-    * Memoized per (session, corpus dir): not for the compute (narrow,
-    * cheap) but for PLAN IDENTITY — the scheme router's memo keys on
-    * the canonicalized plan, and a fresh mapPartitions closure per
-    * call would never compare equal, re-billing the route fee.
+    * A `Memo` entry per (session, corpus dir): not for the compute
+    * (narrow, cheap) but for PLAN IDENTITY — the scheme router's memo
+    * keys on the canonicalized plan, and a fresh mapPartitions closure
+    * per call would never compare equal, re-billing the route fee.
     */
-  private val ahashSimCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   private[graft] def ahashSims(spark: SparkSession,
-                               sfDir: String): DataFrame = {
-    if (ahashSimCache.size > 64) ahashSimCache.clear() // bound retention
-    ahashSimCache.computeIfAbsent((spark, sfDir), { case (s0, dir) =>
-      val s2 = Graft.ensureConf(s0)
+                               sfDir: String): DataFrame =
+    Memo(spark, sfDir, "ahash-sim-plan") {
+      val s2 = Graft.ensureConf(spark)
       import s2.implicits._
-      Graft.tableParallel(s0, dir, "documents")
+      Graft.tableParallel(spark, sfDir, "documents")
         .select(col("doc_id")).as[Long]
         .mapPartitions { ids =>
           ids.map { id =>
@@ -582,8 +578,7 @@ object Multimodal {
           }
         }
         .toDF("doc_id", "sim")
-    })
-  }
+    }
 
   /** Per-doc DCT perceptual hash over the corpus's real BMP bytes —
     * encode the scene, decode, sample the shared 8×6 grid, integer

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.core.Graft
+import graft.core.{Graft, Memo}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -127,38 +127,16 @@ object QualityClassifier {
   /** Train the 67 micro-unit weights (64 hashed buckets + bias + two
     * dense features) on the bounded sample; returns (weights indexed
     * by bucket+3, n_train). Bounded driver state by construction — the
-    * Lloyd-trainer pattern.
+    * Lloyd-trainer pattern. A `Memo` entry per (session, corpus): train
+    * and score faces share one training run.
     */
-  /** Trained weights memoized per (session, corpus) — train and score
-    * faces share one training run (the centroid-cache pattern,
-    * including the stopped-session sweep).
-    */
-  private val wCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Array[Long], Long)]()
-
-  def releaseAll(spark: SparkSession): Unit = {
-    import scala.jdk.CollectionConverters._
-    wCache.keySet.asScala.filter(_._1 eq spark).toSeq
-      .foreach(wCache.remove)
-  }
-
   private[graft] def trainWeights(spark: SparkSession,
-                                  sfDir: String): (Array[Long], Long) = {
-    val it = wCache.keySet().iterator()
-    while (it.hasNext) {
-      if (it.next()._1.sparkContext.isStopped) it.remove()
+                                  sfDir: String): (Array[Long], Long) =
+    Memo(spark, sfDir, "qclf-weights") {
+      Graft.ensureConf(spark)
+      gdTrain(featureRows(Graft.tableParallel(spark, sfDir, "documents")
+        .filter(col("doc_id") < qclfTrainN)))
     }
-    wCache.computeIfAbsent((spark, sfDir), { case (s, d) =>
-      trainWeightsUncached(s, d)
-    })
-  }
-
-  private def trainWeightsUncached(spark: SparkSession,
-                                   sfDir: String): (Array[Long], Long) = {
-    Graft.ensureConf(spark)
-    gdTrain(featureRows(Graft.tableParallel(spark, sfDir, "documents")
-      .filter(col("doc_id") < qclfTrainN)))
-  }
 
   /** The epoch loop over any (doc_id, bucket, x, ymu) training feature
     * relation — shared by the batch, streaming, and store faces. The

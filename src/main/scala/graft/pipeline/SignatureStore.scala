@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.analytics.Sketches
-import graft.core.Graft
+import graft.core.{Graft, Memo}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{col, collect_list, collect_set, count, explode, expr, lag, lit, max, min, pmod, size, struct, substring, sum, when}
@@ -15,24 +15,21 @@ import org.apache.spark.sql.functions.{col, collect_list, collect_set, count, ex
   * signature relation is exactly what you'd write to a table between
   * pipeline stages, so the cache stands in for that materialization.
   *
-  * The memo key is (session, corpus dir); `release` drops the cached
-  * relations (e.g. between scale factors in one session).
+  * Every relation here is a `graft.core.Memo` entry for its corpus
+  * dir; `Memo.release` drops them (e.g. between scale factors in one
+  * session).
   */
 object SignatureStore {
-
-  private val shingleCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private val bandCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
 
   /** doc_id + shingles + shingle hashes + token hashes (`hst`) - the
     * one tokenize+hash pass shared by minhash/LSH/Jaccard/SimHash
     * (Dedup.shinglesFrom); persisted on first use.
     */
   def shingles(spark: SparkSession, sfDir: String): DataFrame =
-    shingleCache.computeIfAbsent((spark, sfDir), { case (s, dir) =>
-      Dedup.shinglesFrom(Graft.tableParallel(s, dir, "documents")).persist()
-    })
+    Memo(spark, sfDir, "shingles") {
+      Dedup.shinglesFrom(Graft.tableParallel(spark, sfDir, "documents"))
+        .persist()
+    }
 
   /** (doc_id, band, band_hash) exploded - the LSH bucket key stream,
     * derived from the persisted shingle relation and itself persisted
@@ -47,13 +44,9 @@ object SignatureStore {
   def bands(spark: SparkSession, sfDir: String,
             bandId: String,
             bandExprs: DataFrame => DataFrame): DataFrame =
-    bandCache.computeIfAbsent((spark, sfDir, bandId), { case (s, dir, _) =>
-      bandExprs(shingles(s, dir)).persist()
-    })
-
-  private val tierCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String),
-    java.util.concurrent.CompletableFuture[DataFrame]]()
+    Memo(spark, sfDir, ("bands", bandId)) {
+      bandExprs(shingles(spark, sfDir)).persist()
+    }
 
   /** Generic session-shared materialized pipeline tier, the same
     * discipline as `shingles`/`bands` extended UP the dedup pipeline:
@@ -70,7 +63,7 @@ object SignatureStore {
     */
   def tier(spark: SparkSession, sfDir: String, id: String)
           (build: => DataFrame): DataFrame =
-    tierGet(spark, sfDir, id)(build.localCheckpoint())
+    Memo(spark, sfDir, ("tier", id))(build.localCheckpoint())
 
   /** Tier variant for builders that already materialize their result
     * (e.g. the concomp fixpoint checkpoints before returning) — a
@@ -78,66 +71,11 @@ object SignatureStore {
     */
   def tierRaw(spark: SparkSession, sfDir: String, id: String)
              (build: => DataFrame): DataFrame =
-    tierGet(spark, sfDir, id)(build)
+    Memo(spark, sfDir, ("tier", id))(build)
 
-  /** At most one build per key: the first caller claims the key by
-    * inserting its own future with `putIfAbsent`, and every later or
-    * concurrent caller waits on that future. The build itself runs
-    * OUTSIDE any map lock, because tiers build on other tiers
-    * (verifiedPairs -> candPairs -> bands) and a nested
-    * `computeIfAbsent` on one ConcurrentHashMap throws "Recursive
-    * update" whenever the two keys land in the same bin. A failed build
-    * removes its entry, so the next caller retries; callers already
-    * waiting on it see the failure.
-    */
-  private def tierGet(spark: SparkSession, sfDir: String, id: String)
-                     (build: => DataFrame): DataFrame = {
-    val k = (spark, sfDir, id)
-    val mine = new java.util.concurrent.CompletableFuture[DataFrame]()
-    val prev = tierCache.putIfAbsent(k, mine)
-    if (prev != null) {
-      try prev.join()
-      catch { case e: java.util.concurrent.CompletionException =>
-        throw e.getCause }
-    } else {
-      try {
-        val built = build
-        mine.complete(built)
-        built
-      } catch { case t: Throwable =>
-        tierCache.remove(k, mine)
-        mine.completeExceptionally(t)
-        throw t
-      }
-    }
-  }
-
-  def release(spark: SparkSession, sfDir: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    Option(shingleCache.remove((spark, sfDir))).foreach(_.unpersist())
-    bandCache.keySet.asScala
-      .filter(k => (k._1 eq spark) && k._2 == sfDir).toSeq
-      .foreach(k => Option(bandCache.remove(k)).foreach(_.unpersist()))
-    tierCache.keySet.asScala
-      .filter(k => (k._1 eq spark) && k._2 == sfDir).toSeq
-      .foreach { k =>
-        // an in-flight build is dropped from the map but left to its
-        // builder: only a completed tier has a relation to unpersist
-        Option(tierCache.remove(k))
-          .filter(f => f.isDone && !f.isCompletedExceptionally)
-          .foreach(f => org.apache.spark.sql.GraftBridge
-            .unpersistMaterialized(f.join()))
-      }
-  }
-
-  def releaseAll(spark: SparkSession): Unit = {
-    import scala.jdk.CollectionConverters._
-    (shingleCache.keySet.asScala.map(k => (k._1, k._2)) ++
-        bandCache.keySet.asScala.map(k => (k._1, k._2)) ++
-        tierCache.keySet.asScala.map(k => (k._1, k._2)))
-      .filter(_._1 eq spark).toSeq.distinct
-      .foreach { case (_, dir) => release(spark, dir) }
-  }
+  /** `Memo.release`, kept for the benchmark harness, which calls it. */
+  def release(spark: SparkSession, sfDir: String): Unit =
+    Memo.release(spark, sfDir)
 
   // ---- incremental maintenance (append-only corpus) ------------------
 

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.core.Graft
+import graft.core.{Graft, Memo}
 import HashParity.md5Hex
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -412,45 +412,15 @@ object Similarity {
     * corpus scan plus a k×dims-key partial-agg'd shuffle; the trained
     * matrix travels as a plan-time literal (broadcast-free).
     */
-  /** Trained centroid matrix memoized per (session, corpus): the
-    * Lloyd rounds are the shared front half of ann_ivf, ann_ivf_quant
-    * and dd_semantic, and re-training per query re-runs rounds x 2
-    * corpus scans for an identical k x dims result. Stands in for the
-    * persisted centroid table a 100 TB deployment trains once and
-    * ships to every consumer (same pattern as Transform.transformed /
-    * SignatureStore). Release hooks match the other memos'.
+  /** Corpus vector count feeding the `cellsFor` policy - a `Memo`
+    * entry per (session, dir) so the cheap count-star (parquet footer
+    * statistics, no data pages) runs once per corpus, not per face.
     */
-  private val centCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Seq[Seq[Double]]]()
-
-  /** Corpus vector count feeding the `cellsFor` policy - memoized per
-    * (session, dir) so the cheap count-star (parquet footer statistics,
-    * no data pages) runs once per corpus, not per face.
-    */
-  private val nVecCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), java.lang.Long]()
-
   private[graft] def vecCountFor(spark: SparkSession,
-                                 sfDir: String): Long = {
-    val it = nVecCache.keySet().iterator()
-    while (it.hasNext) {
-      if (it.next()._1.sparkContext.isStopped) it.remove()
+                                 sfDir: String): Long =
+    Memo(spark, sfDir, "vec-count") {
+      Graft.tableParallel(spark, sfDir, "embeddings").count()
     }
-    nVecCache.computeIfAbsent((spark, normDir(sfDir)), { case (s, _) =>
-      Graft.tableParallel(s, sfDir, "embeddings").count()
-    })
-  }
-
-  /** Normalized memo key: equivalent spellings of the same corpus dir
-    * (trailing slash, relative vs absolute) must hit one entry, not
-    * train twice. Pure path normalization - no filesystem access, so
-    * non-local URIs pass through untouched.
-    */
-  private def normDir(dir: String): String =
-    if (dir.contains(":")) dir // URI-schemed: leave as spelled
-    else
-      try java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString
-      catch { case _: Throwable => dir }
 
   /** Seed strategy for the Lloyd rounds. `Prefix` (the default and
     * what the oracle-gated family replays): the first k vectors by
@@ -479,16 +449,16 @@ object Similarity {
       spark: SparkSession, sfDir: String): Seq[Seq[Double]] =
     trainedCentroidsFor(spark, sfDir, initOf(spark))
 
+  /** Trained centroid matrix, a `Memo` entry per (session, corpus):
+    * the Lloyd rounds are the shared front half of ann_ivf,
+    * ann_ivf_quant and dd_semantic, and re-training per query re-runs
+    * rounds x 2 corpus scans for an identical k x dims result. Stands in
+    * for the persisted centroid table a 100 TB deployment trains once
+    * and ships to every consumer.
+    */
   private[graft] def trainedCentroidsFor(
       spark: SparkSession, sfDir: String,
       init: SeedInit): Seq[Seq[Double]] = {
-    // sweep entries pinned to stopped sessions (same pattern as
-    // CorpusOps.benchBloomCache): long-lived processes that cycle
-    // sessions without calling releaseAll must not accumulate them
-    val it = centCache.keySet().iterator()
-    while (it.hasNext) {
-      if (it.next()._1.sparkContext.isStopped) it.remove()
-    }
     // k, the init AND the training bound are part of the memo key: a
     // session that re-tunes any of them must re-train, not read a
     // stale matrix
@@ -498,23 +468,12 @@ object Similarity {
       case _ => cellsOf(spark, nVecs)
     }
     val tn = trainNOf(spark, nVecs)
-    centCache.computeIfAbsent(
-      (spark, s"${normDir(sfDir)}#k=$k#i=$init#t=$tn"), {
-      case (s, _) =>
-        trainedCentroids(
-          Graft.tableParallel(s, sfDir, "embeddings")
-            .select(col("vec_id"), col("embedding")), k = k, init = init,
-          trainN = tn)
-    })
-  }
-
-  def releaseAll(spark: SparkSession): Unit = {
-    import scala.jdk.CollectionConverters._
-    centCache.keySet.asScala.filter(_._1 eq spark).toSeq
-      .foreach(centCache.remove)
-    nVecCache.keySet.asScala.filter(_._1 eq spark).toSeq
-      .foreach(nVecCache.remove)
-    releasePq(spark)
+    Memo(spark, sfDir, ("centroids", k, init, tn)) {
+      trainedCentroids(
+        Graft.tableParallel(spark, sfDir, "embeddings")
+          .select(col("vec_id"), col("embedding")), k = k, init = init,
+        trainN = tn)
+    }
   }
 
   /** k-means|| oversampling rounds ahead of Lloyd (Bahmani et al.,
@@ -673,8 +632,9 @@ object Similarity {
           cents))
       // same materialize-before-explode as pqTrain: keep the argmax
       // out of the Generate stage (sample-bounded relation, O(train))
-      val sums = et.select(nearest.as("cid"), col("embedding"))
+      val assigned = et.select(nearest.as("cid"), col("embedding"))
         .localCheckpoint()
+      val sums = assigned
         .select(col("cid"),
           posexplode(col("embedding")).as(Seq("pos", "x")))
         .groupBy(col("cid"), col("pos"))
@@ -684,6 +644,7 @@ object Similarity {
         .collect() // bounded: ≤ ivfCentroids × dims rows
         .map(r => (r.getLong(0).toInt, r.getInt(1)) ->
           ((r.getLong(2), r.getLong(3)))).toMap
+      org.apache.spark.sql.GraftBridge.unpersistMaterialized(assigned)
       cents.zipWithIndex.map { case (old, cid) =>
         old.indices.map { p =>
           sums.get((cid, p))
@@ -1213,26 +1174,12 @@ object Similarity {
     * training (floor-toward-zero division ≙ Spark DIV ≙ DuckDB //),
     * so the codebook is bit-identical cross-engine by construction.
     */
-  private val pqCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Seq[Seq[Seq[Long]]]]()
-
   private[graft] def pqCodebookFor(
-      spark: SparkSession, sfDir: String): Seq[Seq[Seq[Long]]] = {
-    val it = pqCache.keySet().iterator()
-    while (it.hasNext) {
-      if (it.next()._1.sparkContext.isStopped) it.remove()
-    }
-    pqCache.computeIfAbsent((spark, normDir(sfDir)), { case (s, _) =>
-      pqTrain(Graft.tableParallel(s, sfDir, "embeddings")
+      spark: SparkSession, sfDir: String): Seq[Seq[Seq[Long]]] =
+    Memo(spark, sfDir, "pq-codebook") {
+      pqTrain(Graft.tableParallel(spark, sfDir, "embeddings")
         .select(col("vec_id"), col("embedding")))
-    })
-  }
-
-  def releasePq(spark: SparkSession): Unit = {
-    import scala.jdk.CollectionConverters._
-    pqCache.keySet.asScala.filter(_._1 eq spark).toSeq
-      .foreach(pqCache.remove)
-  }
+    }
 
   private val muVecExpr =
     """transform(embedding,
@@ -1311,7 +1258,8 @@ object Similarity {
       // literals make a fresh plan). The relation is sample-bounded
       // (annTrainN rows × 8 codes), so the checkpoint is O(sample),
       // never O(corpus).
-      val sums = withPqCodes(vmu, cb).localCheckpoint()
+      val coded = withPqCodes(vmu, cb).localCheckpoint()
+      val sums = coded
         .select(col("v_mu"), posexplode(col("codes")).as(Seq("m", "j")))
         .select(col("m"), col("j"), posexplode(expr(
           s"slice(v_mu, m * $pqSubDim + 1, $pqSubDim)"))
@@ -1321,6 +1269,7 @@ object Similarity {
         .collect()
         .map(r => (r.getInt(0), r.getInt(1), r.getInt(2)) ->
           ((r.getLong(3), r.getLong(4)))).toMap
+      org.apache.spark.sql.GraftBridge.unpersistMaterialized(coded)
       cb = cb.zipWithIndex.map { case (cbm, m) =>
         cbm.zipWithIndex.map { case (old, j) =>
           old.indices.map { d =>

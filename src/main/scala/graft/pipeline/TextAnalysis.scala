@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.core.Graft
+import graft.core.{Graft, Memo}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -719,52 +719,28 @@ object TextAnalysis {
       .toDF("round", "lhs", "rhs", "pair_count").orderBy(col("round"))
   }
 
-  /** Learned merge table memoized per (session, corpus) - the
+  /** Learned merge table, a `Memo` entry per (session, corpus) - the
     * trained-centroid posture (`Similarity.trainedCentroidsFor`): the
     * table is trained once and shipped to every consumer, so the
     * encode face prices the corpus-scale APPLY, not a re-train per
     * query. Deterministic induction ⇒ the memo cannot change any
-    * gated result. Stopped-session sweep + release hook match the
-    * centroid memo's. The memo holds the FULL learned rows (round,
-    * lhs, rhs, pair_count) so the learn face and the encode apply
-    * share one induction.
+    * gated result. The memo holds the FULL learned rows (round, lhs,
+    * rhs, pair_count) so the learn face and the encode apply share one
+    * induction.
     */
-  private val bpeCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Seq[(Long, String, String, Long)]]()
-
-  private def normDir(dir: String): String =
-    if (dir.contains(":")) dir
-    else
-      try java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString
-      catch { case _: Throwable => dir }
-
   private[graft] def learnedTableFor(
       spark: SparkSession,
-      sfDir: String): Seq[(Long, String, String, Long)] = {
-    val it = bpeCache.keySet().iterator()
-    while (it.hasNext) {
-      if (it.next()._1.sparkContext.isStopped) it.remove()
-    }
-    bpeCache.computeIfAbsent((spark, normDir(sfDir)), { case (s, _) =>
-      bpeLearnFrom(Graft.tableParallel(s, sfDir, "documents"), bpeRounds)
+      sfDir: String): Seq[(Long, String, String, Long)] =
+    Memo(spark, sfDir, "bpe-table") {
+      bpeLearnFrom(Graft.tableParallel(spark, sfDir, "documents"), bpeRounds)
         .collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2),
           r.getLong(3))).toSeq
-    })
-  }
+    }
 
   private[graft] def learnedMergesFor(
       spark: SparkSession, sfDir: String): Seq[(String, String)] =
     learnedTableFor(spark, sfDir).map(t => (t._2, t._3))
-
-  def releaseAll(spark: SparkSession): Unit = {
-    import scala.jdk.CollectionConverters._
-    bpeCache.keySet.asScala.filter(_._1 eq spark).toSeq
-      .foreach(bpeCache.remove)
-    listCache.keySet.asScala.filter(_._1 eq spark).toSeq
-      .foreach(k => Option(listCache.remove(k)).foreach(
-        org.apache.spark.sql.GraftBridge.unpersistMaterialized))
-  }
 
   private[graft] def bpeLearnFrom(docs: DataFrame, rounds: Int): DataFrame = {
     val spark = docs.sparkSession
@@ -1368,13 +1344,9 @@ object TextAnalysis {
     * relation is TakeOrdered-bounded (≤ 50 rows), the classic
     * "materialize the candidate list between retrieval stages" step.
     */
-  private val listCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), DataFrame]()
-
   private def memoList(spark: SparkSession, sfDir: String, id: String)
                       (build: => DataFrame): DataFrame =
-    listCache.computeIfAbsent((spark, normDir(sfDir), id),
-      _ => build.localCheckpoint())
+    Memo(spark, sfDir, ("ranked-list", id))(build.localCheckpoint())
 
   private[graft] def textList(spark: SparkSession, sfDir: String,
                               n: Int): DataFrame =

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.core.{CountK, Config, Graft, LastN, Transform}
+import graft.core.{CountK, Config, Graft, LastN, Memo, Transform}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, TimeMode, Trigger}
@@ -45,36 +45,24 @@ object StreamSum {
       .parquet(sfDir)
   }
 
-  /** Every memory-sink harness table ever registered by `runToTable`.
+  /** Run `df` to completion into a memory-sink table and read it back.
     * The memory sink pins its collected rows in driver heap for as long
     * as the temp view holds the plan - harmless for a single gated
     * query, but a multi-pass bench accumulates 100+ tables (several
     * holding complete-mode state snapshots) and the resulting GC
     * pressure lands on whichever stateful query runs late in the sweep
-    * (r9's 96s ss_stream_count_sink sf3 outlier vs 7.8s isolated).
-    * `releaseHarnessTables` drops them between passes.
+    * (r9's 96s ss_stream_count_sink sf3 outlier vs 7.8s isolated). So
+    * each view is a session-scoped `Memo` entry, dropped by
+    * `Memo.releaseAll`; callers must have materialized any DataFrame
+    * a streaming face returned before that.
     */
-  private val harnessTables =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Drop all memory-sink harness tables registered so far, releasing
-    * their driver-heap row buffers. Callers must have materialized any
-    * DataFrame returned by a streaming face before invoking this.
-    */
-  def releaseHarnessTables(spark: SparkSession): Unit = {
-    val it = harnessTables.iterator()
-    while (it.hasNext) {
-      spark.catalog.dropTempView(it.next()); it.remove()
-    }
-  }
-
   private[streaming] def runToTable(df: DataFrame, mode: OutputMode,
                                     prefix: String): DataFrame = {
     val name = s"${prefix}_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     val q = df.writeStream.format("memory").queryName(name)
       .outputMode(mode).trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
-    harnessTables.add(name)
+    Memo(q.sparkSession, Memo.session, ("harness", name))(Memo.TempView(name))
     q.sparkSession.table(name)
   }
 

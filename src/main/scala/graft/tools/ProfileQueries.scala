@@ -52,14 +52,7 @@ object ProfileQueries {
       .mode("overwrite").save()
     catch { case _: Throwable => }
     (1 to reps).foreach { pass =>
-      graft.core.Transform.releaseAll(spark)
-      graft.core.CountQueries.releaseAll(spark)
-      graft.pipeline.SignatureStore.releaseAll(spark)
-      graft.pipeline.Similarity.releaseAll(spark)
-      graft.pipeline.QualityClassifier.releaseAll(spark)
-      graft.pipeline.TextAnalysis.releaseAll(spark)
-      graft.analytics.Graph.releaseAll(spark)
-      graft.streaming.StreamSum.releaseHarnessTables(spark)
+      graft.core.Memo.releaseAll(spark)
       names.foreach { name =>
         graft.SparkEntry.queries.get(name) match {
           case Some(fn) =>

@@ -791,7 +791,7 @@ class DedupSimSpec extends SparkSpec {
 
   test("k-means|| init: opt-in via conf, deterministic, and its recall " +
        "floor holds") {
-    Similarity.releaseAll(spark)
+    graft.core.Memo.release(spark, sfDir)
     try {
       // the conf knob selects the init; the explicit-init face and the
       // conf-driven path must train the identical matrix
@@ -824,7 +824,7 @@ class DedupSimSpec extends SparkSpec {
       assert(kppR >= 0.60, f"kpp-IVF recall@10 $kppR%.3f fell below 0.60")
     } finally {
       spark.conf.unset("graft.similarity.init")
-      Similarity.releaseAll(spark)
+      graft.core.Memo.release(spark, sfDir)
     }
   }
 
@@ -905,7 +905,7 @@ class DedupSimSpec extends SparkSpec {
 
   test("graft.similarity.cells: the conf knob reaches centroid training " +
        "and retuning never reads a stale matrix") {
-    Similarity.releaseAll(spark)
+    graft.core.Memo.release(spark, sfDir)
     try {
       // conf unset -> the scale-aware default the oracle replays
       val kDefault = Similarity.cellsFor(
@@ -922,7 +922,7 @@ class DedupSimSpec extends SparkSpec {
       }
     } finally {
       spark.conf.unset("graft.similarity.cells")
-      Similarity.releaseAll(spark)
+      graft.core.Memo.release(spark, sfDir)
     }
   }
 

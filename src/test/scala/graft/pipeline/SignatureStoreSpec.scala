@@ -25,7 +25,7 @@ class SignatureStoreSpec extends SparkSpec {
     // and a repeat call with the same id must hit the memo (same ref)
     assert(SignatureStore.bands(spark, sfDir, "first-shingle", coarse)
       eq alt)
-    SignatureStore.release(spark, sfDir)
+    graft.core.Memo.release(spark, sfDir)
   }
 
   test("idle store: empty watch dir is a no-op, empty store reads as 0 rows") {

@@ -34,7 +34,7 @@ class TierSpec extends SparkSpec {
       assert(got.head.count() == 10)
     } finally {
       pool.shutdownNow()
-      SignatureStore.release(spark, key)
+      graft.core.Memo.release(spark, key)
     }
   }
 
@@ -58,6 +58,39 @@ class TierSpec extends SparkSpec {
       builds.incrementAndGet(); spark.range(1).toDF("id")
     } eq t, "a completed tier is served from the memo")
     assert(builds.get == 2)
-    SignatureStore.release(spark, key)
+    graft.core.Memo.release(spark, key)
+  }
+
+  test("Memo: 8 racing callers of A, whose build asks for B, build each " +
+       "once") {
+    val key = s"memo-nest-${System.nanoTime}"
+    val (buildsA, buildsB) = (new AtomicInteger(), new AtomicInteger())
+    val callers = 8
+    val barrier = new CyclicBarrier(callers)
+    val pool = Executors.newFixedThreadPool(callers)
+    try {
+      val got = (1 to callers).map { _ =>
+        pool.submit(new Callable[DataFrame] {
+          def call(): DataFrame = {
+            barrier.await()
+            graft.core.Memo(spark, key, "A") {
+              buildsA.incrementAndGet()
+              Thread.sleep(200) // hold the build open while others arrive
+              graft.core.Memo(spark, key, "B") {
+                buildsB.incrementAndGet()
+                spark.range(10).toDF("id")
+              }.filter("id < 5")
+            }
+          }
+        })
+      }.map(_.get(120, TimeUnit.SECONDS)) // rethrows any caller's failure
+      assert(buildsA.get == 1, s"A built ${buildsA.get} times")
+      assert(buildsB.get == 1, s"B built ${buildsB.get} times")
+      assert(got.forall(_ eq got.head), "every caller must share one value")
+      assert(got.head.count() == 5)
+    } finally {
+      pool.shutdownNow()
+      graft.core.Memo.release(spark, key)
+    }
   }
 }

@@ -63,7 +63,7 @@ object JaccardPhaseProbe {
       s
     }
 
-    graft.pipeline.SignatureStore.releaseAll(spark)
+    graft.core.Memo.releaseAll(spark)
     // phase 0: shingle build (cold store). In the sweep this cost is
     // paid by dd_minhash_lsh; afterwards the store is warm.
     time("shingles (store build)") {
