@@ -599,17 +599,17 @@ object Sketches {
     * half, every event type touched afterwards refreshed WHOLE via
     * `mergeDelta` (the update-mode publish contract, key = et), the
     * delta left PENDING (compactFrac huge), then each key's
-    * percentiles served through `getKey` — a single-bucket pruned
-    * base read plus the key-filtered pending delta, the
-    * `ss_sink_point_read` serving shape with the quantile estimator
-    * on top. Oracle: the batch per-type readout over the whole
-    * corpus, so a lookup that missed the pending delta — or merged
-    * the wrong version — mismatches.
+    * percentiles served through `getKey` — the key's home base bucket
+    * file plus the pending delta files, decoded on the driver with no
+    * Spark job, the `ss_sink_point_read` serving shape with the
+    * quantile estimator on top. Oracle: the batch per-type readout
+    * over the whole corpus, so a lookup that missed the pending delta
+    * — or merged the wrong version — mismatches.
     *
     * 100 TB shape: the additive (et, bin) partial is the landed fact
     * (map-combinable; ≤ ~2200 bins per key regardless of corpus
     * size); publish is O(changed keys × bins); a percentile read
-    * touches ONE base bucket + key-filtered deltas, never the store.
+    * touches ONE base bucket + the pending deltas, never the store.
     */
   def qDdsketchSink(spark: SparkSession, sfDir: String): DataFrame = {
     Graft.ensureConf(spark)
@@ -652,7 +652,7 @@ object Sketches {
     sink.mergeDelta("qt", delta, Seq("et"))
     // serve every key through the point-read path (the facade
     // posture). One key goes through the single-key `getKey` so the
-    // per-key serving plan stays live on this face; the full key list
+    // per-key serving path stays live on this face; the full key list
     // is served by the batched MULTIGET (`getKeys` - the
     // ss_sink_point_read precedent): identical pruned single-bucket
     // semantics, one read for the whole list instead of |keys|.
@@ -664,7 +664,9 @@ object Sketches {
       if (ets.length == 1) served0
       else served0.unionByName(
         sink.getKeys(spark, "qt", ets.tail.toSeq.map(Seq[Any](_))))
-    ddsketchQtileFromBinCounts(served)
+    // the served bins are driver rows already: one partition runs the
+    // estimator's aggregations and windows without an exchange
+    ddsketchQtileFromBinCounts(served.coalesce(1))
   }
 
   lazy val qDdsketchSinkSql: String = {

@@ -99,12 +99,12 @@ class CountSummaryView(state: DataFrame) {
   * [[graft.sinks.BucketedSnapshotCacheSink]]: `getCount` - the
   * reference's primary serving op, `getMap(name).get(key)`
   * (src-java/streamsum/TupleCache.java:20) - goes through the sink's
-  * bucket-pruned `getKey`, so a point lookup reads ONE base bucket
-  * file (+ key-filtered pending deltas) instead of scanning the whole
-  * snapshot: one Spark job with no pending delta, two with any number
-  * of them (the merge's single-partition exchange). Building the view
-  * runs no job - the sink's reads take the schema from its layout
-  * file. The per-subject slice queries (actionsForSubj,
+  * `lookup`, so a point read runs no Spark job and builds no
+  * DataFrame: the driver decodes the key's home base bucket file plus
+  * the pending delta files, the bytes one pruned scan task would read.
+  * Building the view runs no job either - the sink's reads take the
+  * schema from its layout file and their files from a driver listing.
+  * The per-subject slice queries (actionsForSubj,
   * countsForSubjAction, sumCounts, tuplesForSubjAction) key on `s`
   * alone - a strict prefix the (cache, s, a, o) hash cannot prune -
   * so they fall back to the full-relation view they always used;
@@ -125,10 +125,8 @@ final class SinkCountSummaryView(
 
   override def getCount(s: Long, a: String,
                         o: Long): (Long, Long, Option[Long]) =
-    sink.getKey(spark, sinkName, Seq(cache, s, a, o))
-      .select(col("cnt"), col("last_t"))
-      .collect().headOption
-      .map(r => (o, r.getLong(0), Some(r.getLong(1))))
+    sink.lookup(spark, sinkName, Seq(Seq(cache, s, a, o))).headOption
+      .map(r => (o, r.getAs[Long]("cnt"), Some(r.getAs[Long]("last_t"))))
       .getOrElse((o, 0L, None))
 }
 

@@ -1,7 +1,8 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
 
@@ -247,7 +248,7 @@ final class BucketedSnapshotCacheSink(root: String, keys: Seq[String],
                                       keepVersions: Int = 2,
                                       compactFrac: Double = 0.25)
     extends DeltaCacheSink {
-  import org.apache.hadoop.fs.Path
+  import org.apache.hadoop.fs.{FileStatus, Path}
   require(keys.nonEmpty && numBuckets > 0 && compactFrac > 0)
 
   private val B = "_b"
@@ -321,20 +322,71 @@ final class BucketedSnapshotCacheSink(root: String, keys: Seq[String],
 
   /** Write `df` hash-bucketed under `dir`; returns bucket -> row count.
     * The repartition puts each bucket in one task so a bucket is one
-    * file, and the count-back, given the schema, reads only parquet
-    * footers plus the `_b=` directory values (no data pages).
+    * file, and the count-back, given the schema and the files listed
+    * here, reads only parquet footers plus the `_b=` directory values
+    * (no data pages, no listing job).
     */
   private def writeBase(df: DataFrame, dir: String): Map[Int, Long] = {
+    val spark = df.sparkSession
     df.withColumn(B, bucketOf).repartition(col(B))
       .write.partitionBy(B).mode(SaveMode.Overwrite).parquet(dir)
-    df.sparkSession.read.schema(df.schema.add(B, IntegerType))
-      .parquet(dir).groupBy(col(B)).count().collect()
+    val root = qualified(spark, dir)
+    GraftBridge.parquetOfListed(spark, df.schema.add(B, IntegerType),
+        Seq(root -> filesUnder(spark, root)))
+      .groupBy(col(B)).count().collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
   }
 
+  private def qualified(spark: SparkSession, dir: String): Path = {
+    val p = new Path(dir)
+    Manifest.fsFor(spark, p).makeQualified(p)
+  }
+
+  /** Spark's file index skips these names (`_SUCCESS`, checksums). */
+  private def hidden(f: FileStatus): Boolean =
+    f.getPath.getName.startsWith("_") || f.getPath.getName.startsWith(".")
+
+  /** The data files directly in `dir`, listed on the driver. Plain
+    * `listStatus`, as Spark's own listing uses: `listFiles` builds
+    * located statuses, which on a local filesystem fork a process per
+    * file to read its permissions.
+    */
+  private def filesIn(spark: SparkSession,
+                      dir: Path): Array[FileStatus] =
+    Manifest.fsFor(spark, dir).listStatus(dir)
+      .filter(f => f.isFile && !hidden(f))
+
+  /** The data files anywhere below `dir`. */
+  private def filesUnder(spark: SparkSession,
+                         dir: Path): Array[FileStatus] =
+    Manifest.fsFor(spark, dir).listStatus(dir).flatMap { f =>
+      if (f.isDirectory) filesUnder(spark, f.getPath)
+      else if (hidden(f)) Array.empty[FileStatus]
+      else Array(f)
+    }
+
+  /** The base files of `buckets` the state homes, by bucket dir. A
+    * missing bucket dir fails the listing, so the read fails loud.
+    */
+  private def baseFiles(spark: SparkSession, name: String, st: State,
+                        buckets: Iterable[Int])
+      : Seq[(Path, Array[FileStatus])] =
+    buckets.toSeq.distinct.flatMap(b => st.base.get(b).map { case (bv, _) =>
+      val dir = qualified(spark, baseDir(name, b, bv))
+      dir -> filesIn(spark, dir)
+    })
+
+  /** The relation over listed files: no listing, no schema inference. */
   private def read(spark: SparkSession, st: State,
-                   paths: Seq[String]): DataFrame =
-    spark.read.schema(st.schema).parquet(paths: _*)
+                   listed: Seq[(Path, Array[FileStatus])])
+      : DataFrame =
+    GraftBridge.parquetOfListed(spark, st.schema, listed)
+
+  private def readDelta(spark: SparkSession, st: State, name: String,
+                        dv: Long): DataFrame = {
+    val dir = qualified(spark, deltaDir(name, dv))
+    read(spark, st, Seq(dir -> filesIn(spark, dir)))
+  }
 
   private def baseDir(name: String, b: Int, bv: Long) =
     s"${vdir(name, bv)}/base/$B=$b"
@@ -426,7 +478,7 @@ final class BucketedSnapshotCacheSink(root: String, keys: Seq[String],
           // compaction: fold ALL pending deltas into the buckets they
           // touch; untouched buckets carry forward by reference
           val deltaDfs = (st.deltas.map(_._1) :+ next).map { v =>
-            v -> read(spark, st, Seq(deltaDir(name, v)))
+            v -> readDelta(spark, st, name, v)
           }
           val touched = deltaDfs.map(_._2).reduce(_ unionByName _)
             .select(bucketOf.as(B)).distinct()
@@ -435,9 +487,8 @@ final class BucketedSnapshotCacheSink(root: String, keys: Seq[String],
           val merged =
             if (prevTouched.isEmpty) applyDeltas(
               deltaDfs.head._2.limit(0), deltaDfs)
-            else applyDeltas(read(spark, st, prevTouched.toSeq.map {
-              case (b, (bv, _)) => baseDir(name, b, bv)
-            }), deltaDfs)
+            else applyDeltas(read(spark, st,
+              baseFiles(spark, name, st, prevTouched.keys)), deltaDfs)
           val rows = writeBase(merged, s"${vdir(name, next)}/base")
           writeState(spark, name, next, st.copy(
             base = st.base.filterNot { case (b, _) => touched(b) } ++
@@ -451,27 +502,25 @@ final class BucketedSnapshotCacheSink(root: String, keys: Seq[String],
 
   override def get(spark: SparkSession, name: String): DataFrame = {
     val st = published(spark, name)
-    val base = read(spark, st, st.base.toSeq.map { case (b, (bv, _)) =>
-      baseDir(name, b, bv)
-    })
+    val base = read(spark, st, baseFiles(spark, name, st, st.base.keys))
     if (st.deltas.isEmpty) base
     else applyDeltas(base, st.deltas.map { case (dv, _) =>
-      dv -> read(spark, st, Seq(deltaDir(name, dv)))
+      dv -> readDelta(spark, st, name, dv)
     })
   }
 
   /** The key's bucket, computed DRIVER-SIDE with the identical
     * Catalyst expression the writer bucketed with (`pmod(hash(keys),
     * numBuckets)` - Murmur3, seed 42), so pruning and placement can
-    * never disagree. Literals are created at the column's exact
-    * DataType: `hash` of an Int and a Long differ, so the caller's
-    * value is converted against the stored schema, not its runtime
-    * class.
+    * never disagree. Each value is cast to its column's exact DataType
+    * first: `hash` of an Int and a Long differ, so an Int passed for a
+    * Long column must hash as the Long it matches in the key predicate.
     */
   private def bucketForKey(schema: StructType, keyVals: Seq[Any]): Int = {
-    import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3Hash}
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, Murmur3Hash}
+    val tz = Some(org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone)
     val lits = keys.zip(keyVals).map { case (k, value) =>
-      Literal.create(value, schema(k).dataType)
+      Cast(Literal(value), schema(k).dataType, tz)
     }
     val h = Murmur3Hash(lits, 42).eval(null).asInstanceOf[Int]
     ((h % numBuckets) + numBuckets) % numBuckets
@@ -479,60 +528,77 @@ final class BucketedSnapshotCacheSink(root: String, keys: Seq[String],
 
   /** Point lookup ≙ the reference's primary serving op
     * `getMap(name).get(key)` (src-java/streamsum/TupleCache.java:20):
-    * reads ONE base bucket file - the key's hash bucket - plus the
-    * pending deltas filtered by key, never the whole base. At 10⁹
-    * cached keys over 4096 buckets a point read touches ~1/4096 of
-    * the state (plus ≤ compactFrac·base of key-filtered delta rows,
-    * where the parquet key predicate skips row groups by stats);
-    * `get` + filter would list and scan every bucket. The executed
-    * plan's base scan touches exactly one `_b=` directory -
-    * spec-pinned (BucketedSinkSpec). The single-key case of `getKeys`.
+    * the single-key case of `getKeys`. At 10⁹ cached keys over 4096
+    * buckets a point read touches ~1/4096 of the state (plus the
+    * pending deltas, at most compactFrac·base rows); `get` + filter
+    * would list and scan every bucket.
     */
   def getKey(spark: SparkSession, name: String,
              keyVals: Seq[Any]): DataFrame =
     getKeys(spark, name, Seq(keyVals))
 
-  /** Batched point lookup - the serving-path MULTIGET: one pruned
-    * read for a SET of keys. Buckets are computed driver-side from the
-    * recorded schema; the plan lists only the distinct home buckets of
-    * the requested keys (≤ |keys| of numBuckets) plus the key-filtered
-    * pending deltas. Building the DataFrame runs no job. Collecting it
-    * runs ONE job when no delta is pending; otherwise the key-filtered
-    * rows of every input (base tagged version 0, each delta its own
-    * version) meet in one single-partition exchange, and the rows of
-    * each key's latest version win - with adaptive execution that is
-    * two jobs (the exchange's map stage, then the result), however
-    * many deltas are pending.
+  /** Batched point lookup - the serving-path MULTIGET - as a local
+    * relation over [[lookup]]'s rows: building it and collecting it
+    * run no Spark job, and it stays readable after retention deletes
+    * the version it was read from.
     */
   def getKeys(spark: SparkSession, name: String,
               keyRows: Seq[Seq[Any]]): DataFrame = {
+    val (schema, rows) = pointRows(spark, name, keyRows)
+    GraftBridge.ofRows(spark, org.apache.spark.sql.catalyst.plans.logical
+      .LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+  }
+
+  /** The rows of the requested keys in the latest published version,
+    * read on the driver with no Spark job ≙ the reference's in-process
+    * `get`. It decodes at most one base file per distinct home bucket
+    * (≤ |keys| of numBuckets, computed from the recorded schema) plus
+    * the pending delta files - the bytes one scan task of a pruned read
+    * would decode - with Spark's own parquet reader, keeps the rows the
+    * key predicate matches, and for each key keeps ALL rows of its
+    * highest version (base = 0, each delta its own): whole-key
+    * replacement, as the last-N ring needs.
+    */
+  def lookup(spark: SparkSession, name: String,
+             keyRows: Seq[Seq[Any]]): Seq[Row] = {
+    val (schema, rows) = pointRows(spark, name, keyRows)
+    val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToScalaConverter(schema)
+    rows.map(toRow(_).asInstanceOf[Row])
+  }
+
+  /** [[lookup]]'s rows in catalyst form, with the schema they read as. */
+  private def pointRows(spark: SparkSession, name: String,
+                        keyRows: Seq[Seq[Any]]): (StructType, Seq[InternalRow]) = {
     require(keyRows.nonEmpty && keyRows.forall(_.length == keys.length),
       s"sink keys are $keys; every key row must match")
     val st = published(spark, name)
-    val keyFilter = keyRows.map { r =>
+    val schema = GraftBridge.asNullable(st.schema) // as parquet reads it
+    val attrs = DataTypeUtils.toAttributes(schema)
+    val matches = GraftBridge.boundPredicate(spark, attrs, keyRows.map { r =>
       keys.zip(r).map { case (k, value) => col(k) === lit(value) }
         .reduce(_ && _)
-    }.reduce(_ || _)
-    val baseDirs = keyRows.map(bucketForKey(st.schema, _)).distinct
-      .flatMap(b => st.base.get(b).map { case (bv, _) =>
-        baseDir(name, b, bv)
+    }.reduce(_ || _))
+    val keyOf = org.apache.spark.sql.catalyst.expressions
+      .InterpretedUnsafeProjection.createProjection(keys.map { k =>
+        org.apache.spark.sql.catalyst.expressions.BoundReference(
+          schema.fieldIndex(k), schema(k).dataType, nullable = true)
       })
-    val inputs = (if (baseDirs.isEmpty) Nil else Seq(0L -> baseDirs)) ++
-      st.deltas.map { case (dv, _) => dv -> Seq(deltaDir(name, dv)) }
-    inputs match {
-      case Seq() => // no home bucket and no delta: no requested key exists
-        spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row],
-          st.schema)
-      case Seq((_, paths)) => // one input: nothing to merge
-        read(spark, st, paths).where(keyFilter)
-      case _ =>
-        // SinglePartition satisfies the window's key distribution: the
-        // repartition is the plan's only exchange
-        latestPerKey(inputs.map { case (v, paths) =>
-          read(spark, st, paths).where(keyFilter).withColumn(DV, lit(v))
-        }.reduce(_ unionByName _).repartition(1))
+    val decode = graft.core.Memo(spark, graft.core.Memo.session,
+      ("sinkRowReader", schema))(GraftBridge.parquetRowReader(spark, schema))
+    val homes =
+      baseFiles(spark, name, st, keyRows.map(bucketForKey(st.schema, _)))
+    val inputs = homes.map(0L -> _._2) ++ st.deltas.map { case (dv, _) =>
+      dv -> filesIn(spark, qualified(spark, deltaDir(name, dv)))
     }
+    val hits = inputs.flatMap { case (v, files) =>
+      files.toSeq.flatMap { file =>
+        decode(file).filter(matches.eval)
+          .map(row => (v, keyOf(row).copy(), row.copy()))
+      }
+    }
+    val latest = hits.groupMapReduce(_._2)(_._1)(math.max(_, _))
+    (schema, hits.collect { case (v, k, row) if latest(k) == v => row })
   }
 
   /** Delete version dirs neither inside the retention window nor

@@ -913,10 +913,11 @@ object StreamSum {
     * touched afterwards refreshed whole via `mergeDelta` - the
     * update-mode publish contract), then serve a deterministic 20-key
     * slice through [[graft.api.SinkCountSummaryView]].getCount, i.e.
-    * through the sink's `getKey`: each lookup's executed plan reads
-    * ONE base bucket file plus the key-filtered pending delta - never
-    * a full snapshot scan, and no read infers a schema (the reference's `getMap(name).get(key)`
-    * serving shape, src-java/streamsum/TupleCache.java:20). Oracle:
+    * through the sink's `lookup`: each read decodes ONE base bucket
+    * file plus the pending delta files on the driver, with no Spark
+    * job - never a full snapshot scan, and no read infers a schema (the
+    * reference's `getMap(name).get(key)` serving shape,
+    * src-java/streamsum/TupleCache.java:20). Oracle:
     * the batch count-cache state limited to the same 20 smallest
     * keys, so a lookup that missed the pending delta - or merged the
     * wrong version - mismatches.
@@ -971,11 +972,11 @@ object StreamSum {
     require(lastT0.isDefined && cnt0 > 0,
       "facade point read missed a published key")
     // ...and the batched MULTIGET serves the whole key list in one
-    // pruned read (distinct home buckets + key-filtered deltas, merged
-    // in one single-partition exchange)
+    // driver read (distinct home buckets + pending deltas) as a local
+    // relation
     val keyRows = targets.toSeq.map(r => Seq[Any](
       r.getString(0), r.getLong(1), r.getString(2), r.getLong(3)))
-    sink.getKeys(spark, "pt", keyRows)
+    sink.getKeys(spark, "pt", keyRows).coalesce(1) // driver rows: no exchange
       .orderBy(col("cache"), col("s"), col("a"), col("o"))
   }
 

@@ -94,15 +94,19 @@ class CountSummaryViewSpec extends SparkSpec {
       CountSummaryView.ByCountTime(ascending = false), Some(1L))
     assert(r.map(_._4) == Seq(10L, 7L, 1L))
 
-    // plan pin: the point read lists exactly one base `_b=` dir
-    val pt = sink.getKey(spark, "qapi", Seq("c0", 0L, "a0", 1L))
-    val buckets = pt.inputFiles.filter(_.contains("/base/"))
-      .map(_.split("_b=")(1).split("/")(0)).toSet
-    assert(buckets.size == 1, s"point read listed base buckets $buckets")
-    val allBuckets = sink.get(spark, "qapi").inputFiles
-      .filter(_.contains("/base/"))
-      .map(_.split("_b=")(1).split("/")(0)).toSet
-    assert(allBuckets.size > 1, "fixture must span several buckets")
+    // the point read needs its key's home bucket and no other base
+    // file: with every other `_b=` dir deleted it still answers, while
+    // the full relation the slice queries read fails
+    val home = Seq(("c0", 0L, "a0", 1L)).toDF("cache", "s", "a", "o")
+      .select(org.apache.spark.sql.functions.expr(
+        "pmod(hash(cache, s, a, o), 16)")).head().getInt(0)
+    val baseDirs = new java.io.File(s"$root/qapi/v=1/base").listFiles()
+      .filter(_.getName.startsWith("_b="))
+    assert(baseDirs.length > 1, "fixture must span several buckets")
+    baseDirs.filterNot(_.getName == s"_b=$home")
+      .foreach(org.apache.commons.io.FileUtils.deleteDirectory)
+    assert(v.getCount(0L, "a0", 1L) == ((1L, 5L, Some(1001L))))
+    intercept[Exception](sink.get(spark, "qapi").collect())
   }
 
   test("all-subjects call is bounded; oversized states fail fast") {

@@ -148,4 +148,46 @@ class MemoLifecycleSpec extends SparkSpec {
     assert(Transform.transformed(spark, s"$sfDir/") eq canonical)
     Memo.release(spark, sfDir)
   }
+
+  /** WARN-or-worse lines this thread logs while `f` runs. */
+  private def warnings(f: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val thread = Thread.currentThread.getName
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val capture = new AbstractAppender("memo-warnings", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN) &&
+            e.getThreadName == thread)
+          seen.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val root = LogManager.getContext(false).asInstanceOf[LoggerContext]
+      .getRootLogger
+    root.addAppender(capture)
+    try f finally { root.removeAppender(capture); capture.stop() }
+    seen.toArray(Array.empty[String]).toSeq
+  }
+
+  test("releasing a checkpointed tier frees its blocks without a warning") {
+    // control: the capture sees the warning RDD.unpersist gives a local
+    // checkpoint
+    val control = spark.range(8).toDF("id").localCheckpoint()
+    val rdd = control.queryExecution.logical
+      .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd
+    assert(warnings(rdd.unpersist(blocking = false))
+      .exists(_.contains("locally checkpointed")),
+      "the log capture must see RDD.unpersist's warning")
+    Memo.releaseAll(spark)
+    val before = persistedIds
+    SignatureStore.tier(spark, sfDir, "release-probe")(
+      spark.range(100).toDF("id")).count()
+    assert((persistedIds -- before).nonEmpty, "the tier must be checkpointed")
+    val logged = warnings(Memo.releaseAll(spark))
+    assert(logged.isEmpty, s"releasing the tier logged: $logged")
+    assert((persistedIds -- before).isEmpty, "the tier's blocks must be freed")
+  }
 }

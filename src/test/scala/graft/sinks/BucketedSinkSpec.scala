@@ -124,10 +124,19 @@ class BucketedSinkSpec extends SparkSpec {
     assert(rowSet(sink.get(spark, "c"))(7L -> "NEWEST"))
   }
 
-  /** The base `_b=` dirs a plan's file scans actually list. */
-  private def baseBuckets(d: DataFrame): Set[String] =
-    d.inputFiles.filter(_.contains("/base/"))
-      .map(_.split("_b=")(1).split("/")(0)).toSet
+  /** Deletes every base `_b=` dir of every version except the dirs of
+    * buckets in `keep`: a point read that decodes only its keys' home
+    * buckets still answers, while any read of another bucket fails.
+    */
+  private def dropBucketsExcept(root: String, name: String,
+                                keep: Set[Int]): Unit =
+    for {
+      v <- new java.io.File(s"$root/$name").listFiles()
+      if v.getName.startsWith("v=")
+      base = new java.io.File(v, "base") if base.isDirectory
+      b <- base.listFiles() if b.getName.startsWith("_b=")
+      if !keep(b.getName.stripPrefix("_b=").toInt)
+    } org.apache.commons.io.FileUtils.deleteDirectory(b)
 
   test("getKey: point read lists exactly ONE base bucket dir, merges " +
        "pending deltas by key, and equals get().filter on every key") {
@@ -140,13 +149,7 @@ class BucketedSinkSpec extends SparkSpec {
     sink.mergeDelta("c", df(7L -> "NEW", 300L -> "add"), Seq("k"))
 
     // delta-replaced key: delta wins over the base row
-    val hit = sink.getKey(spark, "c", Seq(7L))
-    assert(rowSet(hit) == Set(7L -> "NEW"))
-    // plan pin: the base scan lists the key's hash bucket and NO other
-    assert(baseBuckets(hit) == Set(bucketOf(7L, 8).toString),
-      s"point read listed base buckets ${baseBuckets(hit)}")
-    // control: the full read lists many buckets
-    assert(baseBuckets(sink.get(spark, "c")).size > 1)
+    assert(rowSet(sink.getKey(spark, "c", Seq(7L))) == Set(7L -> "NEW"))
 
     // delta-only, base-only and absent keys
     assert(rowSet(sink.getKey(spark, "c", Seq(300L))) == Set(300L -> "add"))
@@ -163,9 +166,12 @@ class BucketedSinkSpec extends SparkSpec {
       assert(rowSet(sink2.getKey(spark, "c", Seq(k))) ==
         full.filter(_._1 == k),
         s"getKey($k) diverged from the snapshot")
-    // after compaction there are no deltas: still one bucket listed
-    assert(baseBuckets(sink2.getKey(spark, "c", Seq(8L))) ==
-      Set(bucketOf(8L, 8).toString))
+    // after compaction there are no deltas: the key's home bucket is
+    // the only base file the point read needs - every other bucket can
+    // go, and the point read still answers while a full read fails
+    dropBucketsExcept(root, "c", Set(bucketOf(8L, 8)))
+    assert(rowSet(sink2.getKey(spark, "c", Seq(8L))) == Set(8L -> "NEW8"))
+    intercept[Exception](sink2.get(spark, "c").collect())
   }
 
   test("getKeys multiget: one plan listing only the requested keys' " +
@@ -180,11 +186,13 @@ class BucketedSinkSpec extends SparkSpec {
     val got = sink.getKeys(spark, "c", ks.map(Seq[Any](_)))
     assert(rowSet(got) ==
       ks.flatMap(k => rowSet(sink.getKey(spark, "c", Seq(k)))).toSet)
-    // plan pin: listed base buckets ⊆ the keys' distinct home buckets
-    val wanted = ks.map(bucketOf(_, 8)).map(_.toString).toSet
-    val listed = baseBuckets(got)
-    assert(listed.nonEmpty && listed.subsetOf(wanted),
-      s"multiget listed $listed, wanted ⊆ $wanted")
+    // the read needs no base bucket but the keys' distinct homes
+    val homes = ks.map(bucketOf(_, 8)).toSet
+    assert(homes.size < 8, s"the keys must leave a bucket out: $homes")
+    dropBucketsExcept(root, "c", homes)
+    assert(rowSet(sink.getKeys(spark, "c", ks.map(Seq[Any](_)))) ==
+      Set(7L -> "NEW", 42L -> "v42", 300L -> "add"))
+    intercept[Exception](sink.get(spark, "c").collect())
   }
 
   test("bucketed sink: torn publish stays invisible and a replay " +
@@ -315,17 +323,17 @@ class BucketedSinkSpec extends SparkSpec {
   }
 
   test("point reads and appends run only the jobs their answer needs: " +
-       "no schema inference, one merge exchange, no delta read-back") {
+       "no job for a point read, no delta read-back") {
     val root = java.nio.file.Files
       .createTempDirectory("graft_bsink_jobs").toString
     val sink = new BucketedSnapshotCacheSink(root, Seq("k"),
       numBuckets = 8, compactFrac = 1e9)
     sink.put("c", df((1L to 200L).map(i => i -> s"v$i"): _*))
-    // no pending delta: building runs nothing, collecting one scan job
+    // no pending delta: neither building nor collecting runs a job
     val (d0, built0) = jobs(sink.getKey(spark, "c", Seq(42L)))
     assert(built0 == 0, s"building getKey ran $built0 job(s)")
     val (r0, read0) = jobs(rowSet(d0))
-    assert(r0 == Set(42L -> "v42") && read0 == 1,
+    assert(r0 == Set(42L -> "v42") && read0 == 0,
       s"collecting getKey without deltas ran $read0 job(s)")
     // an append runs exactly the jobs the same delta's write runs
     val d1 = df(7L -> "NEW", 300L -> "add")
@@ -336,16 +344,37 @@ class BucketedSinkSpec extends SparkSpec {
     assert(append1 == plainWrite && append2 == plainWrite,
       s"appends ran $append1/$append2 jobs, the write alone $plainWrite")
     assert(sink.currentVersion(spark, "c").contains(3L))
-    // two pending deltas: still nothing at build, at most two at collect
+    // two pending deltas: still no job, building or collecting
     for (ks <- Seq(Seq(7L), Seq(7L, 8L, 42L, 300L, 9999L))) {
       val (d, built) = jobs(sink.getKeys(spark, "c", ks.map(Seq[Any](_))))
       assert(built == 0, s"building getKeys($ks) ran $built job(s)")
       val (got, read) = jobs(rowSet(d))
-      assert(read <= 2, s"collecting getKeys($ks) ran $read job(s)")
+      assert(read == 0, s"collecting getKeys($ks) ran $read job(s)")
       assert(got == rowSet(sink.get(spark, "c")).filter(r => ks.contains(r._1)))
     }
     val (_, builtGet) = jobs(sink.get(spark, "c"))
     assert(builtGet == 0, s"building get ran $builtGet job(s)")
+
+    // the facade's getCount: no job at 0, 1 and 2 pending deltas
+    val s = spark; import s.implicits._
+    val keys = graft.streaming.StreamSum.countSinkKeys
+    val counts = new BucketedSnapshotCacheSink(s"$root/counts", keys,
+      numBuckets = 8, compactFrac = 1e9)
+    def st(rows: (Long, String, Long, Long, Long)*) =
+      rows.toDF("s", "a", "o", "cnt", "last_t")
+        .select(lit("c0").as("cache"), col("*"))
+    counts.put("n", st((0L, "a0", 1L, 1L, 10L), (0L, "a0", 2L, 4L, 11L)))
+    for (pending <- 0 to 2) {
+      if (pending > 0) counts.mergeDelta("n",
+        st((0L, "a0", 1L, 1L + pending, 20L + pending)), keys)
+      val view = new graft.api.SinkCountSummaryView(spark, counts, "n", "c0")
+      val (got, ran) = jobs(view.getCount(0L, "a0", 1L))
+      assert(got == ((1L, 1L + pending, Some(if (pending == 0) 10L
+        else 20L + pending))) && ran == 0,
+        s"getCount at $pending pending delta(s) gave $got with $ran job(s)")
+      val (absent, ranAbsent) = jobs(view.getCount(9L, "a0", 1L))
+      assert(absent == ((1L, 0L, None)) && ranAbsent == 0)
+    }
   }
 
   test("the layout describes itself: a fresh sink instance over the same " +
@@ -412,5 +441,140 @@ class BucketedSinkSpec extends SparkSpec {
     assert(sink.currentVersion(spark, "c").isEmpty)
     sink.mergeDelta("c", df(1L -> "a"), Seq("k"))
     assert(rowSet(sink.getKey(spark, "c", Seq(1L))) == Set(1L -> "a"))
+  }
+
+  /** A relation's rows as a multiset, in a stable order. */
+  private def rows(rs: Seq[org.apache.spark.sql.Row]): Seq[Seq[Any]] =
+    rs.map(_.toSeq).sortBy(_.mkString("|"))
+
+  /** getKey, getKeys and lookup of every key row equal `get` filtered by
+    * the same key predicate, at the sink's current version.
+    */
+  private def assertPointReads(sink: BucketedSnapshotCacheSink, name: String,
+                               keyCols: Seq[String],
+                               keyRows: Seq[Seq[Any]], at: String): Unit = {
+    val full = sink.get(spark, name)
+    def oracle(ks: Seq[Seq[Any]]) = rows(full.where(ks.map { r =>
+      keyCols.zip(r).map { case (k, v) => col(k) === lit(v) }.reduce(_ && _)
+    }.reduce(_ || _)).collect().toSeq)
+    for (k <- keyRows) {
+      val want = oracle(Seq(k))
+      assert(rows(sink.getKey(spark, name, k).collect().toSeq) == want,
+        s"getKey($k) $at")
+      assert(rows(sink.lookup(spark, name, Seq(k))) == want,
+        s"lookup($k) $at")
+    }
+    assert(rows(sink.getKeys(spark, name, keyRows).collect().toSeq) ==
+      oracle(keyRows), s"getKeys $at")
+    assert(rows(sink.lookup(spark, name, keyRows)) == oracle(keyRows),
+      s"lookup of every key $at")
+  }
+
+  test("point reads equal get().filter at every version: 0, 1 and 2 " +
+       "pending deltas and after a compaction; absent, delta-only and " +
+       "twice-overwritten keys; Int values for Long key columns") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_bsink_eq").toString
+    val pending = new BucketedSnapshotCacheSink(root, Seq("k"),
+      numBuckets = 8, compactFrac = 1e9)
+    val ks: Seq[Seq[Any]] = Seq(1L, 7L, 8L, 42L, 300L, 301L, 9999L)
+      .map(Seq[Any](_)) ++ Seq(Seq[Any](7), Seq[Any](300), Seq[Any](5))
+    pending.put("c", df((1L to 200L).map(i => i -> s"v$i"): _*))
+    assertPointReads(pending, "c", Seq("k"), ks, "at 0 pending deltas")
+    // 7 overwritten, 300 exists only in the delta
+    pending.mergeDelta("c", df(7L -> "NEW", 300L -> "add"), Seq("k"))
+    assertPointReads(pending, "c", Seq("k"), ks, "at 1 pending delta")
+    // 7 overwritten twice, 8 once, 301 delta-only again
+    pending.mergeDelta("c", df(7L -> "NEWER", 8L -> "x", 301L -> "y"),
+      Seq("k"))
+    assertPointReads(pending, "c", Seq("k"), ks, "at 2 pending deltas")
+    assert(rowSet(pending.getKey(spark, "c", Seq(7))) == Set(7L -> "NEWER"))
+    // the next merge compacts: no delta pending, buckets rewritten
+    val compacting = new BucketedSnapshotCacheSink(root, Seq("k"),
+      numBuckets = 8, compactFrac = 1e-9)
+    compacting.mergeDelta("c", df(42L -> "z"), Seq("k"))
+    val state = scala.io.Source.fromFile(s"$root/c/v=4/_STATE")
+    val pendingAt4 = try state.getLines().count(_.startsWith("D "))
+      finally state.close()
+    assert(pendingAt4 == 0, "the fourth version must be a compaction")
+    assertPointReads(compacting, "c", Seq("k"), ks, "after a compaction")
+  }
+
+  test("last-N-shaped sink: a key's rows are replaced as a whole by the " +
+       "latest version holding it, in every point read") {
+    val s = spark; import s.implicits._
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_bsink_ring").toString
+    val sink = new BucketedSnapshotCacheSink(root, Seq("k"),
+      numBuckets = 4, compactFrac = 1e9)
+    def ring(rs: (Long, Int, String)*) = rs.toDF("k", "slot", "v")
+    sink.put("r", ring((1L, 0, "a"), (1L, 1, "b"), (1L, 2, "c"),
+      (2L, 0, "p"), (2L, 1, "q")))
+    val ks = Seq(1L, 2L, 3L).map(Seq[Any](_))
+    // key 1's ring shrinks to two rows; key 3 appears
+    sink.mergeDelta("r", ring((1L, 0, "d"), (1L, 1, "e"), (3L, 0, "n")),
+      Seq("k"))
+    assertPointReads(sink, "r", Seq("k"), ks, "after one ring refresh")
+    // key 1's ring refreshed again, to one row; key 2 untouched
+    sink.mergeDelta("r", ring((1L, 0, "f")), Seq("k"))
+    assertPointReads(sink, "r", Seq("k"), ks, "after two ring refreshes")
+    assert(sink.lookup(spark, "r", Seq(Seq(1L))).map(_.getString(2)) ==
+      Seq("f"))
+    assert(sink.lookup(spark, "r", Seq(Seq(2L))).map(_.getString(2))
+      .sorted == Seq("p", "q"))
+  }
+
+  test("a getKeys result stays readable after retention deletes the " +
+       "version it was read from") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_bsink_keep").toString
+    val sink = new BucketedSnapshotCacheSink(root, Seq("k"),
+      numBuckets = 4, keepVersions = 2, compactFrac = 1e9)
+    sink.put("c", df(1L -> "a", 2L -> "b", 3L -> "c"))
+    sink.mergeDelta("c", df(2L -> "B"), Seq("k"))
+    val read = sink.getKeys(spark, "c", Seq(Seq(1L), Seq(2L), Seq(9L)))
+    for (i <- 1 to 3) sink.put("c", df(1L -> s"r$i"))
+    assert(!new java.io.File(s"$root/c/v=1").exists() &&
+      !new java.io.File(s"$root/c/v=2").exists(),
+      "retention must have deleted the versions the read came from")
+    assert(rowSet(read) == Set(1L -> "a", 2L -> "B"))
+  }
+
+  test("a 64-bucket sink lists its files on the driver: building get " +
+       "runs no job, and a compaction touching every bucket starts no " +
+       "listing job") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_bsink_list").toString
+    val sink = new BucketedSnapshotCacheSink(root, Seq("k"),
+      numBuckets = 64, compactFrac = 0.5)
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerDrain(sc)
+    sc.addSparkListener(l)
+    try {
+      sink.put("c", df((1L to 2000L).map(i => i -> s"v$i"): _*))
+      assert(new java.io.File(s"$root/c/v=1/base").listFiles()
+        .count(_.getName.startsWith("_b=")) == 64)
+      val (_, built) = jobs(sink.get(spark, "c"))
+      assert(built == 0, s"building get on 64 buckets ran $built job(s)")
+      // 1,500 changed keys: every bucket touched, and past compactFrac
+      sink.mergeDelta("c", df((1L to 1500L).map(i => i -> s"w$i"): _*),
+        Seq("k"))
+      assert(new java.io.File(s"$root/c/v=2/base").listFiles()
+        .count(_.getName.startsWith("_b=")) == 64, "must compact them all")
+      val got = rowSet(sink.get(spark, "c"))
+      assert(got.size == 2000 && got(1L -> "w1") && got(2000L -> "v2000"))
+      org.apache.spark.ListenerDrain(sc)
+    } finally sc.removeSparkListener(l)
+    val listing = started.toArray(Array.empty[String])
+      .filter(_.startsWith("Listing leaf files"))
+    assert(listing.isEmpty, s"listing jobs ran: ${listing.toSeq}")
   }
 }
