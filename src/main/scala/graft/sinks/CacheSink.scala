@@ -1,10 +1,14 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, GraftBridge, Row, SaveMode, SparkSession}
+import graft.core.Memo
+import org.apache.spark.sql.{Column, DataFrame, Encoder, GraftBridge, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.{JoinedRow, Literal}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
-import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
+import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Pluggable cache-state store ≙ the reference's `CacheServer` protocol
   * (/root/reference/src-clj/streamsum/protocols.clj: `getMap(name)`
@@ -204,6 +208,25 @@ final class SnapshotCacheSink(root: String, keepVersions: Int = 2)
   }
 }
 
+/** Rows per bucket of `numBuckets`: the histogram a base write observes
+  * on itself. The buffer is one count per bucket, updated in place.
+  */
+private final class BucketRows(numBuckets: Int)
+    extends Aggregator[Int, Array[Long], Array[Long]] {
+  override def zero: Array[Long] = new Array[Long](numBuckets)
+  override def reduce(n: Array[Long], b: Int): Array[Long] = {
+    n(b) += 1; n
+  }
+  override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
+    var i = 0
+    while (i < numBuckets) { a(i) += b(i); i += 1 }
+    a
+  }
+  override def finish(n: Array[Long]): Array[Long] = n
+  override def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder()
+  override def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder()
+}
+
 /** O(delta)-per-trigger snapshot store: the scale answer to
   * [[SnapshotCacheSink]]'s full-rewrite `mergeDelta`, which at 10⁹
   * cached keys with a 10⁴-key delta pays the whole cache every
@@ -222,6 +245,17 @@ final class SnapshotCacheSink(root: String, keepVersions: Int = 2)
   *     buckets carry forward BY REFERENCE (the new version's `_STATE`
   *     map points at the old version's files, byte-identical). Read
   *     cost is thereby bounded: at most 1/compactFrac deltas pending.
+  *
+  * A publish runs its writes and nothing else. Each delta write
+  * observes its row count and the buckets the rows of each of its
+  * files hash to, recorded in `_STATE`, so a compaction knows what it
+  * rewrites without a job, and a point read opens only the delta files
+  * that can hold its keys;
+  * the compaction unions the touched base buckets with the pending
+  * deltas, tagged by version, and exchanges them ONCE on the bucket,
+  * which also clusters the keep-the-latest-version-per-key window; and
+  * every base write (`put`, a compaction) counts its rows per bucket
+  * on the write itself instead of reading them back.
   *
   * Why not bucketed rewrite alone: a d-key delta hashed over B buckets
   * touches ~B·(1-e^(-d/B)) of them - for d ≳ B that is ALL of them,
@@ -253,6 +287,7 @@ final class BucketedSnapshotCacheSink(root: String, keys: Seq[String],
 
   private val B = "_b"
   private val DV = "__dv"
+  private val P = "__p"
 
   private def manifest(name: String) = new Path(s"$root/$name/_LATEST")
   private def vdir(name: String, v: Long) = s"$root/$name/v=$v"
@@ -262,27 +297,60 @@ final class BucketedSnapshotCacheSink(root: String, keys: Seq[String],
 
   private def bucketOf = pmod(hash(keys.map(col): _*), lit(numBuckets))
 
+  /** A pending delta: its version, its row count, the buckets its
+    * rows hash to, and those of each written partition (the rows of
+    * its `part-<p>-…` files), all observed on the delta's own write.
+    */
+  private case class Delta(v: Long, rows: Long, buckets: Set[Int],
+                           parts: Map[Int, Set[Int]]) {
+    /** Whether `file` may hold a row of `wanted` buckets: a file whose
+      * name carries no observed partition is always read.
+      */
+    def mayHold(file: FileStatus, wanted: Set[Int]): Boolean =
+      partOf(file).flatMap(parts.get).forall(_.exists(wanted))
+  }
+
+  private val PartName = "part-(\\d+)-".r
+
+  /** The write partition in a Spark output file's `part-<p>-…` name. */
+  private def partOf(file: FileStatus): Option[Int] =
+    PartName.findPrefixMatchOf(file.getPath.getName).map(_.group(1).toInt)
+
   /** Per-version layout: the relation's schema, which version dir holds
     * each bucket's current base file (+ row count), and the pending
-    * delta versions in apply order (+ row counts). Written to
-    * `v=<n>/_STATE` BEFORE the flip, immutable afterwards, one line
-    * each:
+    * deltas in apply order. Written to `v=<n>/_STATE` BEFORE the flip,
+    * immutable afterwards, one line each:
     *
     *   - `S <StructType json>`: every read passes it to
     *     `spark.read.schema`, so no read runs a schema-inference job;
-    *   - `B <bucket> <home version> <rows>`;
-    *   - `D <delta version> <rows>`.
+    *   - `B <bucket> <home version> <rows>`, the rows counted on the
+    *     write that homed the bucket;
+    *   - `D <delta version> <rows> <bucket>,<bucket>,...`: the buckets
+    *     the delta touches, so a compaction knows what it rewrites
+    *     without reading the deltas;
+    *   - `P <delta version> <partition> <bucket>,<bucket>,...`: the
+    *     buckets of the rows the delta's write partition put in its
+    *     files, so a point read skips the files that cannot hold its
+    *     keys. A delta hash-partitioned on the keys into a partition
+    *     count that divides `numBuckets` (a keyed streaming
+    *     aggregation's output, say) has each bucket in one partition,
+    *     so a point read opens one file of it.
     */
   private case class State(schema: StructType,
                            base: Map[Int, (Long, Long)],
-                           deltas: Seq[(Long, Long)])
+                           deltas: Seq[Delta])
 
   private def writeState(spark: SparkSession, name: String, v: Long,
                          st: State): Unit = {
     val lines = Seq(s"S ${st.schema.json}") ++
       st.base.toSeq.sorted.map { case (b, (bv, rows)) =>
         s"B $b $bv $rows"
-      } ++ st.deltas.map { case (dv, rows) => s"D $dv $rows" }
+      } ++ st.deltas.flatMap { d =>
+        s"D ${d.v} ${d.rows} ${d.buckets.toSeq.sorted.mkString(",")}" +:
+          d.parts.toSeq.sortBy(_._1).map { case (p, bs) =>
+            s"P ${d.v} $p ${bs.toSeq.sorted.mkString(",")}"
+          }
+      }
     val p = new Path(s"${vdir(name, v)}/_STATE")
     val fs = Manifest.rawFs(Manifest.fsFor(spark, p))
     val out = fs.create(p, true)
@@ -306,9 +374,15 @@ final class BucketedSnapshotCacheSink(root: String, keys: Seq[String],
       val Array(_, b, bv, rows) = l.split(" ")
       b.toInt -> (bv.toLong, rows.toLong)
     }.toMap
+    def ints(csv: String) = csv.split(",").map(_.toInt).toSet
+    val parts = lines.collect { case l if l.startsWith("P ") =>
+      val Array(_, dv, p, buckets) = l.split(" ")
+      dv.toLong -> (p.toInt -> ints(buckets))
+    }.groupMap(_._1)(_._2)
     val deltas = lines.collect { case l if l.startsWith("D ") =>
-      val Array(_, dv, rows) = l.split(" ")
-      dv.toLong -> rows.toLong
+      val Array(_, dv, rows, buckets) = l.split(" ")
+      Delta(dv.toLong, rows.toLong, ints(buckets),
+        parts.getOrElse(dv.toLong, Array.empty).toMap)
     }.toSeq
     State(schema, base, deltas)
   }
@@ -320,21 +394,24 @@ final class BucketedSnapshotCacheSink(root: String, keys: Seq[String],
         s"BucketedSnapshotCacheSink: '$name' has never been published " +
           s"under $root")))
 
-  /** Write `df` hash-bucketed under `dir`; returns bucket -> row count.
-    * The repartition puts each bucket in one task so a bucket is one
-    * file, and the count-back, given the schema and the files listed
-    * here, reads only parquet footers plus the `_b=` directory values
-    * (no data pages, no listing job).
+  /** `df` with its bucket in `_b`, exchanged so each bucket is in one
+    * task: the one shuffle a base write needs.
     */
-  private def writeBase(df: DataFrame, dir: String): Map[Int, Long] = {
-    val spark = df.sparkSession
+  private def bucketed(df: DataFrame): DataFrame =
     df.withColumn(B, bucketOf).repartition(col(B))
+
+  /** Write `bucketed` rows (a `_b` column, each bucket in one task)
+    * under `dir`, one file per bucket; returns bucket -> row count,
+    * counted by a histogram observed on the write itself, so nothing
+    * is read back.
+    */
+  private def writeBase(bucketed: DataFrame, dir: String): Map[Int, Long] = {
+    val obs = org.apache.spark.sql.Observation()
+    val histogram = udaf(new BucketRows(numBuckets)).apply(col(B))
+    bucketed.observe(obs, histogram.as("rows"))
       .write.partitionBy(B).mode(SaveMode.Overwrite).parquet(dir)
-    val root = qualified(spark, dir)
-    GraftBridge.parquetOfListed(spark, df.schema.add(B, IntegerType),
-        Seq(root -> filesUnder(spark, root)))
-      .groupBy(col(B)).count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    obs.get("rows").asInstanceOf[scala.collection.Seq[Long]]
+      .zipWithIndex.collect { case (n, b) if n > 0 => b -> n }.toMap
   }
 
   private def qualified(spark: SparkSession, dir: String): Path = {
@@ -355,15 +432,6 @@ final class BucketedSnapshotCacheSink(root: String, keys: Seq[String],
                       dir: Path): Array[FileStatus] =
     Manifest.fsFor(spark, dir).listStatus(dir)
       .filter(f => f.isFile && !hidden(f))
-
-  /** The data files anywhere below `dir`. */
-  private def filesUnder(spark: SparkSession,
-                         dir: Path): Array[FileStatus] =
-    Manifest.fsFor(spark, dir).listStatus(dir).flatMap { f =>
-      if (f.isDirectory) filesUnder(spark, f.getPath)
-      else if (hidden(f)) Array.empty[FileStatus]
-      else Array(f)
-    }
 
   /** The base files of `buckets` the state homes, by bucket dir. A
     * missing bucket dir fails the listing, so the read fails loud.
@@ -404,21 +472,22 @@ final class BucketedSnapshotCacheSink(root: String, keys: Seq[String],
     val tagged = deltas.map { case (v, df) => df.withColumn(DV, lit(v)) }
       .reduce(_ unionByName _)
     base.join(tagged.select(keys.map(col): _*).distinct(), keys, "left_anti")
-      .unionByName(latestPerKey(tagged))
+      .unionByName(latestPerKey(tagged, keys.map(col)))
   }
 
-  /** The rows of each key's highest `__dv` version, tag dropped. */
-  private def latestPerKey(tagged: DataFrame): DataFrame =
+  /** The rows of each key's highest `__dv` version, tag dropped; the
+    * window partitions on `by`, which must hold the keys.
+    */
+  private def latestPerKey(tagged: DataFrame, by: Seq[Column]): DataFrame =
     tagged
       .withColumn("__mx", max(col(DV))
-        .over(org.apache.spark.sql.expressions.Window
-          .partitionBy(keys.map(col): _*)))
+        .over(org.apache.spark.sql.expressions.Window.partitionBy(by: _*)))
       .where(col(DV) === col("__mx")).drop(DV, "__mx")
 
   override def put(name: String, state: DataFrame): Unit = {
     val spark = state.sparkSession
     val next = currentVersion(spark, name).getOrElse(0L) + 1
-    val rows = writeBase(state, s"${vdir(name, next)}/base")
+    val rows = writeBase(bucketed(state), s"${vdir(name, next)}/base")
     if (rows.isEmpty) { // empty state: nothing published, no flip
       val p = new Path(vdir(name, next))
       val fs = Manifest.fsFor(spark, p)
@@ -457,9 +526,14 @@ final class BucketedSnapshotCacheSink(root: String, keys: Seq[String],
               s"published schema ${st.schema.simpleString}")
         val next = cur + 1
         // the O(delta) path: ONE delta-sized write per trigger, its row
-        // count observed on the write itself
+        // count and each write partition's buckets observed on the
+        // write itself (the partition is the task's, as in the names of
+        // the files it writes)
         val obs = org.apache.spark.sql.Observation()
-        delta.observe(obs, count(lit(1)).as("rows"))
+        delta.withColumn(P, spark_partition_id())
+          .observe(obs, count(lit(1)).as("rows"),
+            collect_set(struct(col(P), bucketOf)).as("parts"))
+          .drop(P)
           .write.mode(SaveMode.Overwrite).parquet(deltaDir(name, next))
         val dRows = obs.get("rows").asInstanceOf[Long]
         if (dRows == 0) { // empty batch: no version bump
@@ -468,27 +542,31 @@ final class BucketedSnapshotCacheSink(root: String, keys: Seq[String],
           if (fs.exists(p)) fs.delete(p, true)
           return
         }
-        val pendingRows = st.deltas.map(_._2).sum + dRows
+        val parts = obs.get("parts").asInstanceOf[scala.collection.Seq[Row]]
+          .groupMap(_.getInt(0))(_.getInt(1)).view.mapValues(_.toSet).toMap
+        val deltas = st.deltas :+ Delta(next, dRows,
+          parts.values.flatten.toSet, parts)
+        val pendingRows = deltas.map(_.rows).sum
         val baseRows = st.base.values.map(_._2).sum
         if (pendingRows < math.max(1L, (compactFrac * baseRows).toLong)) {
           // append-only publish: base map unchanged, delta list grows
-          writeState(spark, name, next,
-            st.copy(deltas = st.deltas :+ (next -> dRows)))
+          writeState(spark, name, next, st.copy(deltas = deltas))
         } else {
           // compaction: fold ALL pending deltas into the buckets they
-          // touch; untouched buckets carry forward by reference
-          val deltaDfs = (st.deltas.map(_._1) :+ next).map { v =>
-            v -> readDelta(spark, st, name, v)
-          }
-          val touched = deltaDfs.map(_._2).reduce(_ unionByName _)
-            .select(bucketOf.as(B)).distinct()
-            .collect().map(_.getInt(0)).toSet // bounded by numBuckets
-          val prevTouched = st.base.filter { case (b, _) => touched(b) }
-          val merged =
-            if (prevTouched.isEmpty) applyDeltas(
-              deltaDfs.head._2.limit(0), deltaDfs)
-            else applyDeltas(read(spark, st,
-              baseFiles(spark, name, st, prevTouched.keys)), deltaDfs)
+          // touch; untouched buckets carry forward by reference. The
+          // touched base buckets (version 0) and the deltas (their own
+          // versions) meet in ONE exchange on the bucket, which already
+          // clusters the per-key window, and each key keeps the rows of
+          // its highest version
+          val touched = deltas.flatMap(_.buckets).toSet
+          val homes = baseFiles(spark, name, st, touched)
+          val tagged = (if (homes.isEmpty) Nil
+              else Seq(0L -> read(spark, st, homes))) ++
+            deltas.map(d => d.v -> readDelta(spark, st, name, d.v))
+          val merged = latestPerKey(bucketed(tagged
+              .map { case (v, df) => df.withColumn(DV, lit(v)) }
+              .reduce(_ unionByName _)),
+            (B +: keys).map(col))
           val rows = writeBase(merged, s"${vdir(name, next)}/base")
           writeState(spark, name, next, st.copy(
             base = st.base.filterNot { case (b, _) => touched(b) } ++
@@ -504,8 +582,8 @@ final class BucketedSnapshotCacheSink(root: String, keys: Seq[String],
     val st = published(spark, name)
     val base = read(spark, st, baseFiles(spark, name, st, st.base.keys))
     if (st.deltas.isEmpty) base
-    else applyDeltas(base, st.deltas.map { case (dv, _) =>
-      dv -> readDelta(spark, st, name, dv)
+    else applyDeltas(base, st.deltas.map { d =>
+      d.v -> readDelta(spark, st, name, d.v)
     })
   }
 
@@ -515,15 +593,21 @@ final class BucketedSnapshotCacheSink(root: String, keys: Seq[String],
     * never disagree. Each value is cast to its column's exact DataType
     * first: `hash` of an Int and a Long differ, so an Int passed for a
     * Long column must hash as the Long it matches in the key predicate.
+    * None when a value is null or out of its column's range: such a
+    * key matches no row, so it has no bucket to read.
     */
-  private def bucketForKey(schema: StructType, keyVals: Seq[Any]): Int = {
-    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, Murmur3Hash}
+  private def bucketForKey(schema: StructType,
+                           keyVals: Seq[Any]): Option[Int] = {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Murmur3Hash}
     val tz = Some(org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone)
-    val lits = keys.zip(keyVals).map { case (k, value) =>
-      Cast(Literal(value), schema(k).dataType, tz)
+    val typed = keys.zip(keyVals).map { case (k, value) =>
+      Cast(Literal(value), schema(k).dataType, tz, EvalMode.TRY)
     }
-    val h = Murmur3Hash(lits, 42).eval(null).asInstanceOf[Int]
-    ((h % numBuckets) + numBuckets) % numBuckets
+    if (typed.exists(_.eval(null) == null)) None
+    else {
+      val h = Murmur3Hash(typed, 42).eval(null).asInstanceOf[Int]
+      Some(((h % numBuckets) + numBuckets) % numBuckets)
+    }
   }
 
   /** Point lookup ≙ the reference's primary serving op
@@ -553,11 +637,12 @@ final class BucketedSnapshotCacheSink(root: String, keys: Seq[String],
     * read on the driver with no Spark job ≙ the reference's in-process
     * `get`. It decodes at most one base file per distinct home bucket
     * (≤ |keys| of numBuckets, computed from the recorded schema) plus
-    * the pending delta files - the bytes one scan task of a pruned read
-    * would decode - with Spark's own parquet reader, keeps the rows the
-    * key predicate matches, and for each key keeps ALL rows of its
-    * highest version (base = 0, each delta its own): whole-key
-    * replacement, as the last-N ring needs.
+    * the pending delta files whose write partition holds one of those
+    * buckets - the bytes one scan task of a pruned read would decode -
+    * with Spark's own parquet reader, keeps the rows the key predicate
+    * matches, and for each key keeps ALL rows of its highest version
+    * (base = 0, each delta its own): whole-key replacement, as the
+    * last-N ring needs.
     */
   def lookup(spark: SparkSession, name: String,
              keyRows: Seq[Seq[Any]]): Seq[Row] = {
@@ -574,26 +659,34 @@ final class BucketedSnapshotCacheSink(root: String, keys: Seq[String],
       s"sink keys are $keys; every key row must match")
     val st = published(spark, name)
     val schema = GraftBridge.asNullable(st.schema) // as parquet reads it
-    val attrs = DataTypeUtils.toAttributes(schema)
-    val matches = GraftBridge.boundPredicate(spark, attrs, keyRows.map { r =>
-      keys.zip(r).map { case (k, value) => col(k) === lit(value) }
-        .reduce(_ && _)
-    }.reduce(_ || _))
+    // each key row as literals, matched by the key condition analyzed
+    // once per (schema, value types)
+    val keyMatches = keyRows.map { r =>
+      val lits = r.map(Literal(_))
+      val types = lits.map(_.dataType)
+      Memo(spark, Memo.session, ("sinkKeyMatch", schema, keys, types))(
+        GraftBridge.keyMatch(spark, DataTypeUtils.toAttributes(schema),
+          keys, types)) -> InternalRow.fromSeq(lits.map(_.value))
+    }
+    val matches = (row: InternalRow) => keyMatches.exists { case (m, key) =>
+      m.eval(new JoinedRow(row, key)) == true
+    }
     val keyOf = org.apache.spark.sql.catalyst.expressions
       .InterpretedUnsafeProjection.createProjection(keys.map { k =>
         org.apache.spark.sql.catalyst.expressions.BoundReference(
           schema.fieldIndex(k), schema(k).dataType, nullable = true)
       })
-    val decode = graft.core.Memo(spark, graft.core.Memo.session,
-      ("sinkRowReader", schema))(GraftBridge.parquetRowReader(spark, schema))
-    val homes =
-      baseFiles(spark, name, st, keyRows.map(bucketForKey(st.schema, _)))
-    val inputs = homes.map(0L -> _._2) ++ st.deltas.map { case (dv, _) =>
-      dv -> filesIn(spark, qualified(spark, deltaDir(name, dv)))
+    val decode = Memo(spark, Memo.session, ("sinkRowReader", schema))(
+      GraftBridge.parquetRowReader(spark, schema))
+    val buckets = keyRows.flatMap(bucketForKey(st.schema, _)).toSet
+    val homes = baseFiles(spark, name, st, buckets)
+    val inputs = homes.map(0L -> _._2) ++ st.deltas.map { d =>
+      d.v -> filesIn(spark, qualified(spark, deltaDir(name, d.v)))
+        .filter(d.mayHold(_, buckets))
     }
     val hits = inputs.flatMap { case (v, files) =>
       files.toSeq.flatMap { file =>
-        decode(file).filter(matches.eval)
+        decode(file).filter(matches)
           .map(row => (v, keyOf(row).copy(), row.copy()))
       }
     }
@@ -613,7 +706,7 @@ final class BucketedSnapshotCacheSink(root: String, keys: Seq[String],
       if (!fs.exists(new Path(s"${vdir(name, v)}/_STATE"))) Seq.empty
       else {
         val st = readState(spark, name, v)
-        st.base.values.toSeq.map(_._1) ++ st.deltas.map(_._1) ++ Seq(v)
+        st.base.values.toSeq.map(_._1) ++ st.deltas.map(_.v) ++ Seq(v)
       }
     }.toSet
     fs.listStatus(new Path(s"$root/$name")).foreach { s =>

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.core.{CountK, Config, Graft, LastN, Memo, Transform}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, TimeMode, Trigger}
 import org.apache.spark.sql.types.LongType
@@ -39,7 +39,7 @@ object StreamSum {
 
   private[streaming] def streamingEvents(spark: SparkSession, sfDir: String): DataFrame = {
     Graft.ensureConf(spark)
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
+    val schema = GraftBridge.parquetSchema(spark, s"$sfDir/events.parquet")
     spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet")
       .parquet(sfDir)
@@ -869,8 +869,10 @@ object StreamSum {
                                checkpoint: Option[String] = None,
                                glob: String = "events.parquet"): Unit = {
     Graft.ensureConf(spark)
-    val schema = spark.read.option("pathGlobFilter", glob)
-      .parquet(sfDir).schema
+    // read from one footer on the driver: a catch-up runs no job of
+    // its own
+    val schema = GraftBridge.parquetSchema(spark, sfDir,
+      Map("pathGlobFilter" -> glob))
     val events = spark.readStream.schema(schema)
       .option("pathGlobFilter", glob).parquet(sfDir)
     val counts = Transform(Transform.extractFrom(events))

@@ -3,11 +3,14 @@ package org.apache.spark.sql
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, BasePredicate, BindReferences, InterpretedPredicate}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, BindReferences, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan}
-import org.apache.spark.sql.execution.datasources.{FileFormat, FileStatusCache, HadoopFsRelation, InMemoryFileIndex, LogicalRelation, PartitionedFile}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.execution.datasources.{FileFormat, FileStatusCache, HadoopFsRelation, InMemoryFileIndex, LogicalRelation, PartitionedFile, PartitioningUtils}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Minimal private[sql] bridge: the standard extension-library pattern
   * for reaching Spark internals (plans to DataFrames, catalyst
@@ -91,20 +94,67 @@ object GraftBridge {
       0L, f.getLen, Array.empty, f.getModificationTime, f.getLen))
   }
 
-  /** `condition` as a predicate over rows of `attrs`: analyzed as a
-    * filter on them, so type coercion and null semantics are the ones a
-    * plan gets, then bound to their ordinals. Interpreted: a predicate
-    * over fresh literals compiles nothing.
+  /** The key-equality condition `keys(i) = p_i` over a data row of
+    * `attrs` joined with a row of parameters `p_i` typed `paramTypes`,
+    * analyzed as a filter over both, so type coercion and null
+    * semantics are the ones a plan comparing each key with a literal of
+    * that type gets, then bound to the joined row's ordinals. It
+    * depends only on the types, so one analysis serves every key of
+    * that signature; evaluate it interpreted against a
+    * `JoinedRow(data, params)`, where a null result matches nothing.
     */
-  def boundPredicate(spark: SparkSession, attrs: Seq[Attribute],
-                     condition: Column): BasePredicate = {
+  def keyMatch(spark: SparkSession, attrs: Seq[Attribute], keys: Seq[String],
+               paramTypes: Seq[DataType]): Expression = {
     val s = spark.asInstanceOf[classic.SparkSession]
-    val Filter(cond, _) = s.sessionState.analyzer.executeAndCheck(
-      Filter(s.expression(condition), LocalRelation(attrs)),
+    val params = paramTypes.zipWithIndex.map { case (t, i) =>
+      AttributeReference(s"__key$i", t)() }
+    val cond = keys.zip(params).map { case (k, p) =>
+      functions.col(k) === column(p) }.reduce(_ && _)
+    val Filter(analyzed, _) = s.sessionState.analyzer.executeAndCheck(
+      Filter(s.expression(cond), LocalRelation(attrs ++ params)),
       new org.apache.spark.sql.catalyst.QueryPlanningTracker): @unchecked
-    val p = InterpretedPredicate(BindReferences.bindReference(cond, attrs))
-    p.initialize(0)
-    p
+    BindReferences.bindReference(analyzed, attrs ++ params)
+  }
+
+  /** The schema `spark.read.options(options).parquet(path).schema`
+    * infers, read on the driver from one footer: the file Spark's
+    * non-merging inference picks (a `_common_metadata`, else a
+    * `_metadata`, else the first data file by path) among the files its
+    * index lists, converted with the converter and session confs that
+    * inference uses, plus the partition columns of the path. Spark reads
+    * that footer in a one-task job; this reads it in the calling thread.
+    */
+  def parquetSchema(spark: SparkSession, path: String,
+                    options: Map[String, String] = Map.empty): StructType = {
+    val s = spark.asInstanceOf[classic.SparkSession]
+    val conf = s.sessionState.conf
+    val hadoopConf = s.sessionState.newHadoopConfWithOptions(options)
+    val root = new Path(path)
+    val index = new InMemoryFileIndex(s,
+      Seq(root.getFileSystem(hadoopConf).makeQualified(root)), options, None)
+    val files = index.allFiles().sortBy(_.getPath.toString)
+    def named(n: String) = files.find(_.getPath.getName == n)
+    val summary = Set(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE,
+      ParquetFileWriter.PARQUET_METADATA_FILE)
+    val file = named(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE)
+      .orElse(named(ParquetFileWriter.PARQUET_METADATA_FILE))
+      .orElse(files.find(f => !summary(f.getPath.getName)))
+      .getOrElse(throw errors.QueryCompilationErrors
+        .dataSchemaNotSpecifiedError("Parquet"))
+    val converter = new ParquetToSparkSchemaConverter(
+      assumeBinaryIsString = conf.isParquetBinaryAsString,
+      assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+      inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+      nanosAsLong = conf.legacyParquetNanosAsLong,
+      respectUnknownTypeAnnotation =
+        conf.parquetReaderRespectUnknownTypeAnnotation)
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, hadoopConf),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    val data = ParquetFileFormat.readSchemaFromFooter(
+      new Footer(file.getPath, footer), converter)
+    PartitioningUtils.mergeDataAndPartitionSchema(data.asNullable,
+      index.partitionSchema, conf.caseSensitiveAnalysis)._1
   }
 
   /** A parquet relation over files the caller already listed: each

@@ -11,7 +11,9 @@ import org.apache.spark.sql.functions._
   * ~B·(1−e^(−d/B)) buckets the deltas touch; this probe builds the
   * base, lands deltas until the compactFrac threshold trips, and
   * reports the compaction's wall clock and the touched-bucket count
-  * (buckets whose home version advanced) against the prediction.
+  * (buckets whose home version advanced) against the prediction. The
+  * compaction is the delta write plus one shuffled write of the
+  * touched buckets and the deltas; `PublishJobsProbe` lists the jobs.
   *
   *   sbt "Test/runMain graft.probe.CompactionProbe [baseRows]"
   */

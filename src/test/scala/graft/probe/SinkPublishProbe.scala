@@ -15,6 +15,8 @@ import org.apache.spark.sql.functions._
   * buckets — the worst case for touched-bucket spread), reporting the
   * wall and whether the trigger crossed the compactFrac threshold (the
   * amortized constant, billed by name, never hidden in the slope).
+  * An append is the delta write alone; a compaction adds one shuffled
+  * write (`PublishJobsProbe` lists each publish's jobs).
   *
   *   sbt "Test/runMain graft.probe.SinkPublishProbe [baseRows]"
   */

@@ -306,11 +306,30 @@ class BucketedSinkSpec extends SparkSpec {
 
   /** Jobs `f` starts, counted by a listener after a bus drain. */
   private def jobs[T](f: => T): (T, Int) = {
-    val n = new java.util.concurrent.atomic.AtomicInteger
+    val (r, actions) = jobActions(f)
+    (r, actions.length)
+  }
+
+  /** The action behind each job `f` starts, in start order: the
+    * description of the job's SQL execution, which is the action's call
+    * site ("parquet at CacheSink.scala:..." for a write, "collect at
+    * ..." for a collect), or "" for a job outside any.
+    */
+  private def jobActions[T](f: => T): (T, Seq[String]) = {
+    val actions = new java.util.concurrent.ConcurrentHashMap[String, String]
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val l = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(
+          e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          actions.put(s.executionId.toString, s.description)
+        case _ => ()
+      }
       override def onJobStart(
           e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet()
+        started.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .getOrElse(""))
     }
     val sc = spark.sparkContext
     org.apache.spark.ListenerDrain(sc)
@@ -318,7 +337,8 @@ class BucketedSinkSpec extends SparkSpec {
     try {
       val r = f
       org.apache.spark.ListenerDrain(sc)
-      (r, n.get)
+      (r, started.toArray(Array.empty[String]).toSeq
+        .map(actions.getOrDefault(_, "")))
     } finally sc.removeSparkListener(l)
   }
 
@@ -576,5 +596,303 @@ class BucketedSinkSpec extends SparkSpec {
     val listing = started.toArray(Array.empty[String])
       .filter(_.startsWith("Listing leaf files"))
     assert(listing.isEmpty, s"listing jobs ran: ${listing.toSeq}")
+  }
+
+  /** The `_STATE` lines of version `v` of cache `name`. */
+  private def stateLines(root: String, name: String, v: Int): Seq[String] = {
+    val src = scala.io.Source.fromFile(s"$root/$name/v=$v/_STATE")
+    try src.getLines().toList finally src.close()
+  }
+
+  /** The buckets the rows of parquet dir `dir` hash to, by the sink's
+    * own bucket function over key column `k`.
+    */
+  private def bucketsOfRows(dir: String, n: Int): Set[Int] =
+    spark.read.parquet(dir).select(pmod(hash(col("k")), lit(n)))
+      .collect().map(_.getInt(0)).toSet
+
+  test("a put and a compaction run only their write's jobs, and an " +
+       "append only the delta's: nothing is read back or collected") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_bsink_pubjobs").toString
+    val nb = 8
+    val sink = new BucketedSnapshotCacheSink(root, Seq("k"),
+      numBuckets = nb, compactFrac = 0.05)
+    val base = df((1L to 200L).map(i => i -> s"v$i"): _*)
+    // the same rows written bucketed as the sink writes them: one
+    // exchange on the bucket, one file per bucket
+    val (_, plainBase) = jobActions(base
+      .withColumn("_b", pmod(hash(col("k")), lit(nb))).repartition(col("_b"))
+      .write.partitionBy("_b").parquet(s"$root/plain_base"))
+    val (_, put) = jobActions(sink.put("c", base))
+    assert(put.length == plainBase.length &&
+      put.forall(_.startsWith("parquet")),
+      s"put ran $put; the bucketed write alone $plainBase")
+    val d1 = df(7L -> "NEW", 300L -> "add")
+    val (_, plainDelta) = jobActions(d1.write.parquet(s"$root/plain_delta"))
+    val (_, append) = jobActions(sink.mergeDelta("c", d1, Seq("k")))
+    assert(append.length == plainDelta.length &&
+      append.forall(_.startsWith("parquet")),
+      s"append ran $append; the delta write alone $plainDelta")
+    // 2 + 9 pending rows pass 5% of the 200-row base: this one compacts
+    val d2 = df((20L to 28L).map(i => i -> s"w$i"): _*)
+    val (_, plainD2) = jobActions(d2.write.parquet(s"$root/plain_d2"))
+    val (_, compaction) = jobActions(sink.mergeDelta("c", d2, Seq("k")))
+    assert(!stateLines(root, "c", 3).exists(_.startsWith("D ")),
+      "the third version must be a compaction")
+    assert(compaction.length <= plainD2.length + 2 &&
+      compaction.forall(_.startsWith("parquet")),
+      s"compaction ran $compaction; the delta write alone $plainD2")
+    val got = rowSet(sink.get(spark, "c"))
+    assert(got.size == 201 && got(7L -> "NEW") && got(20L -> "w20") &&
+      got(300L -> "add") && got(1L -> "v1"))
+  }
+
+  test("_STATE tells the truth: every B count is the rows in its bucket's " +
+       "files, every D bucket set the buckets of that delta's rows") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_bsink_truth").toString
+    val nb = 8
+    val sink = new BucketedSnapshotCacheSink(root, Seq("k"),
+      numBuckets = nb, compactFrac = 0.05)
+    def assertTruth(v: Int): Unit = {
+      val lines = stateLines(root, "c", v)
+      for (l <- lines if l.startsWith("B ")) {
+        val Array(_, b, bv, n) = l.split(" ")
+        val rows = spark.read.parquet(s"$root/c/v=$bv/base/_b=$b").count()
+        assert(rows == n.toLong, s"v=$v: '$l' but the bucket holds $rows rows")
+      }
+      for (l <- lines if l.startsWith("D ")) {
+        val Array(_, dv, n, bs) = l.split(" ")
+        val dir = s"$root/c/v=$dv/delta"
+        assert(spark.read.parquet(dir).count() == n.toLong, s"v=$v: '$l'")
+        assert(bs.split(",").map(_.toInt).toSet == bucketsOfRows(dir, nb),
+          s"v=$v: '$l' but the delta's rows hash to ${bucketsOfRows(dir, nb)}")
+      }
+    }
+    sink.put("c", df((1L to 200L).map(i => i -> s"v$i"): _*))
+    assertTruth(1)
+    sink.mergeDelta("c", df(7L -> "a", 8L -> "b", 300L -> "c"), Seq("k"))
+    assertTruth(2)
+    sink.mergeDelta("c", df(7L -> "a2", 9L -> "b2", 301L -> "c2"), Seq("k"))
+    assertTruth(3)
+    assert(stateLines(root, "c", 3).count(_.startsWith("D ")) == 2)
+    // 3 + 3 + 5 pending rows pass 5% of the base: a compaction
+    sink.mergeDelta("c", df((40L to 44L).map(i => i -> s"w$i"): _*),
+      Seq("k"))
+    val lines4 = stateLines(root, "c", 4)
+    assert(!lines4.exists(_.startsWith("D ")), "v=4 must be a compaction")
+    assert(lines4.count(_.startsWith("B ")) == nb)
+    assertTruth(4)
+    assert(lines4.filter(_.startsWith("B ")).map(_.split(" ")(3).toLong).sum ==
+      202L, "the B counts must sum to the snapshot's rows")
+  }
+
+  /** A last-N ring row: key, slot, value. */
+  private type Slot = (Long, Int, String)
+
+  test("a last-N-shaped sink compacted over a base and two deltas equals " +
+       "the batch answer, each key's ring replaced whole") {
+    val s = spark; import s.implicits._
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_bsink_ringcmp").toString
+    // 6 + 6 pending rows pass 20% of the 40-row base: the second
+    // delta compacts
+    val sink = new BucketedSnapshotCacheSink(root, Seq("k"),
+      numBuckets = 4, compactFrac = 0.2)
+    def ring(rs: Slot*) = rs.toDF("k", "slot", "v")
+    val base: Seq[Slot] = for (k <- 1L to 10L; slot <- 0 until 4)
+      yield (k, slot, s"b$k.$slot")
+    // key 1 shrinks to 2 rows, then to 1; key 3 shrinks to 1 row twice;
+    // key 2 keeps its 4 slots with new values; key 11 is new
+    val d1: Seq[Slot] = Seq((1L, 0, "x"), (1L, 1, "y"), (3L, 0, "p")) ++
+      (0 until 3).map(i => (11L, i, s"n$i"))
+    val d2: Seq[Slot] = Seq((1L, 0, "z"), (3L, 0, "q")) ++
+      (0 until 4).map(i => (2L, i, s"g$i"))
+    sink.put("r", ring(base: _*))
+    sink.mergeDelta("r", ring(d1: _*), Seq("k"))
+    assert(stateLines(root, "r", 2).count(_.startsWith("D ")) == 1)
+    sink.mergeDelta("r", ring(d2: _*), Seq("k"))
+    assert(!stateLines(root, "r", 3).exists(_.startsWith("D ")),
+      "the second delta must compact")
+    // the batch answer: each key's rows come from the last relation
+    // holding it
+    val want = Seq(base, d1, d2).foldLeft(Map.empty[Long, Seq[Slot]]) {
+      (acc, rel) => acc ++ rel.groupBy(_._1)
+    }.values.flatten.toSet
+    val got = sink.get(spark, "r").as[Slot].collect().toSet
+    assert(got == want)
+    assert(sink.lookup(spark, "r", Seq(Seq(1L))).map(_.getString(2)) ==
+      Seq("z"))
+    assert(sink.lookup(spark, "r", Seq(Seq(2L))).map(_.getString(2))
+      .sorted == (0 until 4).map(i => s"g$i"))
+  }
+
+  test("a compaction whose deltas touch only buckets the base does not " +
+       "home writes those buckets and carries every base bucket forward") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_bsink_newbkt").toString
+    val nb = 8
+    val sink = new BucketedSnapshotCacheSink(root, Seq("k"),
+      numBuckets = nb, compactFrac = 0.1)
+    val byBucket = (1L to 400L).groupBy(bucketOf(_, nb))
+    val baseKeys = byBucket(0).take(15) ++ byBucket(1).take(15)
+    val deltaKeys = byBucket(5).take(3) ++ byBucket(6).take(3)
+    sink.put("c", df(baseKeys.map(k => k -> s"v$k"): _*))
+    val baseFiles = files(root, "c")
+    assert(stateLines(root, "c", 1).count(_.startsWith("B ")) == 2)
+    sink.mergeDelta("c", df(deltaKeys.map(k => k -> s"d$k"): _*), Seq("k"))
+    val lines = stateLines(root, "c", 2)
+    assert(!lines.exists(_.startsWith("D ")), "v=2 must be a compaction")
+    val homes = lines.filter(_.startsWith("B ")).map(_.split(" "))
+      .map(a => a(1).toInt -> a(2).toLong).toMap
+    assert(homes == Map(0 -> 1L, 1 -> 1L, 5 -> 2L, 6 -> 2L),
+      s"bucket homes after the compaction: $homes")
+    baseFiles.foreach { case (p, h) =>
+      assert(files(root, "c").get(p).contains(h), s"base file changed: $p") }
+    assert(rowSet(sink.get(spark, "c")) ==
+      (baseKeys.map(k => k -> s"v$k") ++ deltaKeys.map(k => k -> s"d$k")).toSet)
+    for (k <- Seq(baseKeys.head, deltaKeys.head, deltaKeys.last))
+      assert(rowSet(sink.getKey(spark, "c", Seq(k))) ==
+        rowSet(sink.get(spark, "c")).filter(_._1 == k))
+  }
+
+  test("every P set is the buckets of its partition's delta files, and a " +
+       "point read opens only the delta files that can hold its key") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_bsink_parts").toString
+    val nb = 8
+    val sink = new BucketedSnapshotCacheSink(root, Seq("k"),
+      numBuckets = nb, compactFrac = 1e9)
+    sink.put("c", df((1L to 200L).map(i => i -> s"v$i"): _*))
+    // hash-partitioned on the key into 4 parts, as a keyed streaming
+    // aggregation hands its output over: part = bucket mod 4
+    sink.mergeDelta("c", df((1L to 40L).map(i => i -> s"d$i"): _*)
+      .repartition(4, col("k")), Seq("k"))
+    val dir = new java.io.File(s"$root/c/v=2/delta")
+    val partFiles = dir.listFiles().filter(_.getName.startsWith("part-"))
+      .groupBy(_.getName.stripPrefix("part-").takeWhile(_ != '-').toInt)
+    assert(partFiles.size == 4, s"the delta must be 4 parts: $partFiles")
+    val lines = stateLines(root, "c", 2)
+    val parts = lines.filter(_.startsWith("P ")).map { l =>
+      val Array(_, dv, p, bs) = l.split(" ")
+      assert(dv == "2", s"'$l' names another delta")
+      p.toInt -> bs.split(",").map(_.toInt).toSet
+    }.toMap
+    assert(parts.keySet == partFiles.keySet, s"P lines $parts")
+    partFiles.foreach { case (p, fs) =>
+      val got = fs.map(f => bucketsOfRows(f.getPath, nb)).reduce(_ ++ _)
+      assert(parts(p) == got, s"P set of part $p is ${parts(p)}, rows $got")
+      assert(got.forall(_ % 4 == p), s"part $p holds buckets $got")
+    }
+    val dLine = lines.find(_.startsWith("D ")).get.split(" ")
+    assert(dLine(3).split(",").map(_.toInt).toSet == parts.values.flatten.toSet)
+    // garble every delta file but key 7's: its point read still answers,
+    // a read of the whole snapshot no longer can
+    val p7 = parts.collectFirst { case (p, bs) if bs(bucketOf(7L, nb)) => p }.get
+    for ((p, fs) <- partFiles if p != p7; f <- fs)
+      java.nio.file.Files.write(f.toPath, "not parquet".getBytes)
+    assert(rowSet(sink.getKey(spark, "c", Seq(7L))) == Set(7L -> "d7"))
+    intercept[Exception](sink.get(spark, "c").collect())
+  }
+
+  test("point-read key matching keeps the analyzer's coercion and null " +
+       "semantics, analyzed once per type signature") {
+    val s = spark; import s.implicits._
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_bsink_keytypes").toString
+    // a Long key read with Int values, and with a null value
+    val longs = new BucketedSnapshotCacheSink(root, Seq("k"), numBuckets = 4)
+    longs.put("l", df((1L to 50L).map(i => i -> s"v$i"): _*))
+    assert(longs.lookup(spark, "l", Seq(Seq(7))).map(_.getString(1)) ==
+      Seq("v7"))
+    assert(longs.lookup(spark, "l", Seq(Seq(null))).isEmpty)
+    assert(longs.lookup(spark, "l", Seq(Seq(null), Seq(8), Seq(9L)))
+      .map(_.getString(1)).sorted == Seq("v8", "v9"))
+    // an Int key read with Long values: one that wraps to an existing
+    // Int must match nothing
+    val ints = new BucketedSnapshotCacheSink(root, Seq("i"), numBuckets = 4)
+    ints.put("i", (1 to 50).map(i => i -> s"v$i").toDF("i", "v"))
+    assert(ints.lookup(spark, "i", Seq(Seq(7L))).map(_.getString(1)) ==
+      Seq("v7"))
+    val wraps = (1L << 32) + 7L
+    assert(wraps.toInt == 7)
+    assert(ints.lookup(spark, "i", Seq(Seq(wraps))).isEmpty)
+    assert(ints.getKey(spark, "i", Seq(wraps)).count() == 0)
+    // 20 Long keys, then 20 more: one analyzed condition serves them
+    def keyMatches = graft.core.Memo.ids(spark).count {
+      case (_, ("sinkKeyMatch", schema, _, _)) =>
+        schema == org.apache.spark.sql.GraftBridge.asNullable(
+          df(1L -> "a").schema)
+      case _ => false
+    }
+    longs.lookup(spark, "l", (1L to 20L).map(Seq[Any](_)))
+    longs.lookup(spark, "l", (21L to 40L).map(Seq[Any](_)))
+    assert(keyMatches == 3, "one condition per signature: Long, Int, null")
+  }
+
+  test("a catch-up with no new file starts no job") {
+    val s = spark; import s.implicits._
+    val watch = java.nio.file.Files
+      .createTempDirectory("graft_bsink_idle_watch").toString
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_bsink_idle_sink").toString
+    val cp = java.nio.file.Files
+      .createTempDirectory("graft_bsink_idle_cp").toString
+    graft.core.Graft.table(spark, sfDir, "events").limit(200).coalesce(1)
+      .write.mode("overwrite").parquet(s"$watch/a1")
+    val sink = new BucketedSnapshotCacheSink(root,
+      graft.streaming.StreamSum.countSinkKeys, numBuckets = 8)
+    def catchUp() = graft.streaming.StreamSum.streamCountsToSinkUpdate(
+      spark, s"$watch/a1", sink, "counts", Some(cp), glob = "*.parquet")
+    catchUp()
+    assert(sink.currentVersion(spark, "counts").contains(1L))
+    val (_, idle) = jobs(catchUp())
+    assert(idle == 0, s"a catch-up with nothing new ran $idle job(s)")
+    assert(sink.currentVersion(spark, "counts").contains(1L))
+  }
+
+  /** Moves the one part file Spark wrote under `tmp` to `to`. */
+  private def single(tmp: String, to: java.nio.file.Path): Unit = {
+    val part = new java.io.File(tmp).listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    java.nio.file.Files.createDirectories(to.getParent)
+    java.nio.file.Files.move(part.toPath, to)
+  }
+
+  test("a catch-up's landing schema, read from one footer, equals " +
+       "Spark's inference with no job: a table file, a glob over files " +
+       "of different schemas, a partitioned dir") {
+    val s = spark; import s.implicits._
+    import org.apache.spark.sql.GraftBridge.parquetSchema
+    val dir = java.nio.file.Files.createTempDirectory("graft_pq_schema")
+    val events = s"$sfDir/events.parquet"
+    val (got, ran) = jobs(parquetSchema(spark, events))
+    assert(got == spark.read.parquet(events).schema && ran == 0,
+      s"$got with $ran job(s)")
+    // inference without merging takes the first file by path
+    Seq((1L, "x")).toDF("a", "b").coalesce(1).write.parquet(s"$dir/t1")
+    single(s"$dir/t1", dir.resolve("land/b.parquet"))
+    Seq((1, 2.0)).toDF("a", "c").coalesce(1).write.parquet(s"$dir/t2")
+    single(s"$dir/t2", dir.resolve("land/a.parquet"))
+    Seq("z").toDF("z").coalesce(1).write.parquet(s"$dir/t3")
+    single(s"$dir/t3", dir.resolve("land/0.skip"))
+    val land = s"$dir/land"
+    for (opts <- Seq(Map("pathGlobFilter" -> "*.parquet"),
+                     Map("pathGlobFilter" -> "b*"), Map.empty[String, String])) {
+      val (got, ran) = jobs(parquetSchema(spark, land, opts))
+      assert(got == spark.read.options(opts).parquet(land).schema && ran == 0,
+        s"$opts: $got with $ran job(s)")
+    }
+    Seq((1L, 3, "p"), (2L, 4, "q")).toDF("a", "p", "v")
+      .write.partitionBy("p").parquet(s"$dir/parts")
+    assert(parquetSchema(spark, s"$dir/parts") ==
+      spark.read.parquet(s"$dir/parts").schema)
+    // no file: both fail the same way
+    java.nio.file.Files.createDirectories(dir.resolve("empty"))
+    intercept[org.apache.spark.sql.AnalysisException](
+      spark.read.parquet(s"$dir/empty").schema)
+    intercept[org.apache.spark.sql.AnalysisException](
+      parquetSchema(spark, s"$dir/empty"))
   }
 }
