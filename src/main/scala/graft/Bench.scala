@@ -113,8 +113,9 @@ object Bench {
     * generator-driven third scale anchor runs these plus
     * `corpusHeadline` (r7: the corpus generators lifted the r6
     * events-only cap). The streaming faces benched here are the
-    * update-mode SnapshotCacheSink PUBLISH path - the deployment
-    * path's number - not the Complete-mode driver memory-sink harness
+    * update-mode PUBLISH path into the bucketed sink
+    * (`BucketedSnapshotCacheSink`) - the deployment path's number -
+    * not the Complete-mode driver memory-sink harness
     * (r6's worst anchor slope was exactly that harness artifact).
     */
   val eventHeadline: Seq[String] = Seq(

@@ -2,8 +2,10 @@ package graft.pipeline
 
 import graft.analytics.Sketches
 import graft.core.{Graft, Memo}
+import graft.streaming.StreamSum.{drain, fileStream}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.functions.{col, collect_list, collect_set, count, explode, expr, lag, lit, max, min, pmod, size, struct, substring, sum, when}
 
 /** Materialized MinHash signature store: the shingle/hash relation and
@@ -115,10 +117,10 @@ object SignatureStore {
 
   /** Catch the store at `storeDir` up with whatever `glob` files
     * appeared in `watchDir` since the last call - the one streaming
-    * skeleton behind every `catchUp*`/`admit*` face. A Structured
-    * Streaming file source over the watch dir is the increment
-    * tracker: its processed-file log lives in `$storeDir/_checkpoint`,
-    * so each call reads only NEW files, as one `AvailableNow` run, and
+    * skeleton behind every `catchUp*`/`admit*` face. The file stream
+    * over the watch dir (`fileStream`) is the increment tracker: its
+    * processed-file log lives in `$storeDir/_checkpoint`, so each call
+    * reads only NEW files, as one `drain` run, and
     * `perBatch` turns each micro-batch into store relations through
     * `put`. An empty or missing watch dir is a no-op.
     *
@@ -137,18 +139,10 @@ object SignatureStore {
                       (perBatch: (DataFrame, Put) => Unit): Unit = {
     Graft.ensureConf(spark)
     if (!hasParquet(spark, watchDir)) return // nothing has arrived yet
-    val schema = spark.read.option("pathGlobFilter", glob)
-      .parquet(watchDir).schema
-    spark.readStream.schema(schema)
-      .option("pathGlobFilter", glob).parquet(watchDir)
-      .writeStream
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        perBatch(batch, new Put(storeDir, id))
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-      .awaitTermination()
+    drain(fileStream(spark, watchDir, glob), OutputMode.Append(),
+      Some(s"$storeDir/_checkpoint")) { (batch, id) =>
+      perBatch(batch, new Put(storeDir, id))
+    }
   }
 
   /** The MinHash store: each new file's shingle and band relations.

@@ -12,8 +12,8 @@ import org.apache.spark.sql.types._
   *
   * Parquet is the columnar default; JSON/CSV cover log-shaped feeds.
   * All three read with an explicit schema (no sampling-based inference
-  * at scale), and the streaming face reuses the same schemas via
-  * `readStream`.
+  * at scale). The streaming faces read parquet landing dirs through
+  * `StreamSum.fileStream`, whose schema comes from one file footer.
   */
 object EventSource {
 

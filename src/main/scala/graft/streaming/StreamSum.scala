@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.LongType
   *                    (update/complete), state linear in #keys;
   *   - last-N cache → flatMapGroupsWithState with a bounded ring-buffer
   *                    state per key ≙ LastNCache (caches.clj:55);
-  *   - in-q/out-q   → readStream/writeStream; the memory sink here is
+  *   - in-q/out-q   → `fileStream`/writeStream; the memory sink here is
   *                    the test harness stand-in for the CacheServer
   *                    sink (production: parquet/kafka/foreachBatch).
   *
@@ -37,12 +37,34 @@ object StreamSum {
   final case class LastNSnap(cache: String, k: Long, v: Long, t: Long,
                              rn: Long, ops: Long)
 
-  private[streaming] def streamingEvents(spark: SparkSession, sfDir: String): DataFrame = {
+  private[streaming] def streamingEvents(spark: SparkSession, sfDir: String): DataFrame =
+    fileStream(spark, sfDir, "events.parquet")
+
+  /** The `glob` files landing in `dir` as a stream - the one way a
+    * landing directory becomes a stream. The schema is the one Spark
+    * would infer, read from one footer on the driver, so building the
+    * stream runs no job.
+    */
+  private[graft] def fileStream(spark: SparkSession, dir: String,
+                                glob: String): DataFrame = {
     Graft.ensureConf(spark)
-    val schema = GraftBridge.parquetSchema(spark, s"$sfDir/events.parquet")
-    spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
+    val schema = GraftBridge.parquetSchema(spark, dir,
+      Map("pathGlobFilter" -> glob))
+    spark.readStream.schema(schema).option("pathGlobFilter", glob)
+      .parquet(dir)
+  }
+
+  /** Run `df` to completion as one `AvailableNow` query, handing each
+    * micro-batch and its id to `perBatch` - the one run loop of every
+    * publish and store catch-up. With a `checkpoint`, successive calls
+    * process only what arrived since the last one.
+    */
+  private[graft] def drain(df: DataFrame, mode: OutputMode,
+                           checkpoint: Option[String])
+                          (perBatch: (DataFrame, Long) => Unit): Unit = {
+    val w = df.writeStream.outputMode(mode).foreachBatch(perBatch)
+    checkpoint.fold(w)(cp => w.option("checkpointLocation", cp))
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
   }
 
   /** Run `df` to completion into a memory-sink table and read it back.
@@ -70,15 +92,10 @@ object StreamSum {
     * static table the final snapshot equals the batch `countState` - the
     * stream/batch parity the declarative formulation buys us.
     */
-  def streamCountState(spark: SparkSession, sfDir: String): DataFrame = {
-    val xf = Transform(Transform.extractFrom(streamingEvents(spark, sfDir)))
-    val counts = xf
-      .filter(col("cache").isin(Config.cachesOf(CountK): _*))
-      .groupBy(col("cache"), col("k").as("s"), col("a"), col("v").as("o"))
-      .agg(count(lit(1)).as("cnt"), max(col("t")).as("last_t"))
-    runToTable(counts, OutputMode.Complete(), "ss_stream_count")
+  def streamCountState(spark: SparkSession, sfDir: String): DataFrame =
+    runToTable(countsOf(streamingEvents(spark, sfDir)),
+      OutputMode.Complete(), "ss_stream_count")
       .orderBy(col("cache"), col("s"), col("a"), col("o"))
-  }
 
   /** Associative cache (last write wins) as a streaming aggregation:
     * max over the (t, seq, v) struct - the same declarative state as
@@ -198,10 +215,7 @@ object StreamSum {
     Graft.ensureConf(spark)
     import graft.pipeline.CorpusOps
     val (benchHashes, bloomBytes) = CorpusOps.benchBloomFor(spark, sfDir)
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(sfDir)
+    val docs = fileStream(spark, sfDir, "documents.parquet")
     val maybe = docs.filter(col("doc_id") >= CorpusOps.benchmarkDocs)
       .withColumn("toks", expr("regexp_extract_all(text, '\\\\S+', 0)"))
       .filter(size(col("toks")) >= CorpusOps.decontamN)
@@ -275,11 +289,7 @@ object StreamSum {
     * its floor member.
     */
   def streamReadability(spark: SparkSession, sfDir: String): DataFrame = {
-    Graft.ensureConf(spark)
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(sfDir)
+    val docs = fileStream(spark, sfDir, "documents.parquet")
     runToTable(graft.pipeline.TextAnalysis.readabilityFrom(docs),
       OutputMode.Append(), "ss_stream_readability")
       .orderBy(col("doc_id"))
@@ -293,11 +303,7 @@ object StreamSum {
     * `fertilityFromDocStats`.
     */
   def streamFertility(spark: SparkSession, sfDir: String): DataFrame = {
-    Graft.ensureConf(spark)
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(sfDir)
+    val docs = fileStream(spark, sfDir, "documents.parquet")
     graft.pipeline.TextAnalysis.fertilityFromDocStats(
       runToTable(graft.pipeline.TextAnalysis.fertilityDocStats(docs),
         OutputMode.Append(), "ss_stream_fertility"))
@@ -444,12 +450,8 @@ object StreamSum {
     * one-shot batch train+score.
     */
   def streamQclf(spark: SparkSession, sfDir: String): DataFrame = {
-    Graft.ensureConf(spark)
     import graft.pipeline.QualityClassifier
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(sfDir)
+    val docs = fileStream(spark, sfDir, "documents.parquet")
     val feats = runToTable(QualityClassifier.featureRows(docs),
       OutputMode.Complete(), "ss_stream_qclf")
     val (w, _) = QualityClassifier.gdTrain(
@@ -475,13 +477,9 @@ object StreamSum {
     * top-K the batch pass selects, whatever the arrival order.
     */
   def streamWeightedSample(spark: SparkSession, sfDir: String): DataFrame = {
-    Graft.ensureConf(spark)
     import graft.pipeline.CorpusOps
     import spark.implicits._
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(sfDir)
+    val docs = fileStream(spark, sfDir, "documents.parquet")
     val keyed = CorpusOps.sampleWeightedFrom(docs)
       .as[(Long, Long, Double)]
     val agg = graft.functions.TopKSampleAgg(CorpusOps.wsampleK)
@@ -531,12 +529,9 @@ object StreamSum {
     * `q_kmv_jaccard`'s oracle.
     */
   def streamKmv(spark: SparkSession, sfDir: String): DataFrame = {
-    Graft.ensureConf(spark)
     import graft.analytics.Sketches
     import spark.implicits._
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val ev = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(sfDir)
+    val ev = fileStream(spark, sfDir, "events.parquet")
     val hashed = ev.select(col("event_type"),
         expr("graft_md5_48(CAST(user_id AS STRING))").as("h"))
       .as[(String, Long)]
@@ -660,10 +655,7 @@ object StreamSum {
     Graft.ensureConf(spark)
     import graft.analytics.RangeJoin
     val deltaUs = RangeJoin.deltaUs
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    def evStream() = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
+    def evStream() = fileStream(spark, sfDir, "events.parquet")
       .select(col("event_id"), expr("graft_ts_us(ts)").as("t"))
     val probe = evStream()
       .withColumn("bkt0", expr(s"t DIV ${deltaUs}L"))
@@ -703,12 +695,8 @@ object StreamSum {
     * batch relation. Shares `q_hll_distinct`'s oracle.
     */
   def streamHll(spark: SparkSession, sfDir: String): DataFrame = {
-    Graft.ensureConf(spark)
     import graft.analytics.Sketches
-    val schema = spark.read.parquet(s"$sfDir/lineitem.parquet").schema
-    val li = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "lineitem.parquet")
-      .parquet(sfDir)
+    val li = fileStream(spark, sfDir, "lineitem.parquet")
       .select(col("l_returnflag"), col("l_orderkey"))
     val regs = Sketches.hashRho(li)
       .groupBy(col("l_returnflag"), col("reg"))
@@ -740,10 +728,7 @@ object StreamSum {
       .groupBy(col("gh")).agg(count(lit(1)).as("n_occ"))
       .filter(col("n_occ") > 1)
       .select(col("gh"))
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val docsS = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(sfDir)
+    val docsS = fileStream(spark, sfDir, "documents.parquet")
     val coveredS = Dedup.spanGrams(Dedup.spanToks(docsS))
       .join(dup, "gh")
       .groupBy(col("doc_id"))
@@ -766,12 +751,8 @@ object StreamSum {
     * `q_qtile_sketch`'s oracle.
     */
   def streamQtile(spark: SparkSession, sfDir: String): DataFrame = {
-    Graft.ensureConf(spark)
     import graft.analytics.Sketches
-    val schema = spark.read.parquet(s"$sfDir/lineitem.parquet").schema
-    val li = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "lineitem.parquet")
-      .parquet(sfDir)
+    val li = fileStream(spark, sfDir, "lineitem.parquet")
       .select(col("l_returnflag"), col("l_extendedprice"))
     val counts = Sketches.qtileBins(li)
       .groupBy(col("l_returnflag"), col("bin"))
@@ -806,11 +787,12 @@ object StreamSum {
     * mode: each batch publishes the full current state (idempotent
     * overwrite), so the sink always holds a consistent snapshot.
     *
-    * The DEFAULT sink for the flagship publish is the versioned
+    * Given a directory, this publishes into a versioned
     * `SnapshotCacheSink` (atomic manifest flip; a reader racing a
     * publish sees a complete old or new snapshot, never a torn one -
-    * CacheSinkSpec pins the race): pass a directory and get the
-    * publishing sink back for serving reads.
+    * CacheSinkSpec pins the race) and returns it for serving reads. The
+    * flagship publish is the update-mode `streamCountsToSinkUpdate`
+    * into a [[graft.sinks.BucketedSnapshotCacheSink]].
     */
   def streamCountsToSink(spark: SparkSession, sfDir: String,
                          root: String,
@@ -822,20 +804,22 @@ object StreamSum {
 
   def streamCountsToSink(spark: SparkSession, sfDir: String,
                          sink: graft.sinks.CacheSink,
-                         cacheName: String): Unit = {
-    val xf = Transform(Transform.extractFrom(streamingEvents(spark, sfDir)))
-    val counts = xf
+                         cacheName: String): Unit =
+    drain(countsOf(streamingEvents(spark, sfDir)), OutputMode.Complete(),
+      None) { (batch, _) => sink.put(cacheName, batch) }
+
+  /** The count-cache state of an event stream, keyed on `countSinkKeys`. */
+  private def countsOf(events: DataFrame): DataFrame =
+    Transform(Transform.extractFrom(events))
       .filter(col("cache").isin(Config.cachesOf(CountK): _*))
       .groupBy(col("cache"), col("k").as("s"), col("a"), col("v").as("o"))
       .agg(count(lit(1)).as("cnt"), max(col("t")).as("last_t"))
-    val q = counts.writeStream
-      .outputMode(OutputMode.Complete())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink.put(cacheName, batch)
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-  }
+
+  /** The merge keys of the two update-mode publish faces - also what
+    * their default [[graft.sinks.BucketedSnapshotCacheSink]]s bucket on.
+    */
+  val countSinkKeys: Seq[String] = Seq("cache", "s", "a", "o")
+  val lastnSinkKeys: Seq[String] = Seq("cache", "k")
 
   /** UPDATE-mode production publish: each micro-batch emits only the
     * keys whose counts CHANGED, and foreachBatch folds that delta into
@@ -857,44 +841,20 @@ object StreamSum {
     * the merge is replay-idempotent because re-publishing an
     * already-merged delta leaves the snapshot unchanged.
     */
-  /** The merge keys of the two update-mode publish faces - also what
-    * their default [[graft.sinks.BucketedSnapshotCacheSink]]s bucket on.
-    */
-  val countSinkKeys: Seq[String] = Seq("cache", "s", "a", "o")
-  val lastnSinkKeys: Seq[String] = Seq("cache", "k")
-
   def streamCountsToSinkUpdate(spark: SparkSession, sfDir: String,
                                sink: graft.sinks.DeltaCacheSink,
                                cacheName: String,
                                checkpoint: Option[String] = None,
-                               glob: String = "events.parquet"): Unit = {
-    Graft.ensureConf(spark)
-    // read from one footer on the driver: a catch-up runs no job of
-    // its own
-    val schema = GraftBridge.parquetSchema(spark, sfDir,
-      Map("pathGlobFilter" -> glob))
-    val events = spark.readStream.schema(schema)
-      .option("pathGlobFilter", glob).parquet(sfDir)
-    val counts = Transform(Transform.extractFrom(events))
-      .filter(col("cache").isin(Config.cachesOf(CountK): _*))
-      .groupBy(col("cache"), col("k").as("s"), col("a"), col("v").as("o"))
-      .agg(count(lit(1)).as("cnt"), max(col("t")).as("last_t"))
-    val q = counts.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink.mergeDelta(cacheName, batch, countSinkKeys)
-      }
-      .trigger(Trigger.AvailableNow())
-    val q2 = checkpoint
-      .fold(q)(cp => q.option("checkpointLocation", cp))
-      .start()
-    q2.awaitTermination()
-  }
+                               glob: String = "events.parquet"): Unit =
+    drain(countsOf(fileStream(spark, sfDir, glob)), OutputMode.Update(),
+      checkpoint) { (batch, _) =>
+      sink.mergeDelta(cacheName, batch, countSinkKeys)
+    }
 
   /** Bench/gate face of the update-mode publish (`ss_stream_count_sink`):
-    * publish through a real versioned `SnapshotCacheSink` and answer
-    * from the published snapshot - the number the bench reports is the
-    * deployment path's, not the memory-sink harness's. Shares the
+    * publish through a [[graft.sinks.BucketedSnapshotCacheSink]] and
+    * answer from the published snapshot - the number the bench reports
+    * is the deployment path's, not the memory-sink harness's. Shares the
     * batch count-cache oracle.
     */
   def streamCountSinkState(spark: SparkSession, sfDir: String): DataFrame = {
@@ -999,19 +959,15 @@ object StreamSum {
     val out = xf.groupByKey(r => (r.cache, r.k))
       .flatMapGroupsWithState(OutputMode.Update(),
         GroupStateTimeout.NoTimeout())(lastnHandler(n))
-    val q = out.toDF().writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // a key can emit several ring snapshots in one batch; only its
-        // LATEST (max ops) one is the delta to fold
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("cache"), col("k"))
-        val latest = batch.withColumn("mx", max(col("ops")).over(w))
-          .filter(col("ops") === col("mx")).drop("mx")
-        sink.mergeDelta(cacheName, latest, lastnSinkKeys)
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    drain(out.toDF(), OutputMode.Update(), None) { (batch, _) =>
+      // a key can emit several ring snapshots in one batch; only its
+      // LATEST (max ops) one is the delta to fold
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("cache"), col("k"))
+      val latest = batch.withColumn("mx", max(col("ops")).over(w))
+        .filter(col("ops") === col("mx")).drop("mx")
+      sink.mergeDelta(cacheName, latest, lastnSinkKeys)
+    }
   }
 
   /** Bench/gate face of the last-N update-mode publish
@@ -1084,12 +1040,8 @@ object StreamSum {
     */
   private def lshCandSnapshot(spark: SparkSession, sfDir: String,
                               table: String): DataFrame = {
-    Graft.ensureConf(spark)
     import spark.implicits._
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(sfDir)
+    val docs = fileStream(spark, sfDir, "documents.parquet")
     val bands = graft.pipeline.Dedup.bandsFrom(
         graft.pipeline.Dedup.shinglesFrom(docs))
       .as[BandRow]
@@ -1163,12 +1115,8 @@ object StreamSum {
     * prefix prune needs the final df.
     */
   def streamContainment(spark: SparkSession, sfDir: String): DataFrame = {
-    Graft.ensureConf(spark)
     import spark.implicits._
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(sfDir)
+    val docs = fileStream(spark, sfDir, "documents.parquet")
     val toks = graft.pipeline.Dedup.shinglesFrom(docs)
       .select(col("doc_id"), size(col("hs")).cast(LongType).as("sz"),
         explode(col("hs")).as("h"))
@@ -1217,11 +1165,7 @@ object StreamSum {
     * arriving vector moves its cohort's mean on every axis).
     */
   def streamEmbMmd(spark: SparkSession, sfDir: String): DataFrame = {
-    Graft.ensureConf(spark)
-    val schema = spark.read.parquet(s"$sfDir/embeddings.parquet").schema
-    val ds = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(sfDir)
+    val ds = fileStream(spark, sfDir, "embeddings.parquet")
       .select(pmod(col("vec_id"), lit(2)).as("grp"),
         posexplode(col("embedding")).as(Seq("pos", "v")))
       .select(col("grp"), col("pos").cast(LongType).as("pos"),
@@ -1240,11 +1184,7 @@ object StreamSum {
     * query-time view through the shared `rbfMmdFromFeatureSums`.
     */
   def streamEmbMmdRbf(spark: SparkSession, sfDir: String): DataFrame = {
-    Graft.ensureConf(spark)
-    val schema = spark.read.parquet(s"$sfDir/embeddings.parquet").schema
-    val vecs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(sfDir)
+    val vecs = fileStream(spark, sfDir, "embeddings.parquet")
     graft.pipeline.Similarity.rbfMmdFromFeatureSums(
       runToTable(graft.pipeline.Similarity.rbfFeatureSums(vecs),
         OutputMode.Complete(), "ss_stream_emb_mmd_rbf"))
@@ -1258,23 +1198,15 @@ object StreamSum {
     * `energyFromProjCounts`.
     */
   def streamEmbEnergy(spark: SparkSession, sfDir: String): DataFrame = {
-    Graft.ensureConf(spark)
-    val schema = spark.read.parquet(s"$sfDir/embeddings.parquet").schema
-    val vecs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(sfDir)
+    val vecs = fileStream(spark, sfDir, "embeddings.parquet")
     graft.pipeline.Similarity.energyFromProjCounts(
       runToTable(graft.pipeline.Similarity.energyProjCounts(vecs),
         OutputMode.Complete(), "ss_stream_emb_energy"))
   }
 
   def streamAnnCandidates(spark: SparkSession, sfDir: String): DataFrame = {
-    Graft.ensureConf(spark)
     import spark.implicits._
-    val schema = spark.read.parquet(s"$sfDir/embeddings.parquet").schema
-    val emb = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(sfDir)
+    val emb = fileStream(spark, sfDir, "embeddings.parquet")
     val keyed = emb.select(col("vec_id"), col("label").cast(LongType)
         .as("label"),
         expr(graft.pipeline.Similarity.bucketSpark("embedding"))
@@ -1303,10 +1235,7 @@ object StreamSum {
     Graft.ensureConf(spark)
     import graft.pipeline.TextAnalysis
     val terms = TextAnalysis.bm25QueryTerms
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val arriving = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(sfDir)
+    val arriving = fileStream(spark, sfDir, "documents.parquet")
     val cCols = terms.zipWithIndex.map { case (t, i) =>
       expr(s"CAST(size(filter(toks, x -> x = '$t')) AS BIGINT)")
         .as(s"c_$i")
@@ -1343,10 +1272,7 @@ object StreamSum {
     Graft.ensureConf(spark)
     import graft.pipeline.Similarity
     val cents = Similarity.trainedCentroidsFor(spark, sfDir)
-    val schema = spark.read.parquet(s"$sfDir/embeddings.parquet").schema
-    val arriving = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(sfDir)
+    val arriving = fileStream(spark, sfDir, "embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
     Similarity.pruneFromAffinity(
       runToTable(Similarity.affinityWith(arriving, cents),
@@ -1372,10 +1298,7 @@ object StreamSum {
     val statAssign = Similarity.ivfAssignWith(
       Graft.tableParallel(spark, sfDir, "embeddings")
         .select(col("vec_id"), col("embedding")), cents)
-    val schema = spark.read.parquet(s"$sfDir/embeddings.parquet").schema
-    val arriving = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(sfDir)
+    val arriving = fileStream(spark, sfDir, "embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
     val dups = Similarity.ivfAssignWith(arriving, cents).as("y")
       .join(broadcast(statAssign.as("x")),
@@ -1416,11 +1339,7 @@ object StreamSum {
     * `ddsketchDriftFromBinCounts`.
     */
   def streamDdsketchDrift(spark: SparkSession, sfDir: String): DataFrame = {
-    Graft.ensureConf(spark)
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val ev = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
+    val ev = fileStream(spark, sfDir, "events.parquet")
     graft.analytics.Sketches.ddsketchDriftFromBinCounts(
       runToTable(graft.analytics.Sketches.ddBinCounts(ev),
         OutputMode.Complete(), "ss_stream_ddsketch"))
@@ -1435,11 +1354,7 @@ object StreamSum {
     * through the shared `spearmanFromPairCounts`.
     */
   def streamSpearman(spark: SparkSession, sfDir: String): DataFrame = {
-    Graft.ensureConf(spark)
-    val schema = spark.read.parquet(s"$sfDir/lineitem.parquet").schema
-    val pc = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "lineitem.parquet")
-      .parquet(sfDir)
+    val pc = fileStream(spark, sfDir, "lineitem.parquet")
       .select(expr("CAST(l_quantity AS BIGINT)").as("x"),
         expr("CAST(floor(l_extendedprice * 100.0 + 0.5) AS BIGINT)")
           .as("y"))
@@ -1449,11 +1364,7 @@ object StreamSum {
   }
 
   def streamCorr(spark: SparkSession, sfDir: String): DataFrame = {
-    Graft.ensureConf(spark)
-    val schema = spark.read.parquet(s"$sfDir/lineitem.parquet").schema
-    val li = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "lineitem.parquet")
-      .parquet(sfDir)
+    val li = fileStream(spark, sfDir, "lineitem.parquet")
       .select(col("l_returnflag"),
         expr("CAST(l_quantity AS DECIMAL(10,0))").as("x"),
         expr("CAST(floor(l_extendedprice * 100.0 + 0.5) AS DECIMAL(18,0))")
@@ -1571,10 +1482,7 @@ object StreamSum {
     Graft.ensureConf(spark)
     import graft.pipeline.CorpusOps
     val cutoffs = CorpusOps.mixCutoffs(spark, sfDir)
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(sfDir)
+    val docs = fileStream(spark, sfDir, "documents.parquet")
     runToTable(CorpusOps.mixAdmit(docs, cutoffs),
       OutputMode.Append(), "ss_stream_mix")
       .orderBy(col("doc_id"))
@@ -1590,10 +1498,7 @@ object StreamSum {
     Graft.ensureConf(spark)
     import graft.pipeline.CorpusOps
     val plan = CorpusOps.upsamplePlan(spark, sfDir)
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(sfDir)
+    val docs = fileStream(spark, sfDir, "documents.parquet")
     runToTable(CorpusOps.upsampleAdmit(docs, plan),
       OutputMode.Append(), "ss_stream_upsample")
       .orderBy(col("doc_id"), col("epoch"))
@@ -1833,11 +1738,7 @@ object StreamSum {
     * zero stream-side shuffles.
     */
   def streamEntropy(spark: SparkSession, sfDir: String): DataFrame = {
-    Graft.ensureConf(spark)
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(sfDir)
+    val docs = fileStream(spark, sfDir, "documents.parquet")
     runToTable(graft.pipeline.TextAnalysis.entropyFrom(docs),
       OutputMode.Append(), "ss_stream_entropy")
       .orderBy(col("doc_id"))
@@ -1861,11 +1762,7 @@ object StreamSum {
     * never storable state — the tfidf contract on the pair axis).
     */
   def streamPmi(spark: SparkSession, sfDir: String): DataFrame = {
-    Graft.ensureConf(spark)
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(sfDir)
+    val docs = fileStream(spark, sfDir, "documents.parquet")
     val bf = graft.pipeline.TextAnalysis.bigramPairs(
         graft.pipeline.TextAnalysis.bigramDocToks(docs))
       .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cb"))
@@ -1882,11 +1779,7 @@ object StreamSum {
     * marginal: the divergence is never storable state).
     */
   def streamJsd(spark: SparkSession, sfDir: String): DataFrame = {
-    Graft.ensureConf(spark)
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(sfDir)
+    val docs = fileStream(spark, sfDir, "documents.parquet")
     val st = docs
       .select(col("source"), explode(expr(
         "regexp_extract_all(lower(text), '[a-z0-9]+', 0)")).as("term"))
@@ -1897,11 +1790,7 @@ object StreamSum {
   }
 
   def streamZipf(spark: SparkSession, sfDir: String): DataFrame = {
-    Graft.ensureConf(spark)
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(sfDir)
+    val docs = fileStream(spark, sfDir, "documents.parquet")
     val freq = docs
       .select(explode(expr(
         "regexp_extract_all(lower(text), '[a-z0-9]+', 0)")).as("term"))
@@ -1916,11 +1805,7 @@ object StreamSum {
     * a query-time view through the batch `coverageFrom`.
     */
   def streamVocabCoverage(spark: SparkSession, sfDir: String): DataFrame = {
-    Graft.ensureConf(spark)
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(sfDir)
+    val docs = fileStream(spark, sfDir, "documents.parquet")
     val freq = docs
       .select(explode(expr(
         "regexp_extract_all(lower(text), '[a-z0-9]+', 0)")).as("term"))
@@ -1940,10 +1825,7 @@ object StreamSum {
     * per-batch curve union could not).
     */
   def streamHeaps(spark: SparkSession, sfDir: String): DataFrame = {
-    Graft.ensureConf(spark)
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(sfDir)
+    val docs = fileStream(spark, sfDir, "documents.parquet")
     val toks = docs.select(col("doc_id"), explode(expr(
       "regexp_extract_all(lower(text), '[a-z0-9]+', 0)")).as("term"))
     val firstDoc = runToTable(
@@ -1966,12 +1848,8 @@ object StreamSum {
     * presentation, so the stream carries no extra state for it.
     */
   def streamTopkPerSubj(spark: SparkSession, sfDir: String): DataFrame = {
-    val xf = Transform(Transform.extractFrom(streamingEvents(spark, sfDir)))
-    val counts = xf
-      .filter(col("cache").isin(Config.cachesOf(CountK): _*))
-      .groupBy(col("cache"), col("k").as("s"), col("a"), col("v").as("o"))
-      .agg(count(lit(1)).as("cnt"), max(col("t")).as("last_t"))
-    val snap = runToTable(counts, OutputMode.Complete(), "ss_stream_topk")
+    val snap = runToTable(countsOf(streamingEvents(spark, sfDir)),
+      OutputMode.Complete(), "ss_stream_topk")
     graft.core.CountQueries.topKPerSubjFrom(snap.drop("cache"), 3)
       .orderBy(col("s"), col("rk"))
   }
@@ -2093,11 +1971,7 @@ object StreamSum {
     * quintile boundary — scores are never streaming state.
     */
   def streamRfm(spark: SparkSession, sfDir: String): DataFrame = {
-    Graft.ensureConf(spark)
-    val schema = spark.read.parquet(s"$sfDir/orders.parquet").schema
-    val orders = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "orders.parquet")
-      .parquet(sfDir)
+    val orders = fileStream(spark, sfDir, "orders.parquet")
     graft.analytics.Segmentation.rfmFrom(
       runToTable(graft.analytics.Segmentation.rfmRollup(orders),
         OutputMode.Complete(), "ss_stream_rfm"))
@@ -2111,11 +1985,7 @@ object StreamSum {
     * and evict any number of now-dominated members.
     */
   def streamSkyline(spark: SparkSession, sfDir: String): DataFrame = {
-    Graft.ensureConf(spark)
-    val schema = spark.read.parquet(s"$sfDir/orders.parquet").schema
-    val orders = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "orders.parquet")
-      .parquet(sfDir)
+    val orders = fileStream(spark, sfDir, "orders.parquet")
     graft.analytics.Segmentation.skylineFrom(
       runToTable(graft.analytics.Segmentation.rfmRollup(orders),
         OutputMode.Complete(), "ss_stream_skyline"))
@@ -2186,11 +2056,7 @@ object StreamSum {
     * arriving row shifts every later bucket's CDF).
     */
   def streamHistogram(spark: SparkSession, sfDir: String): DataFrame = {
-    Graft.ensureConf(spark)
-    val schema = spark.read.parquet(s"$sfDir/lineitem.parquet").schema
-    val lineitem = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "lineitem.parquet")
-      .parquet(sfDir)
+    val lineitem = fileStream(spark, sfDir, "lineitem.parquet")
     graft.analytics.Tpch.histogramFromCells(
       runToTable(graft.analytics.Tpch.histogramCells(lineitem),
         OutputMode.Complete(), "ss_stream_histogram"))

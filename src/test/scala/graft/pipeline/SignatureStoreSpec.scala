@@ -40,6 +40,31 @@ class SignatureStoreSpec extends SparkSpec {
     assert(SignatureStore.storedCells(spark, store).count() == 0)
     assert(SignatureStore.storedCandidates(spark, store).count() == 0)
     assert(SignatureStore.storedAnnCandidates(spark, store).count() == 0)
+    // once a file has arrived and been caught up, a catch-up with no new
+    // file starts no job: the landing schema is read on the driver and
+    // the stream finds nothing to run
+    graft.core.Graft.table(spark, sfDir, "documents").limit(8).coalesce(1)
+      .write.mode("append").parquet(watch)
+    SignatureStore.catchUp(spark, watch, store)
+    assert(SignatureStore.storedShingles(spark, store).count() == 8)
+    val ran = jobs(SignatureStore.catchUp(spark, watch, store))
+    assert(ran == 0, s"a catch-up with nothing new ran $ran job(s)")
+    assert(SignatureStore.storedShingles(spark, store).count() == 8)
+  }
+
+  /** Jobs `f` starts, counted by a listener after a bus drain. */
+  private def jobs(f: => Unit): Int = {
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.incrementAndGet(): Unit
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerDrain(sc)
+    sc.addSparkListener(l)
+    try { f; org.apache.spark.ListenerDrain(sc); started.get }
+    finally sc.removeSparkListener(l)
   }
 
   test("store dirs as URIs: file: scheme probes and reads like a local path") {

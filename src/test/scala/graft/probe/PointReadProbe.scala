@@ -5,8 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** Driver cost of the bucketed sink's serving reads at 0, 1 and 2
   * pending deltas: `SinkCountSummaryView` construction (the full
   * relation over driver-listed files), `getCount` (the job-free point
-  * read), `getKeys` collected and a `countsForSubjAction` slice (a
-  * Spark job over the full relation), each as the median of warm reps.
+  * read), `getKeys` of 20 keys collected and a `countsForSubjAction`
+  * slice (a Spark job over the full relation), each as the median of
+  * warm reps; `getCount` and `getKeys` take `reps` samples each.
   * Shape: a count-cache base of `baseRows` keys in the default 64
   * buckets, deltas of about 50 changed keys written as 4 files.
   *
@@ -49,9 +50,14 @@ object PointReadProbe {
       val viewMs = median((1 to 5).map(_ => ms(view())))
       val getMs = median(probeKeys.map(k =>
         ms(v.getCount(k % 97, s"a${k % 3}", k))))
-      val multiMs = median((1 to 5).map(_ => ms(sink.getKeys(spark, "n",
-        probeKeys.take(20).map(k => Seq[Any]("c0", (k % 97).toLong, s"a${k % 3}",
-          k.toLong))).collect())))
+      // rep i reads its own 20 keys, after a warm-up of its own: the
+      // getCount warm-up does not reach the multiget's code paths
+      def multiget(i: Int) = sink.getKeys(spark, "n", (0 until 20).map { j =>
+        val k = ((i * 20 + j) * 131) % baseRows
+        Seq[Any]("c0", (k % 97).toLong, s"a${k % 3}", k.toLong)
+      }).collect()
+      (0 until math.max(5, reps / 10)).foreach(i => multiget(reps + i))
+      val multiMs = median((0 until reps).map(i => ms(multiget(i))))
       (1 to 10).foreach(i => v.countsForSubjAction(i.toLong, "a0"))
       val sliceMs = median((1 to 30).map(i => ms(
         v.countsForSubjAction(i.toLong, "a0", "a1", "a2"))))

@@ -870,6 +870,14 @@ class BucketedSinkSpec extends SparkSpec {
     val (got, ran) = jobs(parquetSchema(spark, events))
     assert(got == spark.read.parquet(events).schema && ran == 0,
       s"$got with $ran job(s)")
+    // every table a streaming face reads as a landing-dir stream
+    for (t <- Seq("events", "documents", "embeddings", "lineitem", "orders")) {
+      val (stream, ran) = jobs(graft.streaming.StreamSum
+        .fileStream(spark, sfDir, s"$t.parquet"))
+      assert(stream.isStreaming && ran == 0, s"$t: $ran job(s)")
+      assert(stream.schema == spark.read.parquet(s"$sfDir/$t.parquet").schema,
+        s"$t: ${stream.schema.simpleString}")
+    }
     // inference without merging takes the first file by path
     Seq((1L, "x")).toDF("a", "b").coalesce(1).write.parquet(s"$dir/t1")
     single(s"$dir/t1", dir.resolve("land/b.parquet"))
