@@ -1631,11 +1631,11 @@ object Graph {
     * size. The partition step every graph pipeline runs first (process
     * components independently; find the orphaned tail the giant
     * component misses). Reuses the dedup family's label-propagation +
-    * path-halving fixpoint (`Dedup.resolveComponents` — O(log diameter)
-    * rounds, one keyed shuffle each); the oracle recomputes the same
-    * partition as a recursive reachability closure, which only has to
-    * hold at gate scale — at 100 TB the Spark loop's per-round cost is
-    * the edge relation's one shuffle, the textbook hash-min CC plan.
+    * path-halving fixpoint (`Dedup.resolveComponents` — a chain of d
+    * hops in at most ceil(log2 d) + 1 rounds, one job each); the oracle
+    * recomputes the same partition as a recursive reachability closure,
+    * which only has to hold at gate scale — at 100 TB a round costs two
+    * exchanges over co-partitioned node state, the hash-min CC plan.
     */
   def qConcomp(spark: SparkSession, sfDir: String): DataFrame =
     concompFromPairs(spark, fwdPairsFor(spark, sfDir))

@@ -2,10 +2,13 @@ package graft.pipeline
 
 import graft.core.{Graft, Memo}
 import HashParity._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Document deduplication suite: exact, MinHash+LSH, n-gram Jaccard
   * verification, SimHash. Designed for the 100 TB shape:
@@ -1366,15 +1369,11 @@ object Dedup {
   // ---- dd_clusters ---------------------------------------------------
 
   /** Resolve verified duplicate pairs into clusters: connected
-    * components by iterative min-label propagation (labels converge in
-    * O(component diameter) rounds - dup clusters are shallow, so 2-3
-    * rounds in practice; each round is one keyed shuffle). Output: one
-    * row per clustered doc with its cluster id (the component's min
-    * doc_id) and the keep-this-one canonical flag - the step that
-    * turns near-dup PAIRS into an actionable keep/drop decision.
-    * The driver-side loop is the one legitimately iterative pattern
-    * here (bounded by graph diameter, not data size); each iteration's
-    * result is materialized so lineage stays flat.
+    * components by min-label propagation with path halving
+    * (`resolveComponents`). Output: one row per clustered doc with its
+    * cluster id (the component's min doc_id) and the keep-this-one
+    * canonical flag - the step that turns near-dup PAIRS into an
+    * actionable keep/drop decision.
     */
   def dupClusters(spark: SparkSession, sfDir: String): DataFrame =
     // session-shared (tierRaw: resolveComponents already checkpoints):
@@ -1387,28 +1386,37 @@ object Dedup {
       resolveComponents(spark, edges)._1
     }
 
-  /** Connected components of a (doc_a, doc_b) edge relation. Each
-    * round is min-label propagation over the edges PLUS a path-halving
-    * step (lbl <- lbl(lbl), the pointer-jumping half of union-find):
+  /** Connected components of a (doc_a, doc_b) edge relation of long
+    * ids, as `(doc_id, cluster_id = component min, is_canonical)`
+    * ordered by doc_id, plus the round count (spec hook). Each round is
+    * min-label propagation over the edges plus a path-halving step
+    * (lbl <- lbl(lbl), the pointer-jumping half of union-find):
     * propagation alone needs O(component diameter) rounds, and
     * chain-shaped components - exactly what templated boilerplate
-    * produces, A~B~C~... with no A~C edge - make diameter O(n). The
-    * jump step doubles the distance a label travels per round, so the
-    * loop converges in O(log diameter) rounds for one extra
-    * (small, labels-only) self-join per round. Returns the projected
-    * cluster relation plus the round count (spec hook).
+    * produces, A~B~C~... with no A~C edge - make diameter O(n). Jumping
+    * through the propagated labels, the distance d_k a label has
+    * travelled along a chain after round k is at least 2 d_(k-1) + 2,
+    * so a chain of d hops ends within ceil(log2 d) + 1 rounds, the last
+    * one changing nothing (specs pin d = 64 and d = 999).
+    * The loop keeps the GraphX layout (Gonzalez et al., OSDI 2014):
+    * neighbours and labels in one keyed RDD, hash-partitioned once by
+    * node, so both joins back into it are narrow zips. A round has two
+    * exchanges (asks, replies); its count of changed labels is its only
+    * job and `localCheckpoint`s its state.
     */
   private[graft] def resolveComponents(spark: SparkSession,
                                        edges: DataFrame): (DataFrame, Int) = {
-    val sym = edges.unionAll(
-      edges.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .persist()
-    var labels = sym.select(col("doc_a").as("doc_id")).distinct()
-      .withColumn("lbl", col("doc_id"))
-      .persist()
-    // labels becomes a PROJECTION of each round's persisted relation;
-    // unpersist must target the handle that was actually cached
-    var cached = labels
+    val part = new HashPartitioner(
+      spark.sessionState.conf.numShufflePartitions)
+    // node -> (neighbours, label = own id at first, label fell last round)
+    var state: RDD[(Long, (Array[Long], Long, Boolean))] = edges
+      .select(col("doc_a").cast(LongType), col("doc_b").cast(LongType))
+      .queryExecution.toRdd
+      .flatMap(r => Iterator(r.getLong(0) -> r.getLong(1),
+        r.getLong(1) -> r.getLong(0)))
+      .groupByKey(part)
+      .mapPartitions(_.map { case (v, ns) => v -> (ns.toArray.distinct, v,
+        true) }, preservesPartitioning = true)
     // Labels only ever shrink and are bounded below by the component
     // min, so the loop reaches a fixpoint; at fixpoint the propagation
     // step changed nothing, which forces lbl constant per component
@@ -1418,104 +1426,64 @@ object Dedup {
     val maxRounds = 1000
     var changed = 1L
     var rounds = 0
-    // FRONTIER propagation: only nodes whose label changed last round
-    // need to re-send. Labels only ever decrease, so if lbl(u) is
-    // unchanged since the round that last propagated it, every
-    // neighbor v already took min with that exact value and v's label
-    // has only decreased since - an unchanged sender cannot improve
-    // any receiver. Round 1's frontier is everything (nothing has
-    // propagated yet); afterwards it is the post-jump changed set,
-    // which SHRINKS as components converge - at 100 TB the difference
-    // between re-shuffling the whole label relation every round and
-    // touching only the active wavefront.
-    var frontier = labels
     while (changed > 0) {
       rounds += 1
       if (rounds > maxRounds)
         throw new IllegalStateException(
-          s"dupClusters: no fixpoint after $maxRounds rounds - " +
-            "propagation must strictly shrink labels; this is a bug")
-      val prop = frontier.join(sym, col("doc_id") === col("doc_a"))
-        .groupBy(col("doc_b")).agg(min(col("lbl")).as("nlbl"))
-        .select(col("doc_b").as("doc_id"), col("nlbl"))
-      // carry the previous label through, so the convergence check is
-      // one scan of the freshly-persisted relation instead of a
-      // round-trip join against the previous iteration
-      val next = labels.as("l")
-        .join(prop.as("p"), Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          least(col("l.lbl"), coalesce(col("p.nlbl"), col("l.lbl")))
-            .as("lbl"),
-          col("l.lbl").as("prev"))
-        .persist()
-      // path halving: every label value is itself a doc_id in this
-      // relation (labels start as own ids and only ever adopt another
-      // node's id), so lbl(lbl(x)) is a lookup join against the same
-      // round's relation; lbl(y) <= y makes least() pure safety.
-      // The LOOKUP side is FRONTIER-RESTRICTED to this round's
-      // post-propagation changes, which drops the full-relation
-      // self-join (the last O(V)-per-round shuffle in this fixpoint).
-      // The restriction gives up the jump's O(log d) round bound: a
-      // target whose label improved only by jumping never enters a
-      // later round's lookup side, so the nodes pointing at it
-      // converge by propagation alone, one hop per round, within
-      // `maxRounds`. Soundness is unconditional - the jump is a pure
-      // accelerator (least() with values already in the relation,
-      // monotone decreasing), and the propagation step alone covers
-      // every edge, so any improvement a restricted jump misses is
-      // delivered by propagation in a later round and the exit
-      // condition (a full round with zero changes) is unaffected.
-      // The shrinking lookup side lets AQE plan the join as a
-      // broadcast once the wavefront is small: the full relation is
-      // then scanned narrowly, never shuffled.
-      val jumped = next.as("x")
-        .join(next.filter(col("lbl") < col("prev"))
-          .select(col("doc_id").as("jd"), col("lbl").as("jl"))
-          .as("j"), col("x.lbl") === col("j.jd"), "left")
-        .select(col("x.doc_id").as("doc_id"),
-          least(col("x.lbl"), coalesce(col("j.jl"), col("x.lbl")))
-            .as("lbl"),
-          col("x.prev").as("prev"))
-        .persist()
-      changed = jumped.filter(col("lbl") < col("prev")).count()
-      next.unpersist()
-      cached.unpersist()
-      cached = jumped
-      // rebase the next round on a LogicalRDD leaf over the persisted
-      // rows: the round's plan references `labels` three times (prop +
-      // both sides of the jump), so carrying the logical lineage
-      // forward doubles the plan tree per round - within a few dozen
-      // rounds the EXPLAIN string alone OOMs long before execution does.
-      // InternalRow end to end; reads come from the cached relation.
-      val rebased = org.apache.spark.sql.GraftBridge.ofInternalRows(
-        spark, jumped.queryExecution.toRdd, jumped.schema)
-      labels = rebased.select(col("doc_id"), col("lbl"))
-      // next round's senders: exactly the rows the convergence count
-      // just measured (post-jump label below the pre-round one) -
-      // derived lazily off the same persisted rows, one block re-read
-      frontier = rebased.filter(col("lbl") < col("prev"))
-        .select(col("doc_id"), col("lbl"))
+          s"resolveComponents: no fixpoint after $maxRounds rounds over " +
+            s"${edges.count()} edges - propagation must strictly shrink " +
+            "labels; this is a bug")
+      // An ask (t, v) offers node t the label v and asks t, on v's
+      // behalf, for its label after all offers. Both are nodes of one
+      // component, so every answer is a sound label for v. Only the
+      // FRONTIER (labels that fell last round; round 1: all) offers its
+      // label to its neighbours: an unchanged sender cannot improve a
+      // receiver, whose label has only fallen since it took that one.
+      // Path halving: each node asks its label's owner, and the
+      // frontier asks it for each neighbour, so the neighbour jumps
+      // through the label it is offered.
+      val asks = state.flatMap { case (x, (ns, l, hot)) =>
+        Iterator(l -> x) ++ (if (!hot) Iterator.empty
+          else ns.iterator.flatMap(n => Iterator(n -> l, l -> n)))
+      }.partitionBy(part)
+      // the answers, and each node's own label where offers lowered it
+      val replies = state.zipPartitions(asks) { (s, in) =>
+        val lbl = s.map { case (t, (_, l, _)) => t -> l }.toMap
+        val got = in.toArray
+        val low = scala.collection.mutable.HashMap.from(lbl)
+        for ((t, v) <- got) low(t) = math.min(v, low(t))
+        got.iterator.map { case (t, v) => v -> low(t) } ++
+          low.iterator.filter { case (t, m) => m < lbl(t) }
+      }.reduceByKey(part, math.min(_, _))
+      val next = state.zipPartitions(replies, preservesPartitioning = true) {
+        (s, in) =>
+          val best = in.toMap
+          s.map { case (x, (ns, l, _)) =>
+            val j = math.min(l, best.getOrElse(x, l))
+            x -> (ns, j, j < l)
+          }
+      }
+      next.localCheckpoint()
+      changed = next.filter(_._2._3).count()
+      GraftBridge.freeBlocks(state)
+      state = next
     }
-    // materialize the (small: clustered docs only) result while the
-    // label chain is still cached, then release every intermediate -
-    // nothing from the iteration outlives the call. With a reliable
-    // checkpoint dir configured (cluster deployments: HDFS/object
-    // store) the result is cut from its lineage DURABLY, so executor
-    // loss after this call - routine at 100 TB - cannot orphan it; the
-    // localCheckpoint fallback (blocks unreplicated on executors) is
-    // only acceptable in single-process runs, where executor loss is
-    // process death anyway.
-    val projected = labels
-      .select(col("doc_id"), col("lbl").as("cluster_id"),
-        (col("doc_id") === col("lbl")).as("is_canonical"))
-      .orderBy(col("doc_id"))
-    val out =
-      if (spark.sparkContext.getCheckpointDir.isDefined)
-        projected.checkpoint(true)
-      else projected.localCheckpoint(true)
-    cached.unpersist()
-    sym.unpersist()
-    (out, rounds)
+    // With a reliable checkpoint dir configured (cluster deployments:
+    // HDFS/object store) the result is cut from its lineage DURABLY, so
+    // executor loss after this call - routine at 100 TB - cannot orphan
+    // it; the localCheckpoint fallback (blocks unreplicated on
+    // executors) is only acceptable in single-process runs, where
+    // executor loss is process death anyway.
+    val sorted = state.map { case (v, (_, l, _)) => (v, l) }
+      .sortByKey(numPartitions = part.numPartitions)
+      .map { case (v, l) => InternalRow(v, l, v == l) }
+    if (spark.sparkContext.getCheckpointDir.isDefined) sorted.checkpoint()
+    else sorted.localCheckpoint()
+    sorted.count()
+    GraftBridge.freeBlocks(state)
+    (GraftBridge.ofSortedRows(spark, sorted, StructType.fromDDL(
+      "doc_id BIGINT NOT NULL, cluster_id BIGINT NOT NULL, " +
+        "is_canonical BOOLEAN NOT NULL")), rounds)
   }
 
   /** The full cluster-resolution CTE chain (shingles -> bands -> LSH

@@ -2,11 +2,15 @@ package org.apache.spark.sql
 
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.paths.SparkPath
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, BindReferences, Expression}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, BindReferences, Expression, SortOrder}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan}
 import org.apache.spark.sql.execution.datasources.{FileFormat, FileStatusCache, HadoopFsRelation, InMemoryFileIndex, LogicalRelation, PartitionedFile, PartitioningUtils}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
@@ -32,6 +36,20 @@ object GraftBridge {
       schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession]
       .internalCreateDataFrame(rdd, schema)
+
+  /** `ofInternalRows` over rows range-partitioned and sorted ascending
+    * on the first column (what an RDD `sortByKey` on it yields), and
+    * declared so, as `Dataset.localCheckpoint` of an `orderBy` declares
+    * its rows: a later sort on that column plans no exchange.
+    */
+  def ofSortedRows(spark: SparkSession, rdd: RDD[InternalRow],
+                   schema: StructType): DataFrame = {
+    val attrs = DataTypeUtils.toAttributes(schema)
+    val order = Seq(SortOrder(attrs.head, Ascending))
+    ofRows(spark, LogicalRDD(attrs, rdd,
+      RangePartitioning(order, rdd.getNumPartitions), order)(
+      spark.asInstanceOf[classic.SparkSession]))
+  }
 
   /** Column ⇄ catalyst Expression, for operators whose parameters are
     * not SQL-expressible (e.g. a plan-time centroid matrix).
@@ -63,10 +81,13 @@ object GraftBridge {
     */
   def unpersistMaterialized(df: DataFrame): Unit =
     df.queryExecution.logical match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.sparkContext.unpersistRDD(l.rdd.id, blocking = false)
+      case l: org.apache.spark.sql.execution.LogicalRDD => freeBlocks(l.rdd)
       case _ => ()
     }
+
+  /** `unpersistMaterialized` for an RDD checkpointed directly. */
+  def freeBlocks(rdd: RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 
   /** `schema` with every field nullable, nested ones too: how a file
     * source reads any schema back.

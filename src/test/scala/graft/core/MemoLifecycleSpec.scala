@@ -59,14 +59,18 @@ class MemoLifecycleSpec extends SparkSpec {
 
   test("dupClusters releases its per-round intermediates") {
     Memo.release(spark, sfDir)
-    Dedup.dupClusters(spark, sfDir).count()
-    val afterFirst = persistedCount
-    // a second run may add its own (small, GC-managed) checkpointed
-    // result, but none of the per-round label/sym persists may survive
-    Dedup.dupClusters(spark, sfDir).count()
-    assert(persistedCount <= afterFirst + 1,
-      "iteration intermediates leaked across dupClusters calls")
-    Memo.release(spark, sfDir)
+    val before = persistedIds
+    // each round's locally checkpointed state is freed through the
+    // context, like a released tier: RDD.unpersist would warn that its
+    // lineage is truncated
+    val logged = warnings {
+      Dedup.dupClusters(spark, sfDir).count()
+      Memo.release(spark, sfDir)
+    }
+    assert(logged.isEmpty, s"dupClusters and its release logged: $logged")
+    assert((persistedIds -- before).isEmpty,
+      "iteration intermediates outlived dupClusters and Memo.release: " +
+        (persistedIds -- before).map(spark.sparkContext.getPersistentRDDs))
   }
 
   private def persistedIds: Set[Int] =

@@ -594,22 +594,78 @@ class DedupSimSpec extends SparkSpec {
   }
 
   test("component resolution: path halving converges in O(log d) rounds") {
-    // a 65-node chain (0-1, 1-2, ..., 63-64) has diameter 64: plain
-    // min-label propagation needs 64 rounds to walk label 0 to the far
+    // a chain 0-1, 1-2, ..., (n-2)-(n-1) has diameter d = n - 1: plain
+    // min-label propagation needs d rounds to walk label 0 to the far
     // end, which is exactly the shape templated boilerplate produces
-    // (A~B~C~... with no A~C edge). With the pointer-jump step the
-    // label-to-root distance at least halves per round, so the loop
-    // must finish in O(log 64) rounds - generous cap at 10.
+    // (A~B~C~... with no A~C edge). With the pointer-jump step over
+    // every node the distance a label has travelled obeys
+    // d_k >= 2 d_(k-1) + 2, so the loop, counting its final round with
+    // no change, ends within ceil(log2 d) + 1 rounds. Edge direction
+    // must not matter: both orientations of each chain are checked.
     val s = spark; import s.implicits._
-    val chain = (0L until 64L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val (out, rounds) = Dedup.resolveComponents(spark, chain)
-    val rows = out.collect().map(r =>
-      (r.getLong(0), r.getLong(1), r.getBoolean(2)))
-    assert(rows.length == 65)
-    assert(rows.forall(_._2 == 0L), "all chain members label to the min id")
-    assert(rows.count(_._3) == 1 && rows.find(_._3).get._1 == 0L)
-    assert(rounds <= 10,
-      s"path halving should need ~log2(64) rounds, took $rounds")
+    // bound = ceil(log2(n - 1)) + 1
+    for ((n, bound) <- Seq(65L -> 7, 1000L -> 11);
+         reversed <- Seq(false, true)) {
+      val hops = (0L until n - 1)
+        .map(i => if (reversed) (i + 1, i) else (i, i + 1))
+      val (out, rounds) =
+        Dedup.resolveComponents(spark, hops.toDF("doc_a", "doc_b"))
+      val rows = out.collect().map(r =>
+        (r.getLong(0), r.getLong(1), r.getBoolean(2)))
+      val shape = s"$n-node chain${if (reversed) " (reversed)" else ""}"
+      assert(rows.map(_._1).toSeq == (0L until n),
+        s"$shape: one row per node, by doc_id")
+      assert(rows.forall(_._2 == 0L),
+        s"$shape: all members label to the min id")
+      assert(rows.count(_._3) == 1 && rows.find(_._3).get._1 == 0L)
+      assert(rounds <= bound,
+        s"$shape: path halving must end within ceil(log2 ${n - 1}) + 1 = " +
+          s"$bound rounds, took $rounds")
+    }
+  }
+
+  test("component resolution runs one job per round, the same count " +
+       "every run") {
+    // a round's only action is its count of changed labels; the output
+    // takes two more (the range sort's sample, the sorted checkpoint).
+    // The 1000-chain's 10 rounds would show a second job per round; the
+    // verified tier is the dupClusters input
+    val s = spark; import s.implicits._
+    val chain = (0L until 999L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val verified = Dedup.verifiedPairs(spark, sfDir)
+      .select(col("doc_a"), col("doc_b"))
+    verified.count()
+    for ((name, edges) <- Seq("1000-chain" -> chain, "verified" -> verified)) {
+      val runs = (1 to 2).map { _ =>
+        var rounds = 0
+        val n = jobs {
+          val (out, r) = Dedup.resolveComponents(spark, edges)
+          rounds = r
+          org.apache.spark.sql.GraftBridge.unpersistMaterialized(out)
+        }
+        (n, rounds)
+      }
+      val (n, rounds) = runs.head
+      assert(n == rounds + 2,
+        s"$name: $n jobs for $rounds rounds, want one per round plus 2 " +
+          "for the output")
+      assert(runs(1) == runs.head, s"$name: (jobs, rounds) moved: $runs")
+    }
+  }
+
+  /** Jobs `f` starts, counted by a listener after a bus drain. */
+  private def jobs(f: => Unit): Int = {
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.incrementAndGet(): Unit
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerDrain(sc)
+    sc.addSparkListener(l)
+    try { f; org.apache.spark.ListenerDrain(sc); started.get }
+    finally sc.removeSparkListener(l)
   }
 
   test("simhash: near-dup pairs have small hamming distance") {

@@ -42,14 +42,18 @@ object PointReadProbe {
     for (pending <- 0 to 2) {
       if (pending > 0) sink.mergeDelta("n",
         state(50, pending * 37, 10L + pending).repartition(4), keys)
-      val probeKeys = (0 until reps).map(i => (i * 131) % baseRows)
       val view = () => new graft.api.SinkCountSummaryView(spark, sink, "n", "c0")
       val v = view()
-      // warm-up: reader memo, codegen, class loading
-      probeKeys.take(5).foreach(k => v.getCount(k % 97, s"a${k % 3}", k))
+      // rep i reads its own key; the column warms up on keys of its
+      // own (reader memo, codegen, class loading, the JIT), as the
+      // multiget below does
+      def getCount(i: Int) = {
+        val k = (i * 131) % baseRows
+        v.getCount(k % 97, s"a${k % 3}", k)
+      }
+      (0 until math.max(5, reps / 10)).foreach(i => getCount(reps + i))
       val viewMs = median((1 to 5).map(_ => ms(view())))
-      val getMs = median(probeKeys.map(k =>
-        ms(v.getCount(k % 97, s"a${k % 3}", k))))
+      val getMs = median((0 until reps).map(i => ms(getCount(i))))
       // rep i reads its own 20 keys, after a warm-up of its own: the
       // getCount warm-up does not reach the multiget's code paths
       def multiget(i: Int) = sink.getKeys(spark, "n", (0 until 20).map { j =>
